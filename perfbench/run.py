@@ -15,11 +15,12 @@ once, in an order the seed gives, one after another from one driver
 thread; each operation that yields a DataFrame ends in a Spark-side
 digest that is compared with the digest pinned in ``digests.json``.
 
-``--trace 0`` reports the end-to-end metrics. ``--trace 1`` enables
-Spark's event log for its timed passes and reports the per-layer
-metrics, measured from outside the program: the wall time of the calls
-into each module, ``statusTracker`` counts per job group, and the event
-log. Spans are written to ``.perfbench-out/`` when the run ends.
+``--trace 0`` reports the end-to-end metrics. ``--trace 1`` times
+exactly two passes, a traced one with Spark's event log on and then an
+untraced one, and reports the per-layer metrics of the traced pass,
+measured from outside the program: the wall time of the calls into each
+module, ``statusTracker`` counts per job group, and the event log. Its
+spans are printed when the run ends.
 
 Every line but the last is a human-readable report; the last line is
 one JSON object with ``correct``, ``attempted``, ``failed`` and
@@ -55,7 +56,6 @@ import eventlog  # noqa: E402
 
 SPEC = os.path.join(HERE, "workloads.json")
 DIGESTS = os.path.join(HERE, "digests.json")
-OUT_DIR = os.path.join(ROOT, ".perfbench-out")  # spans and untraced pass_s records
 OP_TIMEOUT_S = 60.0
 CANCEL_GRACE_S = 20.0
 WARM_THREADS = 4
@@ -68,7 +68,9 @@ END_TO_END = {
     "pass_s": "s",
     "op_geomean_s": "s",
 }
-MODULES = ("relational", "asof", "scd", "graph", "sampling", "dedup", "text", "corpus", "multimodal")
+# The modules tagged on the ops of the workloads in BENCHMARK.json. corpus_scan,
+# the only workload with text, corpus and multimodal ops, is not among them.
+MODULES = ("relational", "asof", "scd", "graph", "sampling", "dedup")
 WRITE_LAYERS = (
     "io.write_table",
     "io.compact_files",
@@ -401,8 +403,9 @@ def pass_layers(p: PassRecord, group_prefix: str, groups: dict, slots: int) -> d
             m["queries.action_s"] += r.end - r.build_end
             m["queries.build_jobs"] += r.build_jobs
             m["queries.action_jobs"] += r.action_jobs
-            m[f"operators.{r.op.tag}.s"] += r.wall
-            m[f"operators.{r.op.tag}.jobs"] += r.build_jobs + r.action_jobs
+            if r.op.tag in MODULES:
+                m[f"operators.{r.op.tag}.s"] += r.wall
+                m[f"operators.{r.op.tag}.jobs"] += r.build_jobs + r.action_jobs
         else:
             m[f"{r.op.tag}_s"] += r.wall
         m["spark.jobs"] += r.build_jobs + r.action_jobs
@@ -417,6 +420,15 @@ def pass_layers(p: PassRecord, group_prefix: str, groups: dict, slots: int) -> d
     m["spark.job_busy_s"] = busy
     m["spark.driver_gap_s"] = p.wall - busy
     m["spark.slot_util"] = m["spark.task_run_s"] / (slots * busy) if busy > 0 else 0.0
+    return m
+
+
+def traced_metrics(traced: PassRecord, untraced: PassRecord, group_prefix: str, groups: dict,
+                   slots: int) -> dict[str, float]:
+    """Per-layer figures of a traced run's traced pass, and the tracing
+    overhead against the untraced pass that followed it."""
+    m = pass_layers(traced, group_prefix, groups, slots)
+    m["trace.overhead"] = traced.wall / max(untraced.wall, 1e-6) - 1
     return m
 
 
@@ -521,25 +533,6 @@ class EventLogSwitch:
             self.on = on
 
 
-def _untraced_log(workload: str) -> str:
-    return os.path.join(OUT_DIR, f"{workload}-untraced.jsonl")
-
-
-def recorded_pass_s(workload: str) -> list[float]:
-    """pass_s of the untraced runs of ``workload`` in this checkout."""
-    try:
-        with open(_untraced_log(workload)) as fh:
-            return [json.loads(line)["pass_s"] for line in fh if line.strip()]
-    except OSError:
-        return []
-
-
-def record_pass_s(workload: str, seed: int, pass_s: float) -> None:
-    os.makedirs(OUT_DIR, exist_ok=True)
-    with open(_untraced_log(workload), "a") as fh:
-        fh.write(json.dumps({"seed": seed, "pass_s": pass_s}) + "\n")
-
-
 def scan_tables(spark, workload: str, table_names: list[str], data_dir: str) -> dict:
     """Noop full scan of every input table through ``load_table``."""
     from cascading_hive_spark import tables
@@ -597,24 +590,22 @@ def run(args) -> int:
         spark.sparkContext._jvm.System.gc()
         setup_s = process_age_s()
 
-        # trace.overhead compares this run's traced passes with the
-        # untraced runs recorded in this checkout; without any, the run
-        # times an untraced pass itself first
-        reference = recorded_pass_s(args.workload) if args.trace else []
         timed: list[PassRecord] = []
-        m0 = time.time()
-        while not runner.stuck:
-            traced = bool(args.trace) and (bool(reference) or len(timed) % 2 == 1)
-            if switch:
+        if args.trace:
+            # The traced pass takes the place of the untraced runs' first
+            # timed pass, so its layers split the pass that pass_s times;
+            # the untraced pass after it is the reference of trace.overhead.
+            for traced in (True, False):
                 switch.set(traced)
-            p = runner.run_pass(str(len(timed)), args.seed, traced, hooks=flow)
-            timed.append(p)
-            if args.trace and not any(q.traced for q in timed):
-                continue
-            if time.time() - m0 >= args.seconds or process_age_s() + p.wall > PASS_DEADLINE_S:
-                break
-        if not timed:  # an op hung in the warm-up: report that pass
-            timed.append(passes.pop())
+                timed.append(runner.run_pass(str(len(timed)), args.seed, traced, hooks=flow))
+        else:
+            m0 = time.time()
+            while True:
+                p = runner.run_pass(str(len(timed)), args.seed, hooks=flow)
+                timed.append(p)
+                if (runner.stuck or time.time() - m0 >= args.seconds
+                        or process_age_s() + p.wall > PASS_DEADLINE_S):
+                    break
         passes += timed
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         peak_rss_mb = vm_hwm_mb(jvm_pid) + vm_hwm_mb("self")
@@ -640,24 +631,15 @@ def run(args) -> int:
     for r in failed:
         lines.append(f"FAILED {r.op.name} (pass {next(p.id for p in passes if r in p.ops)}): {r.error}")
     if args.trace:
-        traced = [p for p in timed if p.traced] or timed
-        per = [pass_layers(p, args.workload, groups, cores) for p in traced]
-        metrics = {k: statistics.median(d[k] for d in per) for k in per[0]}
+        traced_pass, untraced_pass = timed
+        metrics = traced_metrics(traced_pass, untraced_pass, args.workload, groups, cores)
         metrics.update(extra)
-        base = reference or [p.wall for p in untraced or timed]
-        metrics["trace.overhead"] = statistics.median(p.wall for p in traced) / statistics.median(base) - 1
-        lines.append(f"trace.overhead against {len(reference)} recorded untraced runs"
-                     if reference else "trace.overhead against an untraced pass of this run")
         units = PER_LAYER
-        spans = spans_of(args.workload, traced, groups)
-        os.makedirs(OUT_DIR, exist_ok=True)
-        with open(os.path.join(OUT_DIR, f"{args.workload}-seed{args.seed}-spans.json"), "w") as fh:
-            json.dump([s.__dict__ for s in spans], fh, indent=1)
+        lines += [f"span {json.dumps(s.__dict__)}" for s in spans_of(args.workload, [traced_pass], groups)]
     else:
-        metrics = end_to_end_metrics(untraced, setup_s)
-        record_pass_s(args.workload, args.seed, metrics["pass_s"])
+        metrics = end_to_end_metrics(timed, setup_s)
         units = END_TO_END
-        stats = pass_layers(untraced[len(untraced) // 2], args.workload, {}, cores)
+        stats = pass_layers(timed[len(timed) // 2], args.workload, {}, cores)
         lines.append("statusTracker per pass: " + ", ".join(
             f"{k}={stats[k]:.0f}" for k in ("spark.jobs", "spark.stages", "spark.tasks", "spark.failed_tasks")))
     lines.append(f"error_rate {len(failed) / len(records):.4f} ({len(failed)} of {len(records)} ops)")

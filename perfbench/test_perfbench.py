@@ -103,10 +103,14 @@ def test_metric_names_match_benchmark_json():
     assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == run.PER_LAYER
 
-    op = run.Op("x", None, "graph", True)
-    rec = run.OpRecord(op, 0.0, 2.0, 1.5, build_jobs=3, action_jobs=1)
-    p = run.PassRecord("0", False, 0.0, 2.0, [rec])
-    assert set(run.end_to_end_metrics([p], 1.0)) == set(run.END_TO_END)
-    layers = set(run.pass_layers(p, "w", {}, 4))
-    assert layers | {"session.start_s", "session.peak_rss_mb", "tables.scan_s",
-                     "tables.scan_mb_per_s", "trace.overhead"} == set(run.PER_LAYER)
+    graph = run.OpRecord(run.Op("x", None, "graph", True), 0.0, 2.0, 1.5, build_jobs=3, action_jobs=1)
+    # a module of a workload outside BENCHMARK.json has no metric of its own
+    text = run.OpRecord(run.Op("y", None, "text", True), 2.0, 3.0, 2.5, build_jobs=1, action_jobs=1)
+    traced = run.PassRecord("0", True, 0.0, 3.0, [graph, text])
+    untraced = run.PassRecord("1", False, 3.0, 5.5, [graph, text])
+    assert set(run.end_to_end_metrics([untraced], 1.0)) == set(run.END_TO_END)
+    layers = run.traced_metrics(traced, untraced, "w", {}, 4)
+    assert set(layers) | {"session.start_s", "session.peak_rss_mb", "tables.scan_s",
+                          "tables.scan_mb_per_s"} == set(run.PER_LAYER)
+    assert layers["trace.overhead"] == pytest.approx(3.0 / 2.5 - 1)
+    assert layers["operators.graph.jobs"] == 4 and layers["queries.build_jobs"] == 4
