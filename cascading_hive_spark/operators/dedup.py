@@ -167,8 +167,147 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # embedded literal collapse to ONE shared result on this Spark build
 # (all permutations return permutation 0 — pinned by
 # tests/test_dedup.py::test_minhash_signatures_correct_and_distinct).
-# Signatures must go through the explode + groupBy-min formulation
-# below, whose top-level aggregate expressions evaluate correctly.
+# Signatures go through _minhash_band_rows below, whose two hash
+# families each use a formulation that evaluates correctly.
+
+
+def _minhash_band_rows(
+    base: DataFrame, keys: list[str], num_perm: int, bands: int, portable: bool
+) -> DataFrame:
+    """(*keys, band, bhash): the LSH band hashes of each row's
+    distinct gram array ``_g``, b = ``bands`` bands of
+    r = num_perm/bands permutation minima each.
+
+    ``portable=False`` is the xxhash64 family: each gram STRING is
+    hashed once scan-side (the length-proportional cost), then ONE
+    transform lambda expands each long to its num_perm permutation
+    hashes and ONE aggregate folds the per-gram arrays with
+    zip_with(least) — entirely scan-side, no explode, no extra
+    shuffle. Band hash = xxhash64 of the band's minima.
+
+    ``portable=True`` is the md5 family, expressible in plain SQL:
+    permutation i = min over grams of ``md5('<i>|' || gram)`` (the
+    lexicographic min over 32-char lowercase hex, identical in any
+    engine with a standard md5); band hash = ``md5(h_i || '|' ||
+    h_j ...)``. It goes through explode + groupBy-min rather than
+    HOF lambdas: md5 evaluated INSIDE a higher-order-function lambda
+    miscomputes on this Spark build when several such transforms share
+    a projection (layout-dependent digest-input corruption, reproduced
+    at sf0.1). Top-level md5 inside an Aggregate is unaffected — and
+    partial (map-side) aggregation means the shuffle carries one
+    minima row per (doc, partition), not the exploded grams, so
+    shuffle bytes stay ∝ docs, not grams.
+
+    Deliberately NOT num_perm separate array_min(transform(...))
+    columns on either path: same-shape lambdas differing only in the
+    embedded permutation literal collapse to ONE shared result (every
+    "permutation" returned permutation 0, degenerating LSH banding to
+    single-hash matching — found via the sf0.1 oracle divergence of
+    the md5 family). Both formulations are pinned bit-for-bit against
+    the explode+groupBy-min ground truth (itself verified against
+    Python hashlib for the md5 family) in
+    tests/test_dedup.py::test_minhash_signatures_correct_and_distinct.
+    """
+    if num_perm % bands != 0:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be divisible by bands ({bands}): "
+            "banding uses b*r = num_perm; trailing permutations would be "
+            "silently ignored"
+        )
+    rows = num_perm // bands
+    if portable:
+        ex = base.select(*keys, F.explode("_g").alias("_gram"))
+        sig = ex.groupBy(*keys).agg(
+            *[
+                F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("_gram")))).alias(f"_h{i}")
+                for i in range(num_perm)
+            ]
+        )
+
+        def band_hash(cols: list[Column]) -> Column:
+            return F.md5(F.concat_ws("|", *cols))
+
+    else:
+        _MAXL = F.lit(9223372036854775807)
+        hashed = base.select(
+            *keys, F.transform(F.col("_g"), lambda s: F.xxhash64(s)).alias("_hp")
+        )
+        persh = hashed.select(
+            *keys,
+            F.transform(
+                F.col("_hp"),
+                lambda h: F.array(*[F.xxhash64(h, F.lit(i)) for i in range(num_perm)]),
+            ).alias("_hs"),
+        )
+        mins = persh.select(
+            *keys,
+            F.aggregate(
+                F.col("_hs"),
+                F.array_repeat(_MAXL, num_perm),
+                lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
+            ).alias("_mins"),
+        )
+        # element extraction: top-level F.get with literal indices (the
+        # shape the embedding-LSH band keys use, oracle-proven correct)
+        sig = mins.select(
+            *keys, *[F.get(F.col("_mins"), i).alias(f"_h{i}") for i in range(num_perm)]
+        )
+
+        def band_hash(cols: list[Column]) -> Column:
+            return F.xxhash64(*cols)
+
+    return sig.select(
+        *keys,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        band_hash(
+                            [F.col(f"_h{b * rows + r}") for r in range(rows)]
+                        ).alias("bhash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(*keys, "bk.band", "bk.bhash")
+
+
+def _jaccard_verify(
+    cand: DataFrame, base: DataFrame, a: str, b: str, threshold: float
+) -> DataFrame:
+    """Keep the candidate pairs (``a``, ``b``, ...) whose exact gram-set
+    Jaccard is >= ``threshold``; appends ``jaccard`` rounded to 6.
+
+    ``cand`` must be a lineage cut: it feeds the semi-join id side AND
+    the verification join. The grams are joined back for CANDIDATE
+    docs only, in two steps that keep the full corpus gram table
+    ``base`` (_id, _g) out of any wide op:
+    1. semi-join base against the candidate ids (a small relation AQE
+       can broadcast) — the corpus-wide gram table is filtered
+       scan-side, never shuffled or broadcast; no distinct on the ids,
+       since left_semi ignores duplicates and the dedup would cost an
+       extra shuffle;
+    2. shuffle-hash join the filtered grams (≈ 2x|pairs| rows) with the
+       pair list. The full base must NEVER be a broadcast build side:
+       it is a computed table whose size Catalyst underestimates
+       (range-derived inputs estimate near-zero), and at corpus scale
+       it fits nowhere (measured OOM at 500k docs).
+    The candidate gram set feeds both join sides, so it is cut too;
+    both checkpoints are candidate-scale, never corpus-scale."""
+    cand_ids = cand.select(F.explode(F.array(a, b)).alias("_id"))
+    g_cand = base.join(cand_ids, "_id", "left_semi").localCheckpoint(eager=False)
+    g_a = g_cand.select(F.col("_id").alias(a), F.col("_g").alias("g_a"))
+    g_b = g_cand.select(F.col("_id").alias(b), F.col("_g").alias("g_b"))
+    verified = (
+        cand.hint("shuffle_hash")
+        .join(g_a, a)
+        .join(g_b, b)
+        .select(*cand.columns, jaccard(F.col("g_a"), F.col("g_b")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+    return verified.select(*cand.columns, F.round("jaccard", 6).alias("jaccard"))
 
 
 def minhash_lsh_pairs(
@@ -180,80 +319,42 @@ def minhash_lsh_pairs(
     shingle_n: int = 2,
     threshold: float = 0.8,
     max_bucket: int = 200,
+    portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with exact
     Jaccard on the shingle sets.
+
+    ``portable=False`` (the fast path) hashes distinct word
+    ``shingle_n``-shingles with xxhash64. ``portable=True`` hashes
+    distinct character ``shingle_n``-grams with the md5 family (see
+    ``_minhash_band_rows``), so every step is expressible in plain SQL
+    and the DuckDB oracle of queries.py:dedup_minhash_portable replays
+    the FULL pipeline — shingling, signatures, banding, bucket cap,
+    verification — bit-for-bit; minhash_lsh measured 2.27 s against
+    about 5.5 s on the md5 path (r17 bench, sf0.1).
 
     b=16 bands of r=4 rows over 64 perms: P(candidate) = 1-(1-j^4)^16,
     ~0.97 at j=0.8 — the false-negative rate the threshold implies.
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    rows = num_perm // bands
-    # NOTE: no size(_sh) filter — shingles_from_tokens always yields a
-    # non-empty array, and a predicate on a computed alias gets pushed
-    # below the spread exchange, re-evaluating the full shingle
-    # expression SERIALLY on the unspread scan side (measured 14x
-    # slow-down at sf0.1). Null text is filtered at the scan instead.
-    base = tokenized(df, id_col, text_col).select(
-        "_id", shingles_from_tokens(F.col("_toks"), shingle_n).alias("_sh")
-    )
-    # Each shingle STRING is hashed once scan-side (the length-
-    # proportional cost), then ONE transform lambda expands each long
-    # to its num_perm permutation hashes and ONE aggregate folds the
-    # per-shingle arrays with zip_with(least) — entirely scan-side,
-    # no explode, no extra shuffle.
-    #
-    # Deliberately NOT num_perm separate array_min(transform(...))
-    # columns: same-shape lambdas differing only in the embedded
-    # permutation literal collapse to ONE shared result on this Spark
-    # build (every "permutation" returned permutation 0, degenerating
-    # LSH banding to single-hash matching — found via the sf0.1 oracle
-    # divergence of the md5 twin). Distinct subexpressions INSIDE one
-    # lambda body evaluate correctly (same shape as
-    # shingles_from_tokens); this formulation is pinned bit-for-bit
-    # against the explode+groupBy-min ground truth (itself verified
-    # against Python hashlib for the md5 family) in
-    # tests/test_dedup.py::test_minhash_signatures_correct_and_distinct.
-    _MAXL = F.lit(9223372036854775807)
-    hashed = base.select(
-        "_id", F.transform(F.col("_sh"), lambda s: F.xxhash64(s)).alias("_hp")
-    )
-    persh = hashed.select(
-        "_id",
-        F.transform(
-            F.col("_hp"),
-            lambda h: F.array(*[F.xxhash64(h, F.lit(i)) for i in range(num_perm)]),
-        ).alias("_hs"),
-    )
-    mins = persh.select(
-        "_id",
-        F.aggregate(
-            F.col("_hs"),
-            F.array_repeat(_MAXL, num_perm),
-            lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
-        ).alias("_mins"),
-    )
-    # element extraction: top-level F.get with literal indices (the
-    # shape the embedding-LSH band keys use, oracle-proven correct)
-    sig_wide = mins.select(
-        "_id", *[F.get(F.col("_mins"), i).alias(f"_h{i}") for i in range(num_perm)]
-    )
-    band_rows = sig_wide.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[F.col(f"_h{b * rows + r}") for r in range(rows)]).alias(
-                            "bhash"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
+    if portable:
+        base = spread(
+            df.filter(F.col(text_col).isNotNull()).select(
+                _id_long(df, id_col).alias("_id"),
+                char_ngrams(F.col(text_col), shingle_n).alias("_g"),
             )
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.bhash")
+        )
+    else:
+        # NOTE: no size(_g) filter — shingles_from_tokens always yields
+        # a non-empty array, and a predicate on a computed alias gets
+        # pushed below the spread exchange, re-evaluating the full
+        # shingle expression SERIALLY on the unspread scan side
+        # (measured 14x slow-down at sf0.1). Null text is filtered at
+        # the scan instead.
+        base = tokenized(df, id_col, text_col).select(
+            "_id", shingles_from_tokens(F.col("_toks"), shingle_n).alias("_g")
+        )
+    band_rows = _minhash_band_rows(base, ["_id"], num_perm, bands, portable)
 
     # ONE shuffle builds the buckets; pairs are generated in-bucket by
     # an index-aware transform over the sorted member list. Buckets of
@@ -278,161 +379,13 @@ def minhash_lsh_pairs(
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b")
-    # candidate pairs are REFERENCED TWICE below (the id side of the
-    # semi-join and the verification join) and the shingle subtree
-    # three times — without a cut, Spark re-executes the whole
-    # tokenize+shingle+hash scan and the bucket shuffle per consumer
-    # (the r15 funnel lineage-re-execution lesson; guide §5
-    # localCheckpoint as the cheap lineage cut). Both checkpoints are
-    # candidate-scale (pair ids / candidate shingles), never
-    # corpus-scale, so the pinned blocks stay metadata-sized at any
-    # corpus size.
+    # candidate pairs are REFERENCED TWICE in the verify and the
+    # shingle subtree three times — without a cut, Spark re-executes
+    # the whole tokenize+shingle+hash scan and the bucket shuffle per
+    # consumer (the r15 funnel lineage-re-execution lesson; guide §5
+    # localCheckpoint as the cheap lineage cut).
     cand = pairs.dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=False)
-
-    # Verification joins shingles back for CANDIDATE docs only, in two
-    # steps that keep the full corpus shingle table out of any wide op:
-    # 1. semi-join base against the distinct candidate ids (a small
-    #    relation AQE can broadcast) — the corpus-wide shingle table is
-    #    filtered scan-side, never shuffled or broadcast;
-    # 2. shuffle-hash join the filtered shingles (≈ 2x|pairs| rows)
-    #    with the pair list. The full base must NEVER be a broadcast
-    #    build side: it is a computed table whose size Catalyst
-    #    underestimates (range-derived inputs estimate near-zero), and
-    #    at corpus scale it fits nowhere (measured OOM at 500k docs).
-    # (no distinct on the ids — left_semi ignores duplicates, and the
-    # dedup would cost an extra shuffle)
-    cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias("_id"))
-    sh_cand = base.join(cand_ids, "_id", "left_semi").localCheckpoint(eager=False)
-    sh_a = sh_cand.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    sh_b = sh_cand.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    verified = (
-        cand.hint("shuffle_hash")
-        .join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def minhash_portable_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 16,
-    bands: int = 8,
-    ngram_n: int = 3,
-    threshold: float = 0.8,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs with ENGINE-PORTABLE hashing: every
-    step is expressible in plain SQL (md5 / substr / min / string_agg),
-    so an external engine (DuckDB oracle in queries.py:
-    dedup_minhash_portable) reproduces the FULL pipeline — shingling,
-    signatures, banding, bucket cap, verification — bit-for-bit. The
-    xxhash64 variant (``minhash_lsh_pairs``) is the fast path; this
-    one trades hash throughput for cross-engine reproducibility.
-
-    Permutation i = min over distinct char ``ngram_n``-grams of
-    ``md5('<i>|' || gram)`` — lexicographic min over 32-char lowercase
-    hex, identical in any engine with a standard md5. Band hash =
-    ``md5(h_i || '|' || h_j ...)`` over the band's permutation minima.
-    Same scale shape as minhash_lsh_pairs: signatures scan-side, one
-    thin (id, band, bhash) shuffle, ``max_bucket`` skew guard, exact
-    Jaccard verification joined back for candidates only.
-
-    Defaults b=8, r=2 over 16 perms: P(candidate) = 1-(1-j^2)^8,
-    ~0.9997 at j=0.8 — near-total recall; the verify step discards the
-    extra false candidates.
-    """
-    if num_perm % bands != 0:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands}): "
-            "banding uses b*r = num_perm; trailing permutations would be "
-            "silently ignored"
-        )
-    rows = num_perm // bands
-    base = spread(
-        df.filter(F.col(text_col).isNotNull()).select(
-            _id_long(df, id_col).alias("_id"),
-            char_ngrams(F.col(text_col), ngram_n).alias("_g"),
-        )
-    )
-    # Signatures via explode + groupBy-min rather than
-    # array_min(transform(...)): md5 evaluated INSIDE a higher-order-
-    # function lambda miscomputes on this Spark build when several such
-    # transforms share a projection (layout-dependent digest-input
-    # corruption, reproduced at sf0.1 and pinned by
-    # tests/test_dedup.py::test_minhash_signatures_correct_and_distinct
-    # and ::test_minhash_portable_no_fp_and_recall).
-    # Top-level md5 inside an Aggregate is unaffected — and partial
-    # (map-side) aggregation means the shuffle carries one 16-column
-    # minima row per (doc, partition), not the exploded grams, so the
-    # scale shape survives: shuffle bytes ∝ docs, not grams.
-    ex = base.select("_id", F.explode("_g").alias("_gram"))
-    sig = ex.groupBy("_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("_gram")))).alias(f"_h{i}")
-            for i in range(num_perm)
-        ]
-    )
-    band_rows = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|", *[F.col(f"_h{b * rows + r}") for r in range(rows)]
-                            )
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.bhash")
-
-    buckets = (
-        band_rows.groupBy("band", "bhash")
-        .agg(F.collect_list("_id").alias("_ids"))
-        .filter((F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket))
-        .select(F.array_sort("_ids").alias("_ids"))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-    # same lineage cuts minhash_lsh_pairs carries (r16): cand feeds the
-    # semi-join id side AND the verification join, and the candidate
-    # gram set feeds both join sides — without the cuts the md5
-    # signature scan and the bucket shuffle re-execute per consumer.
-    # Both checkpoints are candidate-scale, never corpus-scale.
-    cand = pairs.dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=False)
-
-    cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias("_id"))
-    g_cand = base.join(cand_ids, "_id", "left_semi").localCheckpoint(eager=False)
-    g_a = g_cand.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-    g_b = g_cand.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-    verified = (
-        cand.hint("shuffle_hash")
-        .join(g_a, "id_a")
-        .join(g_b, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("g_a"), F.col("g_b")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_verify(cand, base, "id_a", "id_b", threshold)
 
 
 def minhash_incremental_pairs(
@@ -456,10 +409,10 @@ def minhash_incremental_pairs(
     verify cost — scales with the INCREMENT, not the corpus.
 
     Hashing is the engine-portable md5 family of
-    ``minhash_portable_pairs`` (same signatures, banding, bucket cap,
-    exact-Jaccard verify), so the DuckDB oracle in queries.py
-    (dedup_minhash_incremental) reproduces the full pipeline
-    bit-for-bit.
+    ``minhash_lsh_pairs(..., portable=True)`` (same signatures,
+    banding, bucket cap, exact-Jaccard verify), so the DuckDB oracle
+    in queries.py (dedup_minhash_incremental) reproduces the full
+    pipeline bit-for-bit.
 
     Scale shape: in steady state the base side's signatures/band rows
     are computed once and persisted (recompute here for self-
@@ -468,11 +421,6 @@ def minhash_incremental_pairs(
     dropped BEFORE pair expansion, and ``max_bucket`` caps flooded
     buckets exactly as in the full-corpus pass.
     """
-    if num_perm % bands != 0:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands})"
-        )
-    rows = num_perm // bands
     tagged = (
         base_df.filter(F.col(text_col).isNotNull())
         .select(
@@ -491,34 +439,9 @@ def minhash_incremental_pairs(
     base = spread(
         tagged.select("_id", "_side", char_ngrams(F.col("_text"), ngram_n).alias("_g"))
     )
-    # explode + groupBy-min signatures (NOT HOF lambdas — see the
-    # md5-in-lambda miscomputation note on minhash_portable_pairs)
-    ex = base.select("_id", "_side", F.explode("_g").alias("_gram"))
-    sig = ex.groupBy("_id", "_side").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("_gram")))).alias(f"_h{i}")
-            for i in range(num_perm)
-        ]
+    band_rows = _minhash_band_rows(
+        base, ["_id", "_side"], num_perm, bands, portable=True
     )
-    band_rows = sig.select(
-        "_id",
-        "_side",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|", *[F.col(f"_h{b * rows + r}") for r in range(rows)]
-                            )
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "_side", "bk.band", "bk.bhash")
 
     # collect_list skips the NULLs the when() produces, giving the two
     # side-partitioned id lists in one aggregation pass
@@ -576,38 +499,9 @@ def minhash_incremental_pairs(
         new_new.unionByName(new_base)
         .select("p.new_id", "p.match_id", "p.match_side")
         .dropDuplicates(["new_id", "match_id"])
-        # minhash_portable_pairs' r16 lineage cuts: cand and the
-        # candidate gram set each feed two+ consumers below; without
-        # the checkpoint the md5 signature scan and the bucket shuffle
-        # re-execute per consumer. Candidate-scale, never corpus-scale.
         .localCheckpoint(eager=False)
     )
-
-    cand_ids = cand.select(
-        F.explode(F.array("new_id", "match_id")).alias("_id")
-    ).dropDuplicates()
-    g_cand = (
-        base.drop("_side")
-        .join(cand_ids, "_id", "left_semi")
-        .localCheckpoint(eager=False)
-    )
-    g_a = g_cand.select(F.col("_id").alias("new_id"), F.col("_g").alias("g_a"))
-    g_b = g_cand.select(F.col("_id").alias("match_id"), F.col("_g").alias("g_b"))
-    verified = (
-        cand.hint("shuffle_hash")
-        .join(g_a, "new_id")
-        .join(g_b, "match_id")
-        .select(
-            "new_id",
-            "match_id",
-            "match_side",
-            jaccard(F.col("g_a"), F.col("g_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select(
-        "new_id", "match_id", "match_side", F.round("jaccard", 6).alias("jaccard")
-    )
+    return _jaccard_verify(cand, base.drop("_side"), "new_id", "match_id", threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -664,124 +558,50 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     max_bucket: int = 1000,
+    portable: bool = False,
 ) -> DataFrame:
     """64-bit SimHash near-dup pairs with hamming <= max_hamming (<=3).
 
-    Signature: per word-bigram feature, xxhash64; bit j votes +1/-1;
-    sign of the vote sum sets bit j. (Bigrams, not unigrams: corpora
+    Signature: per distinct word-bigram feature, a 64-bit hash held as
+    four 16-bit quarter values; bit j of quarter q votes +1/-1 and the
+    vote sign sets the signature bit. (Bigrams, not unigrams: corpora
     with a shared vocabulary make unigram simhashes collide en masse;
-    bigrams restore discrimination.) Blocking: the 4x16-bit quarters —
-    pigeonhole makes it exact for hamming <= 3. Verification:
-    bit_count(xor) on the candidate pairs.
+    bigrams restore discrimination.) ``portable=False`` (the fast
+    path) takes the quarters of xxhash64, ``(h >> 16q) & 0xFFFF``;
+    ``portable=True`` takes them from the FIRST 16 hex chars of
+    ``md5(bigram)``, ``conv(substr(md5, 4q+1, 4), 16, 10)`` —
+    non-negative small ints in any engine, so the DuckDB oracle of
+    queries.py:dedup_simhash_portable replays every step. md5 is
+    computed at TOP LEVEL of a projection, never inside a HOF lambda
+    (see the signature-collapse note on ``_minhash_band_rows``).
+
+    Blocking: equality on any of the 4 quarters — pigeonhole makes it
+    exact for hamming <= 3. Verification: summed ``bit_count(xor)``
+    over the quarters. Votes aggregate map-side, so the shuffle
+    carries one 64-col vote row per (doc, partition) — bytes ∝ docs,
+    not features.
 
     ``max_bucket`` is the same skew guard minhash/embedding LSH carry:
     a quarter value shared by more than ``max_bucket`` docs (a run of
     near-identical boilerplate) would join quadratically; such buckets
-    are dropped, trading recall on flooded values for bounded work —
-    exact-dedup first if the corpus is duplicate-heavy. Within the
-    guard the blocking remains EXACT for hamming <= 3.
-    """
-    toks = tokenized(df, id_col, text_col).select(
-        "_id",
-        F.explode(shingles_from_tokens(F.col("_toks"), 2)).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
-    votes = toks.groupBy("_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{j}")
-            for j in range(64)
-        ]
-    )
-    # bit 63 as a long literal is MIN_LONG in two's complement
-    bit_literals = [(1 << j) if j < 63 else -(1 << 63) for j in range(64)]
-    sig = votes.select(
-        "_id",
-        sum(
-            [
-                F.when(F.col(f"v{j}") > 0, F.lit(bit_literals[j]).cast("long")).otherwise(F.lit(0))
-                for j in range(64)
-            ],
-            F.lit(0).cast("long"),
-        ).alias("sig"),
-    )
-    quarters = sig.select(
-        "_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).alias("q"),
-                        F.shiftright(F.col("sig"), q * 16).bitwiseAND(F.lit(0xFFFF)).alias("qv"),
-                    )
-                    for q in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("_id", "sig", "b.q", "b.qv")
-    # guard BEFORE the self-join: quarter buckets over max_bucket are
-    # non-discriminative floods (see docstring) — one thin window pass
-    # tags bucket sizes; no doc payload in the shuffle
-    from pyspark.sql import Window as _W
-
-    quarters = quarters.withColumn(
-        "_bsz", F.count(F.lit(1)).over(_W.partitionBy("q", "qv"))
-    ).filter(F.col("_bsz") <= max_bucket).drop("_bsz")
-    a = quarters.select("q", "qv", F.col("_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    b = quarters.select("q", "qv", F.col("_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    cand = (
-        a.join(b, ["q", "qv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return cand.select(
-        "id_a",
-        "id_b",
-        F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_portable_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """64-bit SimHash near-dup pairs with ENGINE-PORTABLE hashing —
-    the md5 trick that earned ``minhash_portable_pairs`` a full DuckDB
-    oracle, applied to simhash (VERDICT r5 #3). Per distinct word-
-    bigram feature, the 64 signature bits come from the FIRST 16 hex
-    chars of ``md5(bigram)``, held as four 16-bit quarter values
-    (``conv(substr(md5, 4q+1, 4), 16, 10)``) — non-negative small ints
-    in any engine, no int64 sign gymnastics. Bit j of quarter q votes
-    +1/-1; the vote sign sets the signature bit. Blocking = equality on
-    any of the 4 quarters (pigeonhole-exact for hamming <= 3);
-    verification = summed ``bit_count(xor)`` over the quarters.
-
-    Scale shape is the same as ``simhash_pairs`` (the xxhash64 fast
-    path): votes aggregate map-side so the shuffle carries one 64-col
-    vote row per (doc, partition) — bytes ∝ docs, not features; the
-    ``max_bucket`` guard drops flooded (non-discriminative) quarter
-    buckets before the self-join bounds pair work at
-    O(n * 4 * max_bucket). md5 is computed at TOP LEVEL of a
-    projection, never inside a HOF lambda (see the signature-collapse
-    note on minhash_portable_pairs).
+    are dropped, trading recall on flooded values for bounded work at
+    O(n * 4 * max_bucket) — exact-dedup first if the corpus is
+    duplicate-heavy. Within the guard the blocking remains EXACT for
+    hamming <= 3.
     """
     toks = tokenized(df, id_col, text_col).select(
         "_id",
         F.explode(shingles_from_tokens(F.col("_toks"), 2)).alias("tok"),
     )
+    if portable:
+        quarter = lambda q: F.conv(  # noqa: E731
+            F.substring(F.md5("tok"), 4 * q + 1, 4), 16, 10
+        )
+    else:
+        toks = toks.withColumn("h", F.xxhash64("tok"))
+        quarter = lambda q: F.shiftright("h", 16 * q).bitwiseAND(F.lit(0xFFFF))  # noqa: E731
     qv = toks.select(
-        "_id",
-        *[
-            F.conv(F.substring(F.md5("tok"), 4 * q + 1, 4), 16, 10)
-            .cast("int")
-            .alias(f"_q{q}")
-            for q in range(4)
-        ],
+        "_id", *[quarter(q).cast("int").alias(f"_q{q}") for q in range(4)]
     )
     votes = qv.groupBy("_id").agg(
         *[
@@ -824,6 +644,9 @@ def simhash_portable_pairs(
             )
         ).alias("b"),
     ).select("_id", "sq0", "sq1", "sq2", "sq3", "b.q", "b.qval")
+    # guard BEFORE the self-join: quarter buckets over max_bucket are
+    # non-discriminative floods (see docstring) — one thin window pass
+    # tags bucket sizes; no doc payload in the shuffle
     from pyspark.sql import Window as _W
 
     quarters = (

@@ -8,21 +8,12 @@ iterative-algorithm surface: a driver-side loop over declarative
 DataFrame steps, with ``localCheckpoint`` every few rounds to cut the
 growing lineage (the standard Spark iteration hygiene).
 
-Two algorithms, selected by ``algorithm=``:
-
-- ``"label"`` (default): min-label propagation — every vertex adopts
-  the smallest label among itself and its neighbors until fixpoint;
-  rounds needed = graph diameter. Dedup-similarity graphs have tiny
-  components (near-dup groups), so this converges in a handful of
-  rounds and each round is one thin shuffle.
-- ``"star"``: alternating large-star/small-star (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", ACM WSDM 2014) —
-  each round REWIRES edges toward component minima instead of
-  propagating one hop, so convergence is O(log n) rounds regardless
-  of diameter. The adversarial long-chain graph that exhausts label
-  propagation's round budget converges in ~log2(n) alternations
-  (tests/test_null_semantics.py). Use for graphs whose component
-  diameter is unknown or unbounded.
+Connected components is min-label propagation: every vertex adopts
+the smallest label among itself and its neighbors until fixpoint;
+rounds needed = graph diameter. Dedup-similarity graphs have tiny
+components (near-dup groups), so this converges in a handful of
+rounds and each round is one thin shuffle; a graph whose diameter
+exceeds the round budget raises instead of returning wrong labels.
 """
 
 from __future__ import annotations
@@ -31,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # target rows per partition for the iterative operators' pinned key
-# exchanges (pagerank_portable / label_propagation): node/rank and
+# exchanges (pagerank / label_propagation): node/rank and
 # vote rows are a few dozen bytes, so ~500k rows is tens of MB — the
 # guide §2.2 partition-size band. The derived count is clamped to the
 # session's defaultParallelism; callers on unusual clusters can pin
@@ -45,31 +36,25 @@ def connected_components(
     dst: str = "id_b",
     max_iterations: int = 20,
     checkpoint_every: int = 3,
-    algorithm: str = "label",
 ) -> DataFrame:
-    """Connected components of an undirected edge list.
+    """Connected components of an undirected edge list by min-label
+    propagation (diameter rounds, cheapest per round — right for
+    dedup's tiny clusters).
 
     Returns (id, component) with component = min vertex id reachable.
     Vertices are those appearing in edges; isolated vertices can be
-    unioned in by the caller. ``algorithm``: "label" (diameter rounds,
-    cheapest per round — right for dedup's tiny clusters) or "star"
-    (O(log n) rounds — right for unbounded-diameter graphs); both
-    raise rather than return wrong labels if ``max_iterations`` is
-    exhausted before fixpoint.
+    unioned in by the caller. Raises rather than return wrong labels
+    if ``max_iterations`` is exhausted before fixpoint.
     """
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be label|star, got {algorithm!r}")
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    # lazy: the first consumer (labels-init distinct or the star seed)
-    # materializes the checkpoint in its own job — same plan cut,
-    # one fewer blocking driver round trip (the trainer-loop pattern)
+    # lazy: the first consumer (the labels-init distinct) materializes
+    # the checkpoint in its own job — same plan cut, one fewer
+    # blocking driver round trip (the trainer-loop pattern)
     sym = sym.dropDuplicates(["u", "v"]).localCheckpoint(eager=False)
-    if algorithm == "star":
-        return _star_components(sym, max_iterations)
     labels = sym.select("u").distinct().select(
         F.col("u").alias("id"), F.col("u").alias("component")
     )
@@ -131,82 +116,6 @@ def connected_components(
     return labels
 
 
-def _large_star(sym: DataFrame) -> DataFrame:
-    """Large-star: every vertex u connects its LARGER neighbors to
-    m(u) = min(N(u) ∪ {u}). Output edges (v, m) with v > u >= m —
-    strictly (larger, smaller), no self-loops."""
-    nbr_min = sym.groupBy("u").agg(F.min(F.least("v", "u")).alias("m"))
-    return (
-        sym.join(nbr_min, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-
-
-def _small_star(directed: DataFrame) -> DataFrame:
-    """Small-star over (larger, smaller) edges: every vertex u rewires
-    its smaller neighbors (and itself) to m(u) = min neighbor. Output
-    stays (larger, smaller)."""
-    nbr_min = directed.groupBy("u").agg(F.min("v").alias("m"))
-    rewired = (
-        directed.join(nbr_min, "u")
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    self_edge = nbr_min.select("u", F.col("m").alias("v"))
-    return rewired.union(self_edge).dropDuplicates(["u", "v"])
-
-
-def _star_components(sym: DataFrame, max_iterations: int) -> DataFrame:
-    """Alternate large-star/small-star until the edge set is a stable
-    star forest (each node -> its component's min id). Each round is
-    two thin (u, v) shuffles + one checksum action; lineage is cut
-    every round (edge tables are small and fully rewritten)."""
-    # seed with the canonical (larger, smaller) form
-    edges = (
-        sym.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=False)
-    )
-    prev_chk: tuple | None = None
-    converged = False
-    for _ in range(max_iterations):
-        # large-star needs the symmetric view of the current edges
-        cur_sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # lazy: the checksum agg right below materializes the round
-        edges = _small_star(_large_star(cur_sym)).localCheckpoint(eager=False)
-        # bit_xor, not sum: a sum of 64-bit hashes overflows LongType
-        # (ANSI arithmetic); xor is order-insensitive and closed
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).first()
-        chk = (row["n"], row["h"])
-        if chk == prev_chk:
-            converged = True
-            break
-        prev_chk = chk
-    if not converged:
-        raise RuntimeError(
-            f"star connected_components did not converge in {max_iterations} "
-            "rounds; raise max_iterations"
-        )
-    # stable star forest: every edge points node -> component root.
-    # Vertices that only had self-loops vanished at seeding — restore
-    # them as their own singleton component (label-algorithm parity).
-    stars = edges.select(F.col("u").alias("id"), F.col("v").alias("component")).union(
-        edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
-    ).dropDuplicates(["id"])
-    vertices = sym.select(F.col("u").alias("id")).distinct()
-    return vertices.join(stars, "id", "left").select(
-        "id", F.coalesce("component", "id").alias("component")
-    )
-
-
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Near-dup pairs -> (id, cluster_id) with cluster_id = min member
     id — the keeper-selection input for cluster-level dedup."""
@@ -221,7 +130,8 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint_every: int = 3,
+    n_part: int | None = None,
+    portable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank on a directed edge list, with dangling
     mass redistributed uniformly (the standard stochastic-matrix
@@ -230,82 +140,16 @@ def pagerank(
 
     Returns (node, rank); ranks sum to 1. Fixed ``iterations`` rather
     than an epsilon stop so the result is a deterministic function of
-    the graph — verifiable against a dense numpy power iteration
-    (tests/test_graph_pagerank.py).
-
-    Scale shape per iteration: contributions = edges ⋈ ranks (shuffle
-    on src) then groupBy dst (shuffle on dst); dangling mass is a
-    broadcast 1-row agg; lineage is cut with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds (the iteration hygiene shared with
-    connected_components). Degrees are precomputed once. At 100 TB the
-    edge table dominates — both shuffles are on its natural keys, no
-    row ever carries more than (node, rank).
-    """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropDuplicates(
-        ["u", "v"]
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_total = nodes.agg(F.count(F.lit(1)).alias("_n"))
-    out_deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("_deg")).localCheckpoint()
-    ranks = nodes.crossJoin(F.broadcast(n_total)).select(
-        "node", (F.lit(1.0) / F.col("_n")).alias("rank")
-    )
-    for i in range(iterations):
-        with_deg = ranks.join(out_deg, ranks.node == out_deg.u, "left")
-        # nodes with no out-edges contribute their whole rank to the
-        # uniform dangling pool instead of vanishing
-        dangling = with_deg.filter(F.col("_deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-        )
-        contribs = (
-            e.join(ranks.join(out_deg, ranks.node == out_deg.u), e.u == F.col("node"))
-            .select(F.col("v").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(n_total))
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    (1.0 - damping) / F.col("_n")
-                    + damping * (F.coalesce(F.col("_sum"), F.lit(0.0)) + F.col("_dm") / F.col("_n"))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
-    return ranks
-
-
-def pagerank_portable(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 5,
-    n_part: int | None = None,
-) -> DataFrame:
-    """ENGINE-PORTABLE fixed-iteration PageRank: same algorithm as
-    ``pagerank`` (dangling mass redistributed uniformly), but the two
-    order-dependent float accumulations — the per-node contribution
-    sum and the dangling-mass sum — go through EXACT decimal(38,12)
-    images of 12-decimal-rounded terms, so each iteration's rank
-    vector is a bit-identical double under any partitioning or engine
-    and a DuckDB oracle can unroll the iterations as chained CTEs
-    (queries.py: graph_pagerank_hubs). The 1e-12 quantization per term
-    is far below PageRank's own fixed-iteration truncation error;
-    ``pagerank`` remains the plain-double path (property-tested
-    against a dense numpy power iteration).
+    the graph. ``portable=False`` accumulates plain doubles (verified
+    against a dense numpy power iteration, tests/test_graph_pagerank.py).
+    ``portable=True`` sends the two order-dependent float
+    accumulations — the per-node contribution sum and the
+    dangling-mass sum — through EXACT decimal(38,12) images of
+    12-decimal-rounded terms, so each iteration's rank vector is a
+    bit-identical double under any partitioning or engine and a DuckDB
+    oracle can unroll the iterations as chained CTEs (queries.py:
+    graph_pagerank_hubs). The 1e-12 quantization per term is far below
+    PageRank's own fixed-iteration truncation error.
 
     Scale shape per iteration: ONE shuffle — the contribution sums on
     dst. The edge table is pre-joined with the out-degrees and pinned
@@ -314,15 +158,17 @@ def pagerank_portable(
     partitioning each round, so the per-iteration edges-⋈-ranks join,
     the dangling semi-join, and the nodes-⋈-contribs update are all
     exchange-free on the heavy side (guide §2.4: two operations keyed
-    the same way share one exchange). Every per-round float
-    accumulation is an exact decimal image, so the re-partitioning
-    cannot move a single bit of the result. Rows never carry more
-    than (node, rank)."""
+    the same way share one exchange). On the portable path every
+    per-round float accumulation is an exact decimal image, so the
+    re-partitioning cannot move a single bit of the result. Rows never
+    carry more than (node, rank)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
 
-    def dec_sum(col):
-        return F.sum(F.round(col, 12).cast("decimal(38,12)")).cast("double")
+    def acc_sum(col):
+        if portable:
+            return F.sum(F.round(col, 12).cast("decimal(38,12)")).cast("double")
+        return F.sum(col)
 
     # the canonical edge list feeds THREE setup consumers across
     # separate actions (node set, degree-pinned edges, dangling set) —
@@ -351,8 +197,9 @@ def pagerank_portable(
     # core count — a toy graph runs its ten per-iteration stages as a
     # couple of tasks instead of defaultParallelism tasks each, and a
     # warehouse graph still spreads to every core. The count is one
-    # cheap pass over the already-checkpointed node list; decimal-
-    # image sums make any partitioning choice bit-identical.
+    # cheap pass over the already-checkpointed node list; on the
+    # portable path decimal-image sums make any partitioning choice
+    # bit-identical.
     if n_part is None:
         n_nodes = nodes_raw.count()
         n_part = max(
@@ -387,13 +234,13 @@ def pagerank_portable(
     )
     for i in range(iterations):
         dangling = ranks.join(dangling_nodes, "node", "left_semi").agg(
-            F.coalesce(dec_sum(F.col("rank")), F.lit(0.0)).alias("_dm")
+            F.coalesce(acc_sum(F.col("rank")), F.lit(0.0)).alias("_dm")
         )
         contribs = (
             e_deg.join(ranks, e_deg.u == ranks.node)
             .select(F.col("v").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
             .groupBy("node")
-            .agg(dec_sum(F.col("_c")).alias("_sum"))
+            .agg(acc_sum(F.col("_c")).alias("_sum"))
         )
         ranks = (
             nodes.join(contribs, "node", "left")
@@ -412,7 +259,7 @@ def pagerank_portable(
             # DataFrame is backed by the checkpoint RDD), but lazy
             # materialization folds each round's blocking checkpoint
             # job into the next consumer's job — fewer driver round
-            # trips per iteration; decimal-image ranks are identical
+            # trips per iteration; the ranks are identical
             .localCheckpoint(eager=False)
         )
     return ranks
@@ -585,7 +432,7 @@ def label_propagation(
     (undirected), ties to the SMALLEST label. Fixed ``iterations``
     rather than a convergence stop so the result is a deterministic
     function of the graph — the same fixed-round contract as
-    pagerank_portable / the k-core twin, which is what lets a SQL
+    pagerank(portable=True) / the k-core twin, which is what lets a SQL
     oracle replay the unrolled rounds exactly.
 
     Returns (node, community). Scale shape per round: one join of the

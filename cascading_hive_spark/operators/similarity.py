@@ -148,15 +148,26 @@ def _assign_cells(
     )
 
 
-def _mean_centroids(assignments: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    return (
-        assignments.groupBy("cell")
-        .agg(
-            F.array(
-                *[F.avg(F.get(F.col(vec_col), i).cast("double")).alias(f"c{i}") for i in range(dim)]
-            ).alias("centroid")
+def _mean_centroids(
+    assigned: DataFrame, keys: list[str], vec_col: str, dim: int, portable: bool
+) -> DataFrame:
+    """(*keys, centroid): per-group coordinate means. ``portable``
+    means are EXACT decimal(18,6) sums of 6-decimal-rounded
+    coordinates divided by the group count — order-independent
+    (decimal addition is exact), so the resulting doubles are
+    identical regardless of partitioning or engine, where a
+    float/double ``avg`` is partition-order-dependent."""
+    if portable:
+        mean = lambda x: (  # noqa: E731
+            F.sum(F.round(x, 6).cast("decimal(18,6)")).cast("double")
+            / F.count(F.lit(1))
         )
-        .select("cell", "centroid")
+    else:
+        mean = F.avg
+    return assigned.groupBy(*keys).agg(
+        F.array(
+            *[mean(F.get(F.col(vec_col), i).cast("double")) for i in range(dim)]
+        ).alias("centroid")
     )
 
 
@@ -166,6 +177,7 @@ def ivf_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     refine_iterations: int = 1,
+    portable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Build a deterministic IVF index: seed centroids = mean of each
     of n_cells hash-assigned groups (one aggregation pass, stable
@@ -180,86 +192,37 @@ def ivf_build(
     which over-merges genuine clusters). Deterministic: no random
     restarts, ties broken by cell id.
 
+    ``portable=True`` makes every arithmetic step reproducible
+    bit-for-bit in plain SQL: seeding by the Knuth multiplicative hash
+    of the id (pmod algebra, identical in any engine —
+    operators/sampling.py) instead of xxhash64, and exact decimal-image
+    cell means (``_mean_centroids``). With ``refine_iterations=0`` a
+    DuckDB oracle replays the whole index — seeding, centroids,
+    assignment — and the PARTIAL-probe search result hash-matches
+    cross-engine (queries.py: ann_ivf_portable).
+
     Returns (assignments, centroids); assignments add a ``cell``
     column — at scale you'd ``write.partitionBy("cell")`` so probes
     prune to nprobe directories.
     """
     dim = _dim_of(vectors, vec_col)
-    seed_assign = vectors.select(
-        F.abs(F.xxhash64(F.col(id_col)) % n_cells).alias("cell"),
-        F.col(vec_col),
-    )
-    centroids = _mean_centroids(seed_assign, vec_col, dim)
+    if portable:
+        from cascading_hive_spark.operators.sampling import hash_order
+
+        seed_cell = F.pmod(hash_order(F.col(id_col)), F.lit(n_cells))
+    else:
+        seed_cell = F.abs(F.xxhash64(F.col(id_col)) % n_cells)
+    seeded = vectors.select(seed_cell.alias("cell"), F.col(vec_col))
+    centroids = _mean_centroids(seeded, ["cell"], vec_col, dim, portable)
     for _ in range(refine_iterations):
         assigned = _assign_cells(vectors, centroids, id_col, vec_col)
-        # localCheckpoint: each Lloyd round re-reads assignments once;
-        # without it the lineage re-scores all prior rounds
-        centroids = _mean_centroids(assigned, vec_col, dim).localCheckpoint(eager=False)
-    # same double-consumer cut as ivf_build_portable (guide §5)
-    assignments = _assign_cells(vectors, centroids, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
-    return assignments, centroids
-
-
-def ivf_build_portable(
-    vectors: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """ENGINE-PORTABLE IVF build — every arithmetic step reproducible
-    bit-for-bit in plain SQL, so a DuckDB oracle can replay the whole
-    index (seeding, centroids, assignment) and the PARTIAL-probe
-    search result hash-matches cross-engine (queries.py:
-    ann_ivf_portable) — the same portability trade minhash/simhash
-    made: ``ivf_build`` (xxhash64 seeds + Lloyd float means) is the
-    fast/tight path; this one swaps in
-
-    - seeding: Knuth multiplicative hash of the id (pmod algebra,
-      identical in any engine — operators/sampling.py) instead of
-      xxhash64;
-    - centroids: per-cell means computed as EXACT decimal(18,6) sums
-      of 6-decimal-rounded coordinates divided by the cell count —
-      order-independent (decimal addition is exact), so the resulting
-      doubles are identical regardless of partitioning or engine,
-      where a float/double ``avg`` is partition-order-dependent;
-    - no Lloyd refinement: replaying iterative refinement multiplies
-      the oracle for no extra machinery coverage (assignment, probe
-      selection, candidate join, ranking are all already exercised).
-
-    Same scale shape as ``ivf_build``: one aggregation pass for
-    centroids, one broadcast-scored narrow pass for assignment.
-    """
-    from cascading_hive_spark.operators.sampling import hash_order
-
-    dim = _dim_of(vectors, vec_col)
-    seeded = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.pmod(hash_order(F.col(id_col)), F.lit(n_cells)).alias("cell"),
-    )
-    sums = seeded.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(
-                F.round(F.get(F.col(vec_col), i).cast("double"), 6).cast(
-                    "decimal(18,6)"
-                )
-            ).alias(f"_s{i}")
-            for i in range(dim)
-        ],
-    )
-    centroids = sums.select(
-        "cell",
-        F.array(
-            *[(F.col(f"_s{i}").cast("double") / F.col("_n")) for i in range(dim)]
-        ).alias("centroid"),
-    ).localCheckpoint(eager=False)
-    # consumers use the assignment table on BOTH sides of a search
-    # (query probes + cell members) — without a cut the broadcast-
-    # scored assign pass re-executes per consumer (guide §5). Index-
-    # scale rows, the same budget the index write would pay anyway.
+        centroids = _mean_centroids(assigned, ["cell"], vec_col, dim, portable)
+    # centroids feed the assignment pass and every later probe; the
+    # assignment table is read on BOTH sides of a search (query probes
+    # + cell members) — without the cuts the broadcast-scored assign
+    # pass re-executes per consumer (guide §5). Index-scale rows, the
+    # same budget the index write would pay anyway.
+    centroids = centroids.localCheckpoint(eager=False)
     assignments = _assign_cells(vectors, centroids, id_col, vec_col).localCheckpoint(
         eager=False
     )
@@ -531,6 +494,27 @@ def quantize_int8(
 # the similarity surface after brute-force kNN and IVF (Jégou et al.,
 # "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
 # ---------------------------------------------------------------------------
+def _subvectors(
+    vectors: DataFrame, id_col: str, vec_col: str, m: int, d_sub: int
+) -> DataFrame:
+    """(_id, sub, subvec): each vector split into its ``m`` subspace
+    slices of ``d_sub`` coordinates, one row per slice."""
+    return vectors.select(
+        F.col(id_col).alias("_id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("sub"),
+                        F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias("subvec"),
+                    )
+                    for j in range(m)
+                ]
+            )
+        ).alias("_s"),
+    ).select("_id", F.col("_s.sub").alias("sub"), F.col("_s.subvec").alias("subvec"))
+
+
 def pq_train(
     vectors: DataFrame,
     m: int = 8,
@@ -539,6 +523,7 @@ def pq_train(
     vec_col: str = "embedding",
     refine_iterations: int = 1,
     cut_lineage: bool = True,
+    portable: bool = False,
 ) -> DataFrame:
     """Train a PQ codebook: the embedding splits into ``m`` equal
     subvectors; each subspace gets ``k`` centroids via the SAME
@@ -547,30 +532,27 @@ def pq_train(
     (id, sub, subvec) rows and every aggregation groups on (sub,
     cell), so m never multiplies the number of jobs.
 
+    ``portable=True`` swaps the xxhash64 seed sample for the
+    Knuth-hash pmod algebra (sample gate) + md5-hex ordering (seed
+    rank), and Lloyd means for exact decimal images — all
+    reproducible in any engine. With ``refine_iterations=0`` the
+    codebook is the seed DATA POINTS themselves (float32 coords cast
+    to double — exact, no arithmetic to diverge), so a DuckDB oracle
+    replays the WHOLE compressed-ANN pipeline (codebook, encode, ADC
+    shortlist, exact re-rank) bit-for-bit (queries.py:
+    ann_pq_portable).
+
     Returns centroids: (sub, cell, centroid) — m*k rows, metadata-
     sized (the whole codebook for m=8, k=256, dim=64 is 128 KB).
     """
+    from pyspark.sql import Window
+
     dim = _dim_of(vectors, vec_col)
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     d_sub = dim // m
-    sub = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias(
-                            "subvec"
-                        ),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("_s"),
-    ).select("_id", F.col("_s.sub").alias("sub"), F.col("_s.subvec").alias("subvec"))
-    if cut_lineage:
+    sub = _subvectors(vectors, id_col, vec_col, m, d_sub)
+    if cut_lineage and refine_iterations:
         # the subvector table feeds the seed-sample window job AND
         # every refine round's assign — separate ACTIONS, so exchange
         # reuse never applies and each re-ran the scan+explode
@@ -587,16 +569,18 @@ def pq_train(
     # the global subspace mean and Lloyd then empties most cells.
     n = vectors.count()  # index build time only, like _dim_of
     sample_mod = max(1, n // (k * 20))
-    from pyspark.sql import Window
+    if portable:
+        from cascading_hive_spark.operators.sampling import hash_order
 
-    cand = sub.filter(
-        F.pmod(F.abs(F.xxhash64("_id")), F.lit(sample_mod)) == 0
-    )
-    w_seed = Window.partitionBy("sub").orderBy(
-        F.abs(F.xxhash64(F.col("_id"), F.lit(1))), F.col("_id")
-    )
+        gate = F.pmod(hash_order(F.col("_id")), F.lit(sample_mod))
+        rank = F.md5(F.concat(F.lit("pqseed|"), F.col("_id").cast("string")))
+    else:
+        gate = F.pmod(F.abs(F.xxhash64("_id")), F.lit(sample_mod))
+        rank = F.abs(F.xxhash64(F.col("_id"), F.lit(1)))
+    w_seed = Window.partitionBy("sub").orderBy(rank, F.col("_id"))
     centroids = (
-        cand.withColumn("_rn", F.row_number().over(w_seed))
+        sub.filter(gate == 0)
+        .withColumn("_rn", F.row_number().over(w_seed))
         .filter(F.col("_rn") <= k)
         .select(
             "sub",
@@ -607,89 +591,10 @@ def pq_train(
     )
     for _ in range(refine_iterations):
         assigned = _pq_assign(sub, centroids, d_sub)
-        centroids = _pq_mean_centroids(assigned, d_sub).localCheckpoint(eager=False)
+        centroids = _mean_centroids(
+            assigned, ["sub", "cell"], "subvec", d_sub, portable
+        ).localCheckpoint(eager=False)
     return centroids
-
-
-def pq_train_portable(
-    vectors: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ENGINE-PORTABLE PQ codebook — the ``ivf_build_portable`` trade
-    applied to product quantization so a DuckDB oracle can replay the
-    WHOLE compressed-ANN pipeline (codebook, encode, ADC shortlist,
-    exact re-rank) bit-for-bit (queries.py: ann_pq_portable):
-
-    - the hash-ranked seed sample swaps xxhash64 for the Knuth-hash
-      pmod algebra (sample gate) + md5-hex ordering (seed rank) —
-      both reproducible in any engine;
-    - the codebook is the seed DATA POINTS themselves (float32
-      coords cast to double — exact, no arithmetic to diverge), no
-      Lloyd refinement: iterative mean refinement is already
-      hash-verified by ivf_build_portable's decimal-sum centroids,
-      and skipping it keeps the replayed SQL at half the size while
-      every piece of PQ-specific machinery (subspace split, per-sub
-      argmin encode, LUT scoring, shortlist, re-rank) stays covered.
-
-    ``pq_train`` (xxhash64 + Lloyd) remains the quality path; this is
-    the verification twin. Returns (sub, cell, centroid) like
-    ``pq_train`` so ``pq_encode``/``pq_search_rerank`` compose
-    unchanged.
-    """
-    from pyspark.sql import Window
-
-    from cascading_hive_spark.operators.sampling import hash_order
-
-    dim = _dim_of(vectors, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    sub = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias("subvec"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("_s"),
-    ).select("_id", F.col("_s.sub").alias("sub"), F.col("_s.subvec").alias("subvec"))
-    n = vectors.count()  # index build time only, like pq_train
-    sample_mod = max(1, n // (k * 20))
-    cand = sub.filter(F.pmod(hash_order(F.col("_id")), F.lit(sample_mod)) == 0)
-    w_seed = Window.partitionBy("sub").orderBy(
-        F.md5(F.concat(F.lit("pqseed|"), F.col("_id").cast("string"))), F.col("_id")
-    )
-    return (
-        cand.withColumn("_rn", F.row_number().over(w_seed))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "sub",
-            (F.col("_rn") - 1).alias("cell"),
-            F.transform("subvec", lambda x: x.cast("double")).alias("centroid"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
-def _pq_mean_centroids(assigned: DataFrame, d_sub: int) -> DataFrame:
-    return assigned.groupBy("sub", "cell").agg(
-        F.array(
-            *[
-                F.avg(F.get(F.col("subvec"), i).cast("double")).alias(f"c{i}")
-                for i in range(d_sub)
-            ]
-        ).alias("centroid")
-    )
-
-
 def _pq_assign_cells(sub: DataFrame, centroids: DataFrame, d_sub: int) -> DataFrame:
     """Nearest centroid per (id, sub) by L2 -> (_id, sub, cell).
 
@@ -739,20 +644,7 @@ def pq_encode(
     8x smaller than the raw embeddings (64-dim float -> 8 bytes)."""
     dim = _dim_of(vectors, vec_col)
     d_sub = dim // m
-    sub = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias("subvec"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("_s"),
-    ).select("_id", F.col("_s.sub").alias("sub"), F.col("_s.subvec").alias("subvec"))
+    sub = _subvectors(vectors, id_col, vec_col, m, d_sub)
     assigned = _pq_assign_cells(sub, centroids, d_sub)
     return (
         assigned.groupBy("_id")
@@ -859,6 +751,7 @@ def ivfpq_build(
     k: int = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    portable: bool = False,
 ):
     """Build an IVF-PQ index: ivf_build's coarse cells, then PQ
     codebooks trained on the RESIDUALS (vector minus its cell
@@ -867,17 +760,32 @@ def ivfpq_build(
     (index, coarse_centroids, pq_centroids) where index is
     (id, cell, codes) — at 100 TB you'd write it
     ``partitionBy("cell")`` so probes prune to nprobe directories,
-    8 bytes + a cell id per vector."""
+    8 bytes + a cell id per vector.
+
+    ``portable=True`` builds the seed-only index (no Lloyd rounds in
+    either stage) from the portable ``ivf_build`` and ``pq_train``;
+    residuals are plain double subtraction (exact), so every
+    arithmetic step replays in SQL and the composite index layout
+    (coarse cell + 8-byte residual code) gets a bit-for-bit DuckDB
+    twin (queries.py: ann_ivfpq_portable)."""
+    refine = 0 if portable else 1
     # assignments and residuals feed MANY separate actions below —
-    # pq_train alone runs four (dim probe, count, seed checkpoint,
-    # refine round), then pq_encode and the final index join read them
-    # again. Exchange reuse never crosses actions, so without the cuts
-    # the coarse E-step (broadcast-scored corpus pass) re-executed per
-    # action (r16; the bloom-precheck lesson). Both tables are the
-    # index's own build-time layout — at warehouse scale this boundary
-    # is the partitionBy("cell") write the docstring names.
-    # (assignments now arrive checkpointed from ivf_build itself, r17)
-    assignments, coarse = ivf_build(vectors, n_cells, id_col=id_col, vec_col=vec_col)
+    # pq_train alone runs up to four (dim probe, count, seed
+    # checkpoint, refine round), then pq_encode and the final index
+    # join read them again. Exchange reuse never crosses actions, so
+    # without the cuts the coarse E-step (broadcast-scored corpus pass)
+    # re-executed per action (r16; the bloom-precheck lesson). Both
+    # tables are the index's own build-time layout — at warehouse scale
+    # this boundary is the partitionBy("cell") write the docstring
+    # names. (assignments arrive checkpointed from ivf_build itself)
+    assignments, coarse = ivf_build(
+        vectors,
+        n_cells,
+        id_col=id_col,
+        vec_col=vec_col,
+        refine_iterations=refine,
+        portable=portable,
+    )
     residuals = assignments.join(F.broadcast(coarse), "cell").select(
         F.col(id_col),
         "cell",
@@ -886,50 +794,18 @@ def ivfpq_build(
         ).alias(vec_col),
     ).localCheckpoint(eager=False)
     pq_cent = pq_train(
-        residuals, m=m, k=k, id_col=id_col, vec_col=vec_col, cut_lineage=False
+        residuals,
+        m=m,
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        refine_iterations=refine,
+        cut_lineage=False,
+        portable=portable,
     )
     codes = pq_encode(residuals, pq_cent, m=m, id_col=id_col, vec_col=vec_col)
     index = assignments.select(id_col, "cell").join(codes, id_col)
     return index, coarse, pq_cent
-
-
-def ivfpq_build_portable(
-    vectors: DataFrame,
-    n_cells: int = 8,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """ENGINE-PORTABLE IVF-PQ build: ``ivf_build_portable``'s coarse
-    cells (Knuth-hash seeding, exact decimal-sum centroid means),
-    residuals computed in plain double subtraction (exact), and
-    ``pq_train_portable``'s seed-point codebook on those residuals —
-    every arithmetic step replayable in SQL, so the composite
-    billion-scale index layout (coarse cell + 8-byte residual code)
-    gets a bit-for-bit DuckDB twin (queries.py: ann_ivfpq_portable).
-    ``ivfpq_build`` stays the quality path. Same return shape:
-    (index, coarse_centroids, pq_centroids)."""
-    assignments, coarse = ivf_build_portable(
-        vectors, n_cells, id_col=id_col, vec_col=vec_col
-    )
-    # same multi-action lineage cuts as ivfpq_build (r16): pq_train_
-    # portable runs three actions, pq_encode and the index join two
-    # more — each re-executed the coarse E-step without the boundary
-    assignments = assignments.localCheckpoint(eager=False)
-    residuals = assignments.join(F.broadcast(coarse), "cell").select(
-        F.col(id_col),
-        "cell",
-        F.zip_with(
-            F.col(vec_col), "centroid", lambda a, b: (a.cast("double") - b)
-        ).alias(vec_col),
-    ).localCheckpoint(eager=False)
-    pq_cent = pq_train_portable(residuals, m=m, k=k, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(residuals, pq_cent, m=m, id_col=id_col, vec_col=vec_col)
-    index = assignments.select(id_col, "cell").join(codes, id_col)
-    return index, coarse, pq_cent
-
-
 def ivfpq_search(
     index: DataFrame,
     coarse_rows: list,
@@ -1243,7 +1119,7 @@ def kmeans_fit(
     to convergence, then feed the centroids to ``ivf_write`` /
     ``ivfpq_build`` as curated coarse cells.
 
-    Portability discipline (the ``ivf_build_portable`` /
+    Portability discipline (the ``ivf_build(portable=True)`` /
     ``label_centroids`` trade): seeding is the Knuth multiplicative
     hash of the id (pmod algebra, identical in any engine); every
     mean goes through a decimal image (round coordinates to
@@ -1810,7 +1686,7 @@ def knn_density_blocked(
     max_cell: int = 100_000,
 ) -> DataFrame:
     """``knn_density`` past the broadcast bound: candidates come from
-    an IVF index (``ivf_build`` / ``ivf_build_portable``) instead of
+    an IVF index (``ivf_build``, either hash family) instead of
     the full cross product — each vector is scored only against the
     ``nprobe`` cells nearest it, so pair work is the nprobe/n_cells
     fraction of brute force. Approximate the same way IVF search is:

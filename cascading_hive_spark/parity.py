@@ -23,11 +23,17 @@ from cascading_hive_spark.tables import TABLES
 @dataclass
 class ParityResult:
     name: str
-    ok: bool
+    # "match", "mismatch", or "unchecked": a rows-only query has no
+    # oracle, so nothing compared its output
+    status: str
     detail: str = ""
     spark_rows: int = -1
     oracle_rows: int = -1
     examples: list[str] = field(default_factory=list)
+
+    @property
+    def ok(self) -> bool:
+        return self.status == "match"
 
 
 def _norm_cell(v) -> str:
@@ -119,26 +125,31 @@ def check_query(spark: SparkSession, name: str, sf_dir: str) -> ParityResult:
     srows = sdf.collect()
     scols = sdf.columns
     if oracle is None:
-        return ParityResult(name, True, "rows-only (no oracle)", len(srows), -1)
+        return ParityResult(name, "unchecked", "rows-only (no oracle)", len(srows), -1)
     ocols, orows, otypes = run_oracle(oracle, sf_dir)
     if sorted(scols) != sorted(ocols):
         return ParityResult(
-            name, False, f"column mismatch: spark={sorted(scols)} oracle={sorted(ocols)}",
+            name, "mismatch",
+            f"column mismatch: spark={sorted(scols)} oracle={sorted(ocols)}",
             len(srows), len(orows),
         )
     tmis = _type_mismatches(sdf.schema, otypes)
     if tmis:
         return ParityResult(
-            name, False, f"type mismatch: {tmis}", len(srows), len(orows)
+            name, "mismatch", f"type mismatch: {tmis}", len(srows), len(orows)
         )
     if len(srows) != len(orows):
-        return ParityResult(name, False, "row-count mismatch", len(srows), len(orows))
+        return ParityResult(
+            name, "mismatch", "row-count mismatch", len(srows), len(orows)
+        )
     sm = _rows_to_multiset(srows, scols)
     om = _rows_to_multiset(orows, ocols)
     if sm != om:
         diffs = [f"spark: {a}\n  oracle: {b}" for a, b in zip(sm, om) if a != b][:3]
-        return ParityResult(name, False, "value mismatch", len(srows), len(orows), diffs)
-    return ParityResult(name, True, "match", len(srows), len(orows))
+        return ParityResult(
+            name, "mismatch", "value mismatch", len(srows), len(orows), diffs
+        )
+    return ParityResult(name, "match", "match", len(srows), len(orows))
 
 
 def check_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
@@ -147,7 +158,7 @@ def check_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
         try:
             results.append(check_query(spark, name, sf_dir))
         except Exception as exc:  # noqa: BLE001 — report, keep checking
-            results.append(ParityResult(name, False, f"error: {exc!r}"))
+            results.append(ParityResult(name, "mismatch", f"error: {exc!r}"))
     return results
 
 
@@ -160,15 +171,14 @@ def main() -> int:
     names = sys.argv[1:] or None
     spark = get_session("parity-check")
     results = check_all(spark, sf_dir, names)
-    bad = 0
+    marks = {"match": "OK  ", "mismatch": "FAIL", "unchecked": "----"}
     for r in results:
-        mark = "OK " if r.ok else "FAIL"
-        print(f"{mark} {r.name:32s} rows={r.spark_rows}/{r.oracle_rows} {r.detail}")
+        print(f"{marks[r.status]} {r.name:32s} rows={r.spark_rows}/{r.oracle_rows} {r.detail}")
         for e in r.examples:
             print(f"    {e}")
-        bad += (not r.ok)
-    print(f"{len(results) - bad}/{len(results)} queries match")
-    return 1 if bad else 0
+    n = {s: sum(r.status == s for r in results) for s in marks}
+    print(f"{n['match']} match / {n['mismatch']} mismatch / {n['unchecked']} unchecked")
+    return 1 if n["mismatch"] else 0
 
 
 if __name__ == "__main__":

@@ -1123,7 +1123,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # MinHash-LSH near-dup: xxhash64 signatures are Spark-specific → no
-# cross-engine oracle; exact-Jaccard equivalence is property-tested in
+# cross-engine oracle; the operator is the one dedup_minhash_portable
+# certifies (same banding, bucket cap and verify code, md5 family),
+# and exact-Jaccard equivalence is property-tested in
 # tests/test_dedup.py against a brute-force pass.
 @register("dedup_minhash_lsh", None)
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1137,9 +1139,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Portable MinHash-LSH (VERDICT r3/r4 stretch): md5-based permutation
 # hashing instead of xxhash64, so the DuckDB oracle reproduces the
 # ENTIRE pipeline — shingling, 16 permutation minima, 8 band hashes,
-# bucket cap, exact-Jaccard verify — bit-for-bit. This upgrades the
-# flagship dedup family from rows-only to a full hash-matched
-# CORRECTNESS row; the xxhash64 variant above remains the fast path.
+# bucket cap, exact-Jaccard verify — bit-for-bit. The same
+# minhash_lsh_pairs with portable=False is the xxhash64 fast path that
+# dedup_minhash_lsh runs, so this row certifies its operator code.
 @register(
     "dedup_minhash_portable",
     r"""
@@ -1176,10 +1178,17 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cascading_hive_spark.operators.dedup import minhash_portable_pairs
+    from cascading_hive_spark.operators.dedup import minhash_lsh_pairs
 
-    return minhash_portable_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
+    return minhash_lsh_pairs(
+        _t(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        num_perm=16,
+        bands=8,
+        shingle_n=3,
+        threshold=0.8,
+        portable=True,
     )
 
 
@@ -1214,7 +1223,9 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d, "doc_id", "text", ["fp"], n=3, threshold=0.8)
 
 
-# SimHash: xxhash64-based → rows-only; hamming verified in pytest.
+# SimHash: xxhash64-based → rows-only; hamming verified in pytest, and
+# the operator is the one dedup_simhash_portable certifies (same
+# quarter votes, blocking and verify; md5 quarters there).
 @register("dedup_simhash", None)
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.dedup import simhash_pairs
@@ -1223,7 +1234,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_portable_oracle(max_hamming: int = 3, max_bucket: int = 1000) -> str:
-    # Generated mirror of operators/dedup.simhash_portable_pairs —
+    # Generated mirror of operators/dedup.simhash_pairs(portable=True) —
     # same distinct word-bigram features, same md5-quarter bit votes,
     # same quarter blocking + bucket cap, same bit_count(xor) verify.
     # 64 vote columns are machine-written; every arithmetic step is
@@ -1283,10 +1294,10 @@ def _simhash_portable_oracle(max_hamming: int = 3, max_bucket: int = 1000) -> st
 # quarter blocking, hamming verify — all reproduced by the oracle.
 @register("dedup_simhash_portable", _simhash_portable_oracle())
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cascading_hive_spark.operators.dedup import simhash_portable_pairs
+    from cascading_hive_spark.operators.dedup import simhash_pairs
 
-    return simhash_portable_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3
+    return simhash_pairs(
+        _t(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3, portable=True
     )
 
 
@@ -1773,7 +1784,8 @@ def q_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # IVF probe search — approximate by design (recall property-tested in
-# tests/test_similarity.py); rows-only driver check.
+# tests/test_similarity.py); rows-only driver check. Its ivf_build is
+# the function ann_ivf_portable certifies with portable=True.
 @register("ann_ivf_topk", None)
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import ivf_build, ivf_search
@@ -1823,7 +1835,7 @@ _IVFP_CELLS, _IVFP_NPROBE, _IVFP_K, _IVFP_DIM = 8, 2, 5, 64
 
 
 def _ivf_portable_oracle() -> str:
-    # Replays ivf_build_portable + ivf_knn_join end-to-end: Knuth-hash
+    # Replays ivf_build(portable=True) + ivf_knn_join end-to-end: Knuth-hash
     # seed cells, EXACT decimal(18,6)-sum centroid means (order-
     # independent -> bit-identical doubles cross-engine), nearest-
     # centroid assignment, per-query top-nprobe probe cells, candidate
@@ -1886,20 +1898,19 @@ def _ivf_portable_oracle() -> str:
 
 # PARTIAL-probe IVF with an exact cross-engine twin — the genuinely
 # approximate probe path (cells NOT probed stay unseen), hash-matched:
-# ivf_build_portable makes every build step engine-portable (Knuth-
+# ivf_build(portable=True) makes every build step engine-portable (Knuth-
 # hash seeding, exact decimal-sum centroid means — see its docstring),
 # so the oracle replays index construction AND probe selection, not
 # just the final ranking. Complements ann_ivf_knn_join's full-probe
 # row the way dedup_minhash_portable complements dedup_minhash_lsh.
 @register("ann_ivf_portable", _ivf_portable_oracle())
 def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cascading_hive_spark.operators.similarity import (
-        ivf_build_portable,
-        ivf_knn_join,
-    )
+    from cascading_hive_spark.operators.similarity import ivf_build, ivf_knn_join
 
     e = _t(spark, sf_dir, "embeddings")
-    assignments, centroids = ivf_build_portable(e, n_cells=_IVFP_CELLS)
+    assignments, centroids = ivf_build(
+        e, n_cells=_IVFP_CELLS, refine_iterations=0, portable=True
+    )
     queries_df = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -5995,7 +6006,8 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product-quantization ANN (Jégou et al. 2011): train codebook ->
 # 8-byte codes -> ADC shortlist -> exact re-rank. xxhash64-seeded
 # codebook is engine-specific, so rows-only by design; recall,
-# determinism and codebook health are pinned in tests/test_similarity.py.
+# determinism and codebook health are pinned in tests/test_similarity.py,
+# and its pq_train is the function ann_pq_portable certifies.
 @register("ann_pq_topk", None)
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import (
@@ -6018,7 +6030,7 @@ _PR_DAMPING, _PR_ITERATIONS = 0.85, 5
 
 
 def _pagerank_oracle() -> str:
-    # Unrolls pagerank_portable's fixed iterations as chained CTEs:
+    # Unrolls pagerank(portable=True)'s fixed iterations as chained CTEs:
     # ring+hub edge derivation, then per round the dangling decimal
     # sum, the per-node contribution decimal sum, and the damped
     # update — float literals forced to DOUBLE (DuckDB parses bare
@@ -6074,16 +6086,17 @@ def _pagerank_oracle() -> str:
 
 # Fixed-iteration PageRank run end-to-end with a hash-matched twin —
 # the iterative-algorithm surface (driver loop over declarative steps)
-# finally driver-verifiable: pagerank_portable quantizes the two
+# finally driver-verifiable: pagerank(portable=True) quantizes the two
 # order-dependent accumulations through exact decimal images, and the
 # oracle unrolls the 5 iterations as chained CTEs. Graph: per-nation
 # customer "referral ring" (each customer -> next custkey) plus a hub
 # edge to the nation's min custkey, so hub nodes accumulate rank and
-# the result is non-uniform. The plain-double pagerank stays
-# property-tested against a dense numpy power iteration.
+# the result is non-uniform. The plain-double accumulator
+# (portable=False) is property-tested against a dense numpy power
+# iteration.
 @register("graph_pagerank_hubs", _pagerank_oracle())
 def q_graph_pagerank_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cascading_hive_spark.operators.graph import pagerank_portable
+    from cascading_hive_spark.operators.graph import pagerank
 
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     w_ring = Window.partitionBy("c_nationkey").orderBy("c_custkey")
@@ -6098,8 +6111,8 @@ def q_graph_pagerank_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = ring.unionByName(hub).filter(
         F.col("dst").isNotNull() & (F.col("src") != F.col("dst"))
     )
-    ranks = pagerank_portable(
-        edges, damping=_PR_DAMPING, iterations=_PR_ITERATIONS
+    ranks = pagerank(
+        edges, damping=_PR_DAMPING, iterations=_PR_ITERATIONS, portable=True
     )
     return ranks.select("node", F.round("rank", 9).alias("rank"))
 
@@ -6108,7 +6121,7 @@ _PQP_M, _PQP_K, _PQP_SHORTLIST, _PQP_TOPK = 8, 16, 100, 10
 
 
 def _pq_portable_oracle() -> str:
-    # Replays pq_train_portable + pq_encode + pq_search_rerank:
+    # Replays pq_train(portable=True) + pq_encode + pq_search_rerank:
     # Knuth-hash sample gate, md5-ranked seed codebook (data points —
     # no float accumulation to diverge), per-sub L2 argmin encode,
     # query ADC LUT, sequential-sum ADC shortlist, exact re-rank.
@@ -6183,22 +6196,24 @@ def _pq_portable_oracle() -> str:
 
 
 # Compressed-domain ANN with an exact cross-engine twin: the portable
-# codebook (pq_train_portable — seed data points, engine-portable
+# codebook (pq_train(portable=True) — seed data points, engine-portable
 # hashing) feeds the SAME pq_encode/pq_search_rerank machinery as
 # ann_pq_topk, and the oracle replays codebook -> 8-byte codes -> ADC
-# shortlist -> exact re-rank end-to-end. Complements the rows-only
-# ann_pq_topk (xxhash64 + Lloyd quality path) the way
-# dedup_minhash_portable complements dedup_minhash_lsh.
+# shortlist -> exact re-rank end-to-end. Certifies the pq_train that
+# the rows-only ann_pq_topk (xxhash64 + Lloyd quality path) runs, the
+# way dedup_minhash_portable certifies dedup_minhash_lsh's operator.
 @register("ann_pq_portable", _pq_portable_oracle())
 def q_ann_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import (
         pq_encode,
         pq_search_rerank,
-        pq_train_portable,
+        pq_train,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    centroids = pq_train_portable(emb, m=_PQP_M, k=_PQP_K)
+    centroids = pq_train(
+        emb, m=_PQP_M, k=_PQP_K, refine_iterations=0, portable=True
+    )
     rows = centroids.collect()  # m*k codebook rows — metadata-sized
     codes = pq_encode(emb, centroids, m=_PQP_M)
     q = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
@@ -6307,7 +6322,7 @@ _IVFPQP_CELLS, _IVFPQP_NPROBE = 8, 2
 
 
 def _ivfpq_portable_oracle() -> str:
-    # Replays ivfpq_build_portable + ivfpq_search end-to-end: coarse
+    # Replays ivfpq_build(portable=True) + ivfpq_search end-to-end: coarse
     # decimal-mean cells (cosine assignment), residuals, md5-seeded
     # residual PQ codebook, per-sub argmin codes, L2 cell ranking for
     # the probe set, per-probed-cell ADC LUT on the query residual,
@@ -6434,14 +6449,11 @@ def _ivfpq_portable_oracle() -> str:
 # the portable-ANN family (brute/IVF/PQ/IVF-PQ all hash-verified).
 @register("ann_ivfpq_portable", _ivfpq_portable_oracle())
 def q_ann_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cascading_hive_spark.operators.similarity import (
-        ivfpq_build_portable,
-        ivfpq_search,
-    )
+    from cascading_hive_spark.operators.similarity import ivfpq_build, ivfpq_search
 
     emb = _t(spark, sf_dir, "embeddings")
-    index, coarse, pqc = ivfpq_build_portable(
-        emb, n_cells=_IVFPQP_CELLS, m=_PQP_M, k=_PQP_K
+    index, coarse, pqc = ivfpq_build(
+        emb, n_cells=_IVFPQP_CELLS, m=_PQP_M, k=_PQP_K, portable=True
     )
     q = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     out = ivfpq_search(
@@ -6461,7 +6473,8 @@ def q_ann_ivfpq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-PQ composite ANN: coarse cells + residual PQ codes + per-cell
 # ADC + exact re-rank (the billion-scale index layout). xxhash64-
 # seeded like its parts, so rows-only; recall + cell-pruning pinned
-# in tests/test_similarity.py.
+# in tests/test_similarity.py, and its ivfpq_build is the function
+# ann_ivfpq_portable certifies.
 @register("ann_ivfpq_topk", None)
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import ivfpq_build, ivfpq_search
@@ -6842,13 +6855,13 @@ def q_ann_ivfpq_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from cascading_hive_spark.operators.similarity import (
-        ivfpq_build_portable,
+        ivfpq_build,
         ivfpq_probe_from_disk,
         ivfpq_write,
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    index, coarse, pqc = ivfpq_build_portable(e, n_cells=8, m=8, k=16)
+    index, coarse, pqc = ivfpq_build(e, n_cells=8, m=8, k=16, portable=True)
     path = tempfile.mkdtemp(prefix="spark_graft_ivfpq_")
     ivfpq_write(index, coarse, pqc, path)
     n = e.count()
@@ -10487,7 +10500,7 @@ def q_streaming_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signal pruning curricula rank on. Exact brute-force leg below (the
 # oracle replays the full pairwise ranking); the blocked leg after it
 # is the scale path — IVF-probed candidates only — with a FULL-replay
-# oracle too, because the index build is ivf_build_portable (Knuth-
+# oracle too, because the index build is ivf_build(portable=True) (Knuth-
 # hash seed cells + exact decimal-sum centroid means, bit-identical
 # cross-engine; see ann_ivf_portable).
 _KD_K = 5
@@ -10517,7 +10530,7 @@ def q_embedding_knn_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_density_blocked_oracle() -> str:
-    # Replays ivf_build_portable (same csum/cents/assigned CTEs as
+    # Replays ivf_build(portable=True) (same csum/cents/assigned CTEs as
     # _ivf_portable_oracle) + per-vector top-nprobe probe cells +
     # self-filtered candidate ranking + the density mean.
     dim, nc, npr = _IVFP_DIM, _IVFP_CELLS, _IVFP_NPROBE
@@ -10580,12 +10593,14 @@ def _knn_density_blocked_oracle() -> str:
 @register("embedding_knn_density_blocked", _knn_density_blocked_oracle())
 def q_embedding_knn_density_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import (
-        ivf_build_portable,
+        ivf_build,
         knn_density_blocked,
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    assignments, centroids = ivf_build_portable(e, n_cells=_IVFP_CELLS)
+    assignments, centroids = ivf_build(
+        e, n_cells=_IVFP_CELLS, refine_iterations=0, portable=True
+    )
     return knn_density_blocked(
         assignments, centroids, k=_KD_K, nprobe=_IVFP_NPROBE
     )
@@ -11205,10 +11220,14 @@ _ROWS_ONLY_WINDOW: set[str] = {
 }
 
 # Every rows-only-by-design query paired with its hash-matched
-# oracle-able twin (VERDICT r11 #6). The twin certifies the same
-# operator path with a portable/full-replay oracle; the rows-only
-# member carries the engine-specific variant (xxhash64 signatures,
-# iterative argmax, unbounded fixpoint, driver eigensolve). The
+# oracle-able twin (VERDICT r11 #6). For the dedup and ANN pairs one
+# operator function per family takes a portable flag: the twin runs
+# it with portable=True (md5 or Knuth-hash seeding, exact decimal-
+# image sums) under a full-replay oracle, and the rows-only member
+# runs the same function with portable=False (xxhash64, double
+# means), so it executes the code its twin's oracle certifies. The
+# other pairs carry a different algorithm on the rows-only side
+# (iterative argmax, unbounded fixpoint, driver eigensolve). The
 # hygiene test asserts each pair is never wholly absent from the
 # current window.
 _ROWS_ONLY_TWINS: dict[str, str] = {

@@ -409,8 +409,7 @@ def smoke_tfidf(n: int = 1_000_000) -> None:
 
 def smoke_cc(n_edges: int = 100_000) -> None:
     """connected_components on a dedup-shaped pair graph (many small
-    components) plus one adversarial 10k chain under the star
-    algorithm."""
+    components)."""
     from cascading_hive_spark.operators.graph import connected_components
 
     spark = _spark()
@@ -430,16 +429,6 @@ def smoke_cc(n_edges: int = 100_000) -> None:
     print(json.dumps({"smoke": "cc", "shape": "dedup_clusters",
                       "n_edges": n_edges, "n_components": n_comp,
                       "wall_sec": wall}), flush=True)
-
-    chain = spark.range(0, 10_000).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    ).localCheckpoint()
-    t0 = time.monotonic()
-    labels = connected_components(chain, algorithm="star", max_iterations=25)
-    n_comp = labels.select("component").distinct().count()
-    wall = round(time.monotonic() - t0, 1)
-    print(json.dumps({"smoke": "cc", "shape": "chain_10k_star",
-                      "n_components": n_comp, "wall_sec": wall}), flush=True)
 
 
 def smoke_cdc(n: int = 10_000_000, change_rate: int = 20) -> None:
@@ -488,7 +477,8 @@ def smoke_pagerank(n_edges: int = 10_000_000, iterations: int = 5) -> None:
     nodes, each node links to its successor plus a Zipf-skewed hub
     (xxhash-picked among the lowest ~1000 ids), so hub in-degrees are
     heavily skewed — the shape that stresses the per-iteration
-    groupBy(dst) shuffle. Cost must be linear in edges x iterations."""
+    groupBy(dst) shuffle. Cost must be linear in edges x iterations.
+    Runs the decimal-image accumulator graph_pagerank_hubs uses."""
     from cascading_hive_spark.operators.graph import pagerank
 
     spark = _spark()
@@ -512,7 +502,7 @@ def smoke_pagerank(n_edges: int = 10_000_000, iterations: int = 5) -> None:
         .localCheckpoint()
     )
     t0 = time.monotonic()
-    ranks = pagerank(edges, iterations=iterations)
+    ranks = pagerank(edges, iterations=iterations, portable=True)
     top = ranks.orderBy(F.col("rank").desc()).limit(5).collect()
     wall = round(time.monotonic() - t0, 1)
     print(json.dumps({"smoke": "pagerank", "n_edges": n_edges,

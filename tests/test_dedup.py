@@ -73,7 +73,10 @@ def test_minhash_portable_no_fp_and_recall(spark, docs):
     values exact."""
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_portable_pairs(docs, "doc_id", "text", threshold=0.8).collect()
+        for r in D.minhash_lsh_pairs(
+            docs, "doc_id", "text", num_perm=16, bands=8, shingle_n=3,
+            threshold=0.8, portable=True,
+        ).collect()
     }
     base = docs.select(
         F.col("doc_id").alias("_id"), D.char_ngrams(F.col("text"), 3).alias("g")
@@ -400,7 +403,9 @@ def test_simhash_portable_signature_ground_truth(spark, docs):
 
 
 def test_simhash_portable_no_fp_and_near_dup_recall(spark, docs):
-    out = D.simhash_portable_pairs(docs, "doc_id", "text", max_hamming=3).collect()
+    out = D.simhash_pairs(
+        docs, "doc_id", "text", max_hamming=3, portable=True
+    ).collect()
     assert all(r.hamming <= 3 for r in out)
     assert all(r.id_a < r.id_b for r in out)
     # identical-text planted pairs must land at hamming 0

@@ -195,13 +195,13 @@ def test_table_diff_empty_sides(spark):
 def test_pagerank_portable_empty_edges(spark):
     import pytest
 
-    from cascading_hive_spark.operators.graph import pagerank_portable
+    from cascading_hive_spark.operators.graph import pagerank
 
     e = spark.createDataFrame([], "src long, dst long")
     # no nodes -> empty rank table, not a crash
-    assert pagerank_portable(e, iterations=1).count() == 0
+    assert pagerank(e, iterations=1, portable=True).count() == 0
     with pytest.raises(ValueError):
-        pagerank_portable(e, iterations=0)
+        pagerank(e, iterations=0, portable=True)
 
 
 def test_ivf_build_portable_empty(spark):
@@ -213,7 +213,7 @@ def test_ivf_build_portable_empty(spark):
     import pytest
 
     with pytest.raises(Exception):
-        S.ivf_build_portable(e, n_cells=4)
+        S.ivf_build(e, n_cells=4, refine_iterations=0, portable=True)
 
 
 def test_partial_agg_merge_empty_slices(spark):
@@ -250,12 +250,12 @@ def test_ivfpq_disk_probe_missing_vectors_shortlist_only(spark, tmp_path):
     """Disk probe without a re-rank table returns the ADC shortlist;
     build from a tiny corpus to keep the index path exercised."""
     from cascading_hive_spark.operators.similarity import (
-        ivfpq_build_portable, ivfpq_probe_from_disk, ivfpq_write,
+        ivfpq_build, ivfpq_probe_from_disk, ivfpq_write,
     )
     from cascading_hive_spark.sources.synthetic import synthetic_embeddings
 
     emb = synthetic_embeddings(spark, n=64, dim=64, n_clusters=4)
-    index, coarse, pqc = ivfpq_build_portable(emb, n_cells=4, m=8, k=4)
+    index, coarse, pqc = ivfpq_build(emb, n_cells=4, m=8, k=4, portable=True)
     path = str(tmp_path / "tiny_ivfpq")
     ivfpq_write(index, coarse, pqc, path)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]

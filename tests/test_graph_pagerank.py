@@ -69,21 +69,21 @@ def test_pagerank_rejects_bad_iterations(spark):
 
 
 def test_pagerank_portable_matches_plain_and_is_deterministic(spark):
-    """pagerank_portable's 1e-12 per-term quantization must stay far
-    below fixed-iteration truncation error vs the plain-double path,
-    and its rank vector must be bit-identical under repartitioning
-    (the property its unrolled DuckDB twin relies on)."""
-    from cascading_hive_spark.operators.graph import pagerank_portable
-
+    """The portable accumulator's 1e-12 per-term quantization must
+    stay far below fixed-iteration truncation error vs the plain-double
+    path, and its rank vector must be bit-identical under
+    repartitioning (the property its unrolled DuckDB twin relies on)."""
     rng = np.random.default_rng(7)
     edges = list({(int(rng.integers(0, 25)), int(rng.integers(0, 25))) for _ in range(90)})
     edges = [(u, v) for u, v in edges if u != v]
     df = spark.createDataFrame(edges, "src long, dst long")
     plain = {r.node: r.rank for r in pagerank(df, iterations=5).collect()}
-    port1 = {r.node: r.rank for r in pagerank_portable(df, iterations=5).collect()}
+    port1 = {
+        r.node: r.rank for r in pagerank(df, iterations=5, portable=True).collect()
+    }
     port2 = {
         r.node: r.rank
-        for r in pagerank_portable(df.repartition(6), iterations=5).collect()
+        for r in pagerank(df.repartition(6), iterations=5, portable=True).collect()
     }
     assert port1 == port2  # bit-identical, not approximately
     assert set(plain) == set(port1)

@@ -200,40 +200,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
     assert {r.component for r in out} == {0}
 
 
-def test_star_components_converge_on_long_chain(spark):
-    """A 10k-vertex chain (diameter 10k) exhausts min-label
-    propagation's round budget but converges in O(log n) large/small-
-    star alternations — the web-scale-graph path (VERDICT r2 #4)."""
-    from cascading_hive_spark.operators.graph import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10_000)], "id_a long, id_b long"
-    ).repartition(8)
-    out = connected_components(chain, algorithm="star", max_iterations=20)
-    rows = out.collect()
-    assert len(rows) == 10_001
-    assert {r.component for r in rows} == {0}
-
-
-def test_star_components_agree_with_label_propagation(spark):
-    """Same labels as the default algorithm on a multi-component
-    random graph (including a 2-cycle and an isolated pair)."""
-    import random
-
-    from cascading_hive_spark.operators.graph import connected_components
-
-    rng = random.Random(9)
-    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
-    edges += [(500, 501), (600, 600)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    label = {(r.id, r.component) for r in connected_components(df).collect()}
-    star = {
-        (r.id, r.component)
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert star == label
-
-
 def test_connected_components_rejects_nonpositive_rounds(spark):
     """max_iterations <= 0 must raise a meaningful ValueError, not a
     NameError from the never-entered loop (ADVICE r2)."""

@@ -16,9 +16,12 @@ def _names():
 @pytest.mark.parametrize("name", _names())
 def test_query_matches_oracle(spark, sf_dir, name):
     r = check_query(spark, name, sf_dir)
-    assert r.ok, f"{name}: {r.detail}\n" + "\n".join(r.examples)
-    if r.detail == "rows-only (no oracle)":
+    if Q._REGISTRY[name][1] is None:
+        # rows-only: nothing to compare, so the result must say so
+        assert r.status == "unchecked" and not r.ok, r
         assert r.spark_rows >= 0
+    else:
+        assert r.ok, f"{name}: {r.detail}\n" + "\n".join(r.examples)
 
 
 def test_entry_smoke(spark):

@@ -80,7 +80,7 @@ def test_minhash_never_shuffles_shingles(spark, sf_dir):
     # must carry only thin rows — the corpus shingle arrays may move
     # only AFTER the candidate-id semi-filter (verification step)
     for line in plan.splitlines():
-        if "Exchange hashpartitioning(band" in line and "_sh" in line:
+        if "Exchange hashpartitioning(band" in line and "_g#" in line:
             raise AssertionError(f"shingle array in the bucket shuffle: {line}")
 
 

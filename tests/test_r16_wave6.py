@@ -61,10 +61,10 @@ def test_ivfpq_index_lineage_is_checkpointed(spark, sf_dir):
     (pq_train's probes, pq_encode, the index join); the checkpoint
     boundary must appear in the index plan so the coarse E-step runs
     once, not per action (ann_ivfpq_topk 10.3 -> 6.9s)."""
-    from cascading_hive_spark.operators.similarity import ivfpq_build_portable
+    from cascading_hive_spark.operators.similarity import ivfpq_build
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    index, coarse, pqc = ivfpq_build_portable(emb, n_cells=4, m=4, k=4)
+    index, coarse, pqc = ivfpq_build(emb, n_cells=4, m=4, k=4, portable=True)
     plan = physical_plan(index)
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan
 

@@ -107,12 +107,12 @@ def test_ivf_knn_join_full_probe_equals_brute_force(spark, emb):
 
 
 def test_ivf_build_portable_deterministic_and_full_probe_exact(spark, emb):
-    """ivf_build_portable's centroids are EXACT decimal-sum means: the
+    """The portable ivf_build's centroids are EXACT decimal-sum means: the
     same doubles under any partitioning (a float avg is partition-
     order-dependent — the property the portable twin needs); and full
     probe still degenerates to brute force."""
-    a1, c1 = S.ivf_build_portable(emb, n_cells=8)
-    a2, c2 = S.ivf_build_portable(emb.repartition(7), n_cells=8)
+    a1, c1 = S.ivf_build(emb, n_cells=8, refine_iterations=0, portable=True)
+    a2, c2 = S.ivf_build(emb.repartition(7), n_cells=8, refine_iterations=0, portable=True)
     cents1 = {r.cell: list(r.centroid) for r in c1.collect()}
     cents2 = {r.cell: list(r.centroid) for r in c2.collect()}
     assert cents1 == cents2  # bit-identical, not approximately equal
@@ -136,8 +136,8 @@ def test_ivf_build_portable_deterministic_and_full_probe_exact(spark, emb):
 def test_pq_train_portable_deterministic_and_composes(spark, emb):
     """Portable PQ codebook: partitioning-independent (seed points,
     no float accumulation) and drop-in for pq_encode/pq_search_rerank."""
-    c1 = S.pq_train_portable(emb, m=8, k=16)
-    c2 = S.pq_train_portable(emb.repartition(5), m=8, k=16)
+    c1 = S.pq_train(emb, m=8, k=16, refine_iterations=0, portable=True)
+    c2 = S.pq_train(emb.repartition(5), m=8, k=16, refine_iterations=0, portable=True)
     rows1 = {(r.sub, r.cell): list(r.centroid) for r in c1.collect()}
     rows2 = {(r.sub, r.cell): list(r.centroid) for r in c2.collect()}
     assert rows1 == rows2  # bit-identical
@@ -154,8 +154,8 @@ def test_pq_train_portable_deterministic_and_composes(spark, emb):
 def test_ivfpq_build_portable_deterministic(spark, emb):
     """Portable IVF-PQ: index (cell + codes) identical under
     repartitioning — the property the end-to-end DuckDB twin needs."""
-    i1, c1, p1 = S.ivfpq_build_portable(emb, n_cells=8, m=8, k=16)
-    i2, c2, p2 = S.ivfpq_build_portable(emb.repartition(5), n_cells=8, m=8, k=16)
+    i1, c1, p1 = S.ivfpq_build(emb, n_cells=8, m=8, k=16, portable=True)
+    i2, c2, p2 = S.ivfpq_build(emb.repartition(5), n_cells=8, m=8, k=16, portable=True)
     idx1 = {r.vec_id: (r.cell, list(r.codes)) for r in i1.collect()}
     idx2 = {r.vec_id: (r.cell, list(r.codes)) for r in i2.collect()}
     assert idx1 == idx2
@@ -421,7 +421,7 @@ def test_ivfpq_disk_full_probe_equals_brute_force(spark, emb, tmp_path):
     reproduce brute-force L2 top-k bit-for-bit — the codes only pick
     the shortlist, and the shortlist is everything."""
     path = str(tmp_path / "ivfpq_idx_full")
-    index, coarse, pqc = S.ivfpq_build_portable(emb, n_cells=8, m=8, k=16)
+    index, coarse, pqc = S.ivfpq_build(emb, n_cells=8, m=8, k=16, portable=True)
     S.ivfpq_write(index, coarse, pqc, path)
     n = emb.count()
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
@@ -472,7 +472,7 @@ def test_ivfpq_append_codes_layout_and_probe(spark, emb, tmp_path):
     the from-disk probe (exact re-rank) finds an appended vector."""
     path = str(tmp_path / "ivfpq_append_idx")
     base = emb.filter(F.col("vec_id") >= 10)
-    index, coarse, pqc = S.ivfpq_build_portable(base, n_cells=8, m=8, k=16)
+    index, coarse, pqc = S.ivfpq_build(base, n_cells=8, m=8, k=16, portable=True)
     S.ivfpq_write(index, coarse, pqc, path)
     new = emb.filter(F.col("vec_id") < 10)
     S.ivfpq_append(spark, path, new, m=8)
@@ -503,7 +503,7 @@ def test_ivf_append_empty_increment_is_noop(spark, emb, tmp_path):
 
 def test_ivfpq_append_empty_increment_is_noop(spark, emb, tmp_path):
     path = str(tmp_path / "ivfpq_empty_idx")
-    index, coarse, pqc = S.ivfpq_build_portable(emb, n_cells=8, m=8, k=16)
+    index, coarse, pqc = S.ivfpq_build(emb, n_cells=8, m=8, k=16, portable=True)
     S.ivfpq_write(index, coarse, pqc, path)
     before = spark.read.parquet(f"{path}/codes").count()
     S.ivfpq_append(spark, path, emb.filter(F.col("vec_id") < 0), m=8)
@@ -740,7 +740,7 @@ def test_knn_density_full_probe_equals_exact(spark, emb):
     the densities must match the exact path bit-for-bit."""
     sub = emb.filter(F.col("vec_id") < 120)
     exact = {r.vec_id: r.knn_density for r in S.knn_density(sub, k=5).collect()}
-    assignments, centroids = S.ivf_build_portable(sub, n_cells=4)
+    assignments, centroids = S.ivf_build(sub, n_cells=4, refine_iterations=0, portable=True)
     blocked = {
         r.vec_id: r.knn_density
         for r in S.knn_density_blocked(
@@ -862,7 +862,7 @@ def test_knn_density_blocked_tie_heavy_full_probe(spark):
     neighbor ties at cos=1.0) under FULL probe must equal the exact
     path bit-for-bit."""
     from cascading_hive_spark.operators.similarity import (
-        ivf_build_portable,
+        ivf_build,
         knn_density,
         knn_density_blocked,
     )
@@ -870,7 +870,7 @@ def test_knn_density_blocked_tie_heavy_full_probe(spark):
     rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(30)]  # all tied
     rows += [(100 + i, [float(i + 1), 1.0, 0.5, 2.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assignments, centroids = ivf_build_portable(df, n_cells=2)
+    assignments, centroids = ivf_build(df, n_cells=2, refine_iterations=0, portable=True)
     blocked = {
         (r.vec_id, r.knn_density, r.n_neighbors)
         for r in knn_density_blocked(
