@@ -333,7 +333,7 @@ def triangle_count(
     # pipeline (scan -> windows -> distinct -> degree agg -> joins):
     # it executed once per consumer. Materialize the edge-scale
     # (a, b, db) rows once — the k_core/pagerank per-round discipline.
-    # Same-JVM A/B (scripts/ab_tri_r16.py): 0.93x on a quiet host
+    # Same-JVM A/B (ab_tri_r16.py @ ff3222f): 0.93x on a quiet host
     # (sf0.1's orientation subtree is small, so the local win is
     # modest); kept for the 3x-fewer executions of the scan->window->
     # distinct->degree->join pipeline, which is corpus-scale work on a

@@ -67,21 +67,64 @@ def test_topk_uses_take_ordered(spark, sf_dir):
 
 def test_minhash_never_shuffles_shingles(spark, sf_dir):
     """The LSH bucket shuffle must carry only (id, band, bhash) — the
-    shingle arrays stay scan-side (see operators/dedup.py scale notes).
-    """
-    from cascading_hive_spark.operators.dedup import minhash_lsh_pairs
+    gram arrays stay scan-side (see operators/dedup.py scale notes).
+
+    The returned DataFrame's plan starts at the candidate
+    localCheckpoint, so the plan checked is the bucket aggregate before
+    that cut, over ``_minhash_band_rows`` of both hash families, with
+    every band-row column besides (band, bhash) collected, as bucket
+    members are. A formatted plan lists each Exchange's columns under
+    ``Input [..]``; a partial aggregate ships its buffer under another
+    name, so the aggregate reading the exchange is checked as well.
+    (The round-robin ``spread`` exchange is input spreading, not a
+    hash-keyed shuffle.)"""
+    import re
+
+    from cascading_hive_spark.operators.dedup import (
+        _id_long,
+        _minhash_band_rows,
+        char_ngrams,
+        shingles_from_tokens,
+        spread,
+        tokenized,
+    )
+    from cascading_hive_spark.plans.explain import formatted_plan
     from cascading_hive_spark.tables import load_table
 
-    df = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text"
-    )
-    plan = df._jdf.queryExecution().toString()
-    # the bucket-building exchange (hashpartitioning on band/bhash)
-    # must carry only thin rows — the corpus shingle arrays may move
-    # only AFTER the candidate-id semi-filter (verification step)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning(band" in line and "_g#" in line:
-            raise AssertionError(f"shingle array in the bucket shuffle: {line}")
+    docs = load_table(spark, sf_dir, "documents")
+    # the two ``base`` gram tables of minhash_lsh_pairs
+    bases = {
+        True: spread(
+            docs.filter(F.col("text").isNotNull()).select(
+                _id_long(docs, "doc_id").alias("_id"),
+                char_ngrams(F.col("text"), 2).alias("_g"),
+            )
+        ),
+        False: tokenized(docs, "doc_id", "text").select(
+            "_id", shingles_from_tokens(F.col("_toks"), 2).alias("_g")
+        ),
+    }
+    grams = re.compile(r"\b(_g|_gram|_hp|_hs)#")
+    for portable, base in bases.items():
+        band_rows = _minhash_band_rows(base, ["_id"], 64, 16, portable)
+        members = [c for c in band_rows.columns if c not in ("band", "bhash")]
+        buckets = band_rows.groupBy("band", "bhash").agg(
+            F.collect_list(F.struct(*members)).alias("_ids")
+        )
+        nodes = formatted_plan(buckets).split("\n\n")
+        shuffles = [
+            i for i, n in enumerate(nodes)
+            if re.match(r"\(\d+\) Exchange", n) and "hashpartitioning(" in n
+        ]
+        assert shuffles, f"no hash exchange in the bucket plan (portable={portable})"
+        for i in shuffles:
+            carried = re.search(r"^Input \[\d+\]: \[(.*)\]$", nodes[i], re.M)[1]
+            reader = re.search(r"^Functions \[\d+\]: \[(.*)\]$", nodes[i + 1], re.M)
+            for text in (carried, reader[1] if reader else ""):
+                assert not grams.search(text), (
+                    f"gram column in the bucket shuffle (portable={portable}):\n"
+                    f"{nodes[i]}\n{nodes[i + 1]}"
+                )
 
 
 def test_asof_join_single_shuffle_shape(spark, sf_dir):

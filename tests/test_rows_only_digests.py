@@ -1,13 +1,15 @@
-"""Pinned output digests for the rows-only queries whose operators
-share one implementation with an oracle-checked twin (``portable``
-selects the hash family and accumulator). No oracle compares these
-outputs, so a drift in the shared operator code that only shows on
-the engine-hash path would otherwise pass unseen.
+"""Pinned output digests for the eight rows-only queries
+(``queries._ROWS_ONLY_TWINS``). No oracle compares these outputs, so a
+drift in the code under them (the engine-hash path of an operator
+folded with its oracle-checked portable twin, say) would otherwise
+pass unseen.
 
 Digest form (the one perfbench pins): ``count(*)`` plus the
 DECIMAL(38,0) sum of ``xxhash64`` over the columns in name order.
-The digests were captured before the twins were folded and read the
-same at 2, 4 and 8 local cores, so no double column needs rounding.
+Every digest reads the same at 2, 4 and 8 local cores, so no double
+column needs rounding here (``pca_project`` rounds its components
+itself). The sf0.1 ``graph_kcore_customers`` digest is the one in
+``perfbench/digests.json``.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ _PINNED = {
         "ann_ivf_topk": [10, 8434486608802159536],
         "ann_pq_topk": [10, 1212235627119638031],
         "ann_ivfpq_topk": [10, 7603651922191311252],
+        "bpe_merges": [8, 6046040814071125686],
+        "graph_kcore_customers": [150, 5594915963121023992],
+        "embedding_pca_project": [500, 181866243913696451942],
     },
     "sf0.1": {
         "dedup_minhash_lsh": [256, 184669462168176901497],
@@ -33,6 +38,9 @@ _PINNED = {
         "ann_ivf_topk": [10, 2088896991250550348],
         "ann_pq_topk": [10, 2962091055070248362],
         "ann_ivfpq_topk": [10, -5863764994608012012],
+        "bpe_merges": [8, 6633831992614648245],
+        "graph_kcore_customers": [150, 5594915963121023992],
+        "embedding_pca_project": [2000, 175695831678084966981],
     },
 }
 

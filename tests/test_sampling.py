@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -409,3 +411,134 @@ def test_annealed_epoch_mix_semantics(spark, docs):
         annealed_epoch_mix(docs, "doc_id", "source", alphas=[1.5])
     with pytest.raises(ValueError, match="non-empty"):
         annealed_epoch_mix(docs, "doc_id", "source", alphas=[])
+
+
+# Property tests (hypothesis): the temperature-mix rate formula and
+# membership, and the leakage-safe split's cluster integrity, each
+# replayed by an independent pure-Python reference on randomized inputs.
+
+
+def _py_bucket_ppm(i: int) -> int:
+    return (i % _MOD) * _MULT % _MOD % 1_000_000
+
+
+def _py_bucket_permille(i: int) -> int:
+    return (i % 1000) * (_MULT % 1000) % 1000
+
+
+def _py_temperature_rates(counts: dict[str, int], alpha: float, budget: float):
+    wall = sum(n**alpha for n in counts.values())
+    return {
+        s: min(
+            1_000_000,
+            int(math.floor(1_000_000.0 * budget * (n**alpha / wall) / n + 0.5)),
+        )
+        for s, n in counts.items()
+    }
+
+
+def test_temperature_mix_matches_python_replay(spark):
+    """temperature_mix == a pure-Python replay of the rate formula AND
+    the per-id ppm-hash membership, on random source layouts and
+    alphas — exact equality, ids included, not just counts."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.sampling import temperature_mix
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        st.lists(
+            st.integers(min_value=1, max_value=60), min_size=1, max_size=5
+        ),
+        st.sampled_from([0.0, 0.2, 0.3, 0.5, 0.7, 1.0]),
+        st.integers(min_value=0, max_value=2**40),
+    )
+    def check(sizes, alpha, id_base):
+        rows, counts = [], {}
+        nid = id_base
+        for si, size in enumerate(sizes):
+            src = f"s{si}"
+            counts[src] = size
+            for _ in range(size):
+                rows.append((nid, src))
+                nid += 7919  # spread ids; primes avoid bucket artifacts
+        df = spark.createDataFrame(rows, "doc_id long, source string")
+        n = len(rows)
+        budget = max(1, n // 2)
+        got = {
+            (r.doc_id, r.source, r.mix_rate_ppm)
+            for r in temperature_mix(
+                df, "doc_id", "source", alpha=alpha, budget=budget
+            ).collect()
+        }
+        rates = _py_temperature_rates(counts, alpha, float(budget))
+        want = {
+            (i, s, rates[s]) for i, s in rows if _py_bucket_ppm(i) < rates[s]
+        }
+        assert got == want, (sizes, alpha, sorted(got) [:5], sorted(want)[:5])
+
+    check()
+
+
+def _py_components(pairs):
+    """Union-find min-label components."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_leakage_safe_split_matches_union_find(spark):
+    """leakage_safe_split == pure-Python union-find + hash split on
+    random pair graphs over a random id universe: cluster keys are the
+    component min, singletons their own id, and the split is the
+    permille hash of the CLUSTER key for every member."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.sampling import leakage_safe_split
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        st.integers(min_value=3, max_value=60),
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=59),
+                st.integers(min_value=0, max_value=59),
+            ),
+            max_size=40,
+        ),
+        st.integers(min_value=0, max_value=1000),
+    )
+    def check(n_ids, raw_pairs, test_permille):
+        ids = list(range(0, n_ids * 13, 13))  # non-contiguous universe
+        pairs = [
+            (ids[a % n_ids], ids[b % n_ids])
+            for a, b in raw_pairs
+            if ids[a % n_ids] != ids[b % n_ids]
+        ]
+        docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        pdf = spark.createDataFrame(
+            pairs or [(None, None)], "id_a long, id_b long"
+        ).dropna()
+        out = leakage_safe_split(
+            docs, "doc_id", pdf, test_permille=test_permille
+        )
+        got = {r.doc_id: (r.cluster_key, r.split) for r in out.collect()}
+        comp = _py_components(pairs)
+        for i in ids:
+            key = comp.get(i, i)
+            split = "test" if _py_bucket_permille(key) < test_permille else "train"
+            assert got[i] == (key, split), (i, got[i], (key, split), pairs)
+
+    check()
