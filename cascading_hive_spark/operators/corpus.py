@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cascading_hive_spark.operators.sampling import hash_order
+from cascading_hive_spark.session import materialize
 
 # Gopher-style stopword markers: the rule is "document mentions >= 2
 # of these", a cheap English-prose signal. Deliberately tiny.
@@ -188,13 +189,12 @@ def bigram_lm_score(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     floor), which this operator's add-one floor already makes exact.
     """
     doc_bigrams = _doc_bigrams(docs, id_col, text_col)
-    # c2 is vocabulary-sized: checkpoint it and DERIVE c1 (sum of
+    # c2 is vocabulary-sized: cut it and DERIVE c1 (sum of
     # bigram counts per context == the context count, same bigints) —
     # one corpus bigram explode instead of two (guide §2.4/§5)
-    c2 = (
-        doc_bigrams.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
+    c2 = materialize(
+        doc_bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")),
+        "bigram_lm_score: bigram counts",
     )
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = c1.agg(F.count(F.lit(1)).alias("v"))
@@ -243,14 +243,13 @@ def lm_perplexity_buckets(
     by definition (clean text), so c2/c1 broadcast.
     """
     tb = _doc_bigrams(train, id_col, text_col)
-    # c2 is vocabulary-sized; checkpoint it and DERIVE c1 from it
+    # c2 is vocabulary-sized; cut it and DERIVE c1 from it
     # (sum of bigram counts per context w1 == the context count, the
     # same bigints) — the reference-corpus explode then runs ONCE
     # instead of once per count table (guide §2.4/§5)
-    c2 = (
-        tb.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
+    c2 = materialize(
+        tb.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")),
+        "lm_perplexity_buckets: bigram counts",
     )
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = c1.agg(F.count(F.lit(1)).alias("v"))
@@ -271,7 +270,12 @@ def lm_perplexity_buckets(
     # aggregated tables and sort-merge-joins, shuffling every scored
     # bigram twice (guide §3.1 — the big side is never shuffled by a
     # broadcast join). Join results are identical either way.
-    per_doc = (
+    # per_doc is one skinny row per doc, read TWICE (tercile edges + the
+    # bucketing map) by NON-IDENTICAL subtrees ReusedExchange cannot
+    # dedup: without the cut the whole cross-corpus scoring pass
+    # executes once per consumer (guide §5 — measured 18 parquet scans
+    # of `documents` in one plan)
+    per_doc = materialize(
         sb.join(F.broadcast(c2), ["w1", "w2"], "left")
         .join(F.broadcast(c1), "w1", "left")
         .crossJoin(F.broadcast(vocab))
@@ -283,13 +287,8 @@ def lm_perplexity_buckets(
                 / F.count(F.lit(1)).cast("double")
             ).alias("_nll"),
         )
-        .withColumn("_micro", F.round(F.col("_nll") * 1e6, 0).cast("bigint"))
-        # one skinny row per doc, read TWICE (tercile edges + the
-        # bucketing map) by NON-IDENTICAL subtrees ReusedExchange
-        # cannot dedup: without the cut the whole cross-corpus
-        # scoring pass executes once per consumer (guide §5 —
-        # measured 18 parquet scans of `documents` in one plan)
-        .localCheckpoint(eager=False)
+        .withColumn("_micro", F.round(F.col("_nll") * 1e6, 0).cast("bigint")),
+        "lm_perplexity_buckets: per-doc nll",
     )
     edges = per_doc.agg(
         F.percentile(F.col("_micro"), F.lit([1.0 / 3.0, 2.0 / 3.0])).alias("_t")
@@ -398,9 +397,9 @@ def bpe_train(
          Java regex resumes after each match, giving exactly BPE's
          greedy non-overlapping left-to-right application).
 
-    localCheckpoint truncates the per-round lineage (graph.py's
-    pagerank pattern). Returns the merge list (driver-sized: K rows);
-    ``bpe_merges_df``/``bpe_segment`` wrap it back into DataFrames.
+    A cut per round truncates the lineage. Returns the merge list
+    (driver-sized: K rows); ``bpe_merges_df``/``bpe_segment`` wrap it
+    back into DataFrames.
     """
     words = (
         docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
@@ -415,8 +414,7 @@ def bpe_train(
         F.regexp_replace(F.col("w"), "(.)", "$1 "),
         F.lit("</w> "),
     )
-    # lazy: the first merge round's pair-count collect materializes it
-    words = words.select("cnt", seg.alias("seg")).localCheckpoint(eager=False)
+    words = materialize(words.select("cnt", seg.alias("seg")), "bpe_train: words")
 
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -442,12 +440,9 @@ def bpe_train(
             break
         a, b, c = best[0]["a"], best[0]["b"], int(best[0]["c"])
         merges.append((rank, a, b, c))
-        words = words.select(
-            "cnt",
-            F.regexp_replace("seg", _merge_pattern(a, b), _repl_quote(a + b)).alias(
-                "seg"
-            ),
-        ).localCheckpoint(eager=False)
+        merged = F.regexp_replace("seg", _merge_pattern(a, b), _repl_quote(a + b))
+        words = words.select("cnt", merged.alias("seg"))
+        words = materialize(words, f"bpe_train: words iter {rank + 1}")
     return merges
 
 
@@ -586,14 +581,14 @@ def bm25_topk(
                 ],
             )
 
-        per = (
+        per = materialize(
             docs.select(F.col(id_col), F.aggregate(words, zero, _step).alias("_f"))
             .select(
                 id_col,
                 F.col("_f.dl").alias("dl"),
                 *[F.col(f"_f.t{i}").alias(f"t{i}") for i in range(nq)],
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "bm25_topk: per-doc term counts",
         )
         gl = per.agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cascading_hive_spark.session import materialize
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
@@ -295,9 +297,10 @@ def _jaccard_verify(
        (range-derived inputs estimate near-zero), and at corpus scale
        it fits nowhere (measured OOM at 500k docs).
     The candidate gram set feeds both join sides, so it is cut too;
-    both checkpoints are candidate-scale, never corpus-scale."""
+    both cuts are candidate-scale, never corpus-scale."""
     cand_ids = cand.select(F.explode(F.array(a, b)).alias("_id"))
-    g_cand = base.join(cand_ids, "_id", "left_semi").localCheckpoint(eager=False)
+    g_cand = base.join(cand_ids, "_id", "left_semi")
+    g_cand = materialize(g_cand, "minhash verify: candidate grams")
     g_a = g_cand.select(F.col("_id").alias(a), F.col("_g").alias("g_a"))
     g_b = g_cand.select(F.col("_id").alias(b), F.col("_g").alias("g_b"))
     verified = (
@@ -338,12 +341,13 @@ def minhash_lsh_pairs(
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
     if portable:
+        # spread the text, then n-gram: the round-robin exchange ships
+        # text bytes, and the n-gramming runs in the spread tasks
         base = spread(
             df.filter(F.col(text_col).isNotNull()).select(
-                _id_long(df, id_col).alias("_id"),
-                char_ngrams(F.col(text_col), shingle_n).alias("_g"),
+                _id_long(df, id_col).alias("_id"), F.col(text_col).alias("_text")
             )
-        )
+        ).select("_id", char_ngrams(F.col("_text"), shingle_n).alias("_g"))
     else:
         # NOTE: no size(_g) filter — shingles_from_tokens always yields
         # a non-empty array, and a predicate on a computed alias gets
@@ -379,12 +383,11 @@ def minhash_lsh_pairs(
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b")
-    # candidate pairs are REFERENCED TWICE in the verify and the
-    # shingle subtree three times — without a cut, Spark re-executes
-    # the whole tokenize+shingle+hash scan and the bucket shuffle per
-    # consumer (the r15 funnel lineage-re-execution lesson; guide §5
-    # localCheckpoint as the cheap lineage cut).
-    cand = pairs.dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=False)
+    # the verify reads the candidate pairs twice and the shingle subtree
+    # three times; uncut, the tokenize+shingle+hash scan and the bucket
+    # shuffle re-run per consumer (r15).
+    cand = pairs.dropDuplicates(["id_a", "id_b"])
+    cand = materialize(cand, "minhash_lsh_pairs: candidates")
     return _jaccard_verify(cand, base, "id_a", "id_b", threshold)
 
 
@@ -436,8 +439,9 @@ def minhash_incremental_pairs(
             )
         )
     )
-    base = spread(
-        tagged.select("_id", "_side", char_ngrams(F.col("_text"), ngram_n).alias("_g"))
+    # spread the text, then n-gram (as in minhash_lsh_pairs)
+    base = spread(tagged).select(
+        "_id", "_side", char_ngrams(F.col("_text"), ngram_n).alias("_g")
     )
     band_rows = _minhash_band_rows(
         base, ["_id", "_side"], num_perm, bands, portable=True
@@ -495,11 +499,11 @@ def minhash_incremental_pairs(
             )
         ).alias("p")
     )
-    cand = (
+    cand = materialize(
         new_new.unionByName(new_base)
         .select("p.new_id", "p.match_id", "p.match_side")
-        .dropDuplicates(["new_id", "match_id"])
-        .localCheckpoint(eager=False)
+        .dropDuplicates(["new_id", "match_id"]),
+        "minhash_incremental_pairs: candidates",
     )
     return _jaccard_verify(cand, base.drop("_side"), "new_id", "match_id", threshold)
 
@@ -882,12 +886,11 @@ def embedding_lsh_pairs(
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b")
-    # same lineage cut as minhash_lsh_pairs: cand and the candidate
-    # vectors are each consumed twice below — checkpoint both
-    # (candidate-scale, never corpus-scale) so the band/bucket
-    # pipeline and the corpus scan run ONCE instead of three times
-    # (guide §5 localCheckpoint as the cheap lineage cut)
-    cand = pairs.dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=False)
+    # as in minhash_lsh_pairs, cand and the candidate vectors are each
+    # read twice below; both cuts are candidate-scale, and they run the
+    # band/bucket pipeline and the corpus scan once instead of three times
+    cand = pairs.dropDuplicates(["id_a", "id_b"])
+    cand = materialize(cand, "embedding_lsh_pairs: candidates")
 
     # Exact-cosine verification on candidates only; same two-step
     # semi-join shape as minhash (corpus vectors never broadcast or
@@ -895,10 +898,10 @@ def embedding_lsh_pairs(
     from cascading_hive_spark.operators.similarity import dot as _dot, norm as _norm
 
     cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias("_id"))
-    v_cand = (
+    v_cand = materialize(
         base.join(cand_ids, "_id", "left_semi")
-        .select("_id", F.col("_v"), _norm(F.col("_v")).alias("_n"))
-        .localCheckpoint(eager=False)
+        .select("_id", F.col("_v"), _norm(F.col("_v")).alias("_n")),
+        "embedding_lsh_pairs: candidate vectors",
     )
     v_a = v_cand.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("na")
@@ -1561,15 +1564,11 @@ def tfidf_cosine_pairs(
     # EXCHANGE-bound at sf0.1 (eight shuffle stages downstream; the
     # two single-task tokenize stages run concurrently inside the
     # job), so the extra round-robin exchange is pure overhead.
-    # NOTE (r16): lineage cuts (localCheckpoint on tf/w/norms/rare)
-    # were tried here and REVERTED — measured 1.04-1.30x SLOWER.
-    # The multi-consumer subtrees (tf under dft+w, w under norms and
-    # both dot-product sides, rare under its self-join) all sit
-    # behind IDENTICAL exchanges, which Spark already dedups at
-    # runtime via ReusedExchange — so the cuts avoided no work and
-    # added blocking materialization jobs. Lineage cuts only pay when
-    # the duplicated subtree crosses SEPARATE actions (prechecks,
-    # loops) or is not behind an identical exchange.
+    # NOTE (r16): cuts on tf/w/norms/rare were tried here and
+    # REVERTED — measured 1.04-1.30x SLOWER. Each multi-consumer
+    # subtree (tf under dft+w, w under norms and both dot-product
+    # sides, rare under its self-join) sits behind IDENTICAL exchanges,
+    # which ReusedExchange already shares (see session.materialize).
     tf = toks.groupBy("_id", "_t").agg(F.count(F.lit(1)).alias("_tf"))
     n_docs = df.count()  # plan-build-time scalar, like ivf/pq builds
     dft = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))

@@ -5,8 +5,9 @@ Near-duplicate PAIRS (minhash/simhash/cosine output) still need to
 become CLUSTERS before a pipeline can keep one representative per
 group — that's a connected-components problem. This is the engine's
 iterative-algorithm surface: a driver-side loop over declarative
-DataFrame steps, with ``localCheckpoint`` every few rounds to cut the
-growing lineage (the standard Spark iteration hygiene).
+DataFrame steps, with a ``materialize`` cut every few rounds
+(``_CC_CHECKPOINT_EVERY``, ``_LP_CHECKPOINT_EVERY``) or every round to
+stop the plan from growing with the round count.
 
 Connected components is min-label propagation: every vertex adopts
 the smallest label among itself and its neighbors until fixpoint;
@@ -21,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.session import materialize
+
 # target rows per partition for the iterative operators' pinned key
 # exchanges (pagerank / label_propagation): node/rank and
 # vote rows are a few dozen bytes, so ~500k rows is tens of MB — the
@@ -29,13 +32,17 @@ from pyspark.sql import functions as F
 # n_part explicitly.
 _GRAPH_ROWS_PER_PART = 500_000
 
+# rounds between lineage cuts in the two fixpoints that do not cut
+# every round: connected_components checks convergence at each cut
+_CC_CHECKPOINT_EVERY = 3
+_LP_CHECKPOINT_EVERY = 2
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Connected components of an undirected edge list by min-label
     propagation (diameter rounds, cheapest per round — right for
@@ -44,17 +51,16 @@ def connected_components(
     Returns (id, component) with component = min vertex id reachable.
     Vertices are those appearing in edges; isolated vertices can be
     unioned in by the caller. Raises rather than return wrong labels
-    if ``max_iterations`` is exhausted before fixpoint.
+    if ``max_iterations`` is exhausted before fixpoint. The labels are
+    cut, and convergence checked, every ``_CC_CHECKPOINT_EVERY``
+    rounds.
     """
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    # lazy: the first consumer (the labels-init distinct) materializes
-    # the checkpoint in its own job — same plan cut, one fewer
-    # blocking driver round trip (the trainer-loop pattern)
-    sym = sym.dropDuplicates(["u", "v"]).localCheckpoint(eager=False)
+    sym = materialize(sym.dropDuplicates(["u", "v"]), "connected_components: sym")
     labels = sym.select("u").distinct().select(
         F.col("u").alias("id"), F.col("u").alias("component")
     )
@@ -74,11 +80,10 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # cut lineage; the convergence-check count right below is
-            # the materializing job (lazy checkpoint — no separate
-            # blocking materialization round trip)
-            new_labels = new_labels.localCheckpoint(eager=False)
+        if (i + 1) % _CC_CHECKPOINT_EVERY == 0:
+            new_labels = materialize(
+                new_labels, f"connected_components: labels iter {i + 1}"
+            )
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "id")
@@ -153,8 +158,8 @@ def pagerank(
 
     Scale shape per iteration: ONE shuffle — the contribution sums on
     dst. The edge table is pre-joined with the out-degrees and pinned
-    to a fixed hash partitioning on src ONCE (localCheckpoint keeps
-    the partitioning), and the rank vector is re-pinned to the same
+    to a fixed hash partitioning on src ONCE (the cut keeps the
+    partitioning), and the rank vector is re-pinned to the same
     partitioning each round, so the per-iteration edges-⋈-ranks join,
     the dangling semi-join, and the nodes-⋈-contribs update are all
     exchange-free on the heavy side (guide §2.4: two operations keyed
@@ -170,23 +175,16 @@ def pagerank(
             return F.sum(F.round(col, 12).cast("decimal(38,12)")).cast("double")
         return F.sum(col)
 
-    # the canonical edge list feeds THREE setup consumers across
-    # separate actions (node set, degree-pinned edges, dangling set) —
-    # without a cut the caller's edge DERIVATION (e.g. the hubs
-    # query's two window passes) re-executes per action (guide §5;
-    # the r16 triangle lesson). Edge-scale, same budget as e_deg.
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=False)
-    )
-    nodes_raw = (
+    # three setup actions read the edge list (node set, degree-pinned
+    # edges, dangling set); uncut, the caller's edge derivation (e.g.
+    # the hubs query's two window passes) re-runs in each
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = materialize(e.dropDuplicates(["u", "v"]), "pagerank: edges")
+    nodes_raw = materialize(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        # lazy: the n_part count (or the repinned node checkpoint's
-        # first consumer) is the materializing job
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "pagerank: nodes",
     )
     # fixed partition count for every per-iteration key exchange:
     # explicit so AQE's partition coalescing can't leave the pinned
@@ -209,25 +207,22 @@ def pagerank(
                 (n_nodes + _GRAPH_ROWS_PER_PART - 1) // _GRAPH_ROWS_PER_PART,
             ),
         )
-    nodes = nodes_raw.repartition(n_part, "node").localCheckpoint(eager=False)
+    nodes = materialize(nodes_raw.repartition(n_part, "node"), "pagerank: pinned nodes")
     n_total = nodes.agg(F.count(F.lit(1)).alias("_n"))
     out_deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("_deg"))
     # the degree column rides the edge table: pre-join once, pin the
     # result to hashpartitioning(u, n_part) — iterations reuse this
     # layout instead of re-shuffling the edges every round
-    e_deg = (
-        e.join(out_deg, "u")
-        .select("u", "v", "_deg")
-        .repartition(n_part, "u")
-        .localCheckpoint(eager=False)
+    e_deg = materialize(
+        e.join(out_deg, "u").select("u", "v", "_deg").repartition(n_part, "u"),
+        "pagerank: edges with degree",
     )
     # the dangling-node SET is static (nodes with no out-edges) —
     # compute it once so each iteration pays a semi-join on the
-    # checkpointed set instead of re-deriving it from a left join
-    dangling_nodes = (
-        nodes.join(out_deg, nodes.node == out_deg.u, "left_anti")
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=False)
+    # cut set instead of re-deriving it from a left join
+    dangling_nodes = nodes.join(out_deg, nodes.node == out_deg.u, "left_anti")
+    dangling_nodes = materialize(
+        dangling_nodes.repartition(n_part, "node"), "pagerank: dangling"
     )
     ranks = nodes.crossJoin(F.broadcast(n_total)).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("rank")
@@ -242,7 +237,7 @@ def pagerank(
             .groupBy("node")
             .agg(acc_sum(F.col("_c")).alias("_sum"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(n_total))
             .crossJoin(F.broadcast(dangling))
@@ -254,13 +249,8 @@ def pagerank(
                     * (F.coalesce(F.col("_sum"), F.lit(0.0)) + F.col("_dm") / F.col("_n"))
                 ).alias("rank"),
             )
-            .repartition(n_part, "node")
-            # eager=False: the plan is truncated either way (the
-            # DataFrame is backed by the checkpoint RDD), but lazy
-            # materialization folds each round's blocking checkpoint
-            # job into the next consumer's job — fewer driver round
-            # trips per iteration; the ranks are identical
-            .localCheckpoint(eager=False)
+            .repartition(n_part, "node"),
+            f"pagerank: ranks iter {i + 1}",
         )
     return ranks
 
@@ -326,19 +316,13 @@ def triangle_count(
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
     )
-    # o feeds THREE consumers whose required distributions differ
-    # (out_pairs keyed a, heads keyed a on the build side, the closing
-    # left_semi keyed (b, c)), so the exchanges above o are NOT
-    # identical and ReusedExchange cannot dedup the orientation
-    # pipeline (scan -> windows -> distinct -> degree agg -> joins):
-    # it executed once per consumer. Materialize the edge-scale
-    # (a, b, db) rows once — the k_core/pagerank per-round discipline.
-    # Same-JVM A/B (ab_tri_r16.py @ ff3222f): 0.93x on a quiet host
-    # (sf0.1's orientation subtree is small, so the local win is
-    # modest); kept for the 3x-fewer executions of the scan->window->
-    # distinct->degree->join pipeline, which is corpus-scale work on a
-    # real graph. Counts are exact integers — bit-identical either way.
-    o = o.localCheckpoint(eager=False)
+    # o feeds THREE consumers with different exchanges (out_pairs and
+    # heads keyed a, the closing left_semi keyed (b, c)); uncut, the
+    # orientation pipeline (scan -> windows -> distinct -> degree agg ->
+    # joins) ran once per consumer. Same-JVM A/B (r16): 0.93x on a quiet
+    # host at sf0.1, where that subtree is small; kept for the 3x fewer
+    # runs of corpus-scale work on a real graph. Counts are exact.
+    o = materialize(o, "triangle_count: oriented edges")
     heads = o.select("a", F.col("b").alias("c"), F.col("db").alias("dc"))
     out_pairs = o.join(heads, "a").filter(
         (F.col("db") < F.col("dc"))
@@ -373,8 +357,8 @@ def k_core(
     broadcast after AQE sees its size), and anti-joins them out of
     both endpoints. Rounds needed = peeling depth (<= graph
     degeneracy ladder, typically < 20 on real graphs); each round's
-    edge set localCheckpoints so round N's plan doesn't replay rounds
-    1..N-1 (the pagerank lineage discipline). The per-round
+    edge set is cut with ``materialize`` so round N's plan doesn't
+    replay rounds 1..N-1. The per-round
     fixpoint probe is a metadata-sized count.
     """
     if k < 1:
@@ -383,23 +367,24 @@ def k_core(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    sym = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    sym = materialize(
+        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct(),
+        "k_core: sym",
     )
     converged = False
-    for _ in range(max_iterations):
+    for i in range(max_iterations):
         deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        # lazy: the isEmpty probe right below materializes it
-        low = deg.filter(F.col("deg") < k).select("a").localCheckpoint(eager=False)
+        low = materialize(
+            deg.filter(F.col("deg") < k).select("a"), f"k_core: low iter {i + 1}"
+        )
         if low.isEmpty():
             converged = True
             break
-        sym = (
-            sym.join(low, "a", "left_anti")
-            .join(low.select(F.col("a").alias("b")), "b", "left_anti")
-            .localCheckpoint(eager=False)
+        sym = materialize(
+            sym.join(low, "a", "left_anti").join(
+                low.select(F.col("a").alias("b")), "b", "left_anti"
+            ),
+            f"k_core: sym iter {i + 1}",
         )
     if not converged:
         # Returning here would hand back a superset that still has
@@ -423,7 +408,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    checkpoint_every: int = 2,
     n_part: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with a
@@ -439,9 +423,8 @@ def label_propagation(
     symmetrized edge list against the (node, label) table (shuffle on
     the edge key) + one (node, label) count aggregate + a per-node
     argmax window over the ≤degree-sized label counts; rows never
-    carry more than two ids. Lineage is cut with ``localCheckpoint``
-    every ``checkpoint_every`` rounds (the iteration hygiene shared
-    with connected_components / pagerank).
+    carry more than two ids. Lineage is cut with ``materialize`` every
+    ``_LP_CHECKPOINT_EVERY`` rounds.
     """
     from pyspark.sql import Window
 
@@ -449,7 +432,7 @@ def label_propagation(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # symmetrize ONCE, pinned to hashpartitioning(v, n_part) and
-    # checkpointed: each round's edges-⋈-labels join reuses this
+    # cut: each round's edges-⋈-labels join reuses this
     # layout instead of re-running the union+dedup and re-shuffling
     # the edge table every iteration (guide §2.4). Fixed n_part so
     # AQE coalescing can't leave the two join sides at different
@@ -459,16 +442,17 @@ def label_propagation(
     # warehouse graph spreads over every core. Vote argmax is a
     # count + min-struct aggregate, so partitioning cannot change
     # the result.
-    sym_raw = (
+    # eager ON PURPOSE: the lazy form measured 1.04-1.06x slower in
+    # two same-JVM A/Bs (r17) — unlike the CC/pagerank setup cuts, both
+    # this and the repinned cut below feed every iteration, and folding
+    # their materialization into the first round's join serializes work
+    # the eager jobs overlap
+    sym_raw = materialize(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .dropDuplicates(["u", "v"])
-        .filter(F.col("u") != F.col("v"))
-        # eager ON PURPOSE: the lazy form measured 1.04-1.06x slower
-        # in two same-JVM A/Bs (r17) — unlike the CC/pagerank setup
-        # cuts, both this and the repinned checkpoint below feed every
-        # iteration, and folding their materialization into the first
-        # round's join serializes work the eager jobs overlap
-        .localCheckpoint()
+        .filter(F.col("u") != F.col("v")),
+        "label_propagation: sym",
+        eager=True,
     )
     if n_part is None:
         n_edges = sym_raw.count()
@@ -479,7 +463,9 @@ def label_propagation(
                 (n_edges + _GRAPH_ROWS_PER_PART - 1) // _GRAPH_ROWS_PER_PART,
             ),
         )
-    sym = sym_raw.repartition(n_part, "v").localCheckpoint()
+    sym = materialize(
+        sym_raw.repartition(n_part, "v"), "label_propagation: pinned sym", eager=True
+    )
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
@@ -502,6 +488,6 @@ def label_propagation(
             .select("node", F.col("_m.label").alias("label"))
             .repartition(n_part, "node")
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = labels.localCheckpoint(eager=False)
+        if (i + 1) % _LP_CHECKPOINT_EVERY == 0 and i + 1 < iterations:
+            labels = materialize(labels, f"label_propagation: labels iter {i + 1}")
     return labels.select("node", F.col("label").alias("community"))

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.session import materialize
+
 
 # --- B1: projection / identity rename (HCatTapTest.java:70,177,192) ---
 def project(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -1084,16 +1086,14 @@ def binary_auc(
 
     Returns one row: (auc, n_pos, n_neg, n_null).
     """
-    # the thin (16-byte) score/label projection feeds TWO aggregates
-    # (null audit + micro-score counts) whose shapes share no
-    # exchange — without a lineage cut the upstream scorer (e.g.
-    # classifier_auc's md5-per-gram fold) re-executes per consumer
-    # (guide §5; the r16 triangle lesson). The checkpoint is the
-    # projection, never the documents: 12 bytes/row at any scale.
-    base = df.select(
+    # the thin score/label projection feeds TWO aggregates (null audit,
+    # micro-score counts) that share no exchange; uncut, the upstream
+    # scorer (e.g. classifier_auc's md5-per-gram fold) re-runs per
+    # consumer. The cut holds 12 bytes/row, never the documents.
+    base = materialize(df.select(
         F.round(F.col(score_col) * micro_scale, 0).cast("bigint").alias("_s"),
         F.col(label_col).cast("int").alias("_y"),
-    ).localCheckpoint(eager=False)
+    ), "binary_auc: scores")
     totals = base.agg(
         F.sum(
             (F.col("_s").isNull() | F.col("_y").isNull()).cast("long")

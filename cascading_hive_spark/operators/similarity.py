@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.session import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two array columns."""
@@ -218,13 +220,12 @@ def ivf_build(
         assigned = _assign_cells(vectors, centroids, id_col, vec_col)
         centroids = _mean_centroids(assigned, ["cell"], vec_col, dim, portable)
     # centroids feed the assignment pass and every later probe; the
-    # assignment table is read on BOTH sides of a search (query probes
-    # + cell members) — without the cuts the broadcast-scored assign
-    # pass re-executes per consumer (guide §5). Index-scale rows, the
-    # same budget the index write would pay anyway.
-    centroids = centroids.localCheckpoint(eager=False)
-    assignments = _assign_cells(vectors, centroids, id_col, vec_col).localCheckpoint(
-        eager=False
+    # assignments are read on BOTH sides of a search (query probes + cell
+    # members), so uncut the broadcast-scored assign pass re-runs per
+    # consumer. Index-scale rows, as the index write would pay anyway.
+    centroids = materialize(centroids, "ivf_build: centroids")
+    assignments = materialize(
+        _assign_cells(vectors, centroids, id_col, vec_col), "ivf_build: assignments"
     )
     return assignments, centroids
 
@@ -553,15 +554,12 @@ def pq_train(
     d_sub = dim // m
     sub = _subvectors(vectors, id_col, vec_col, m, d_sub)
     if cut_lineage and refine_iterations:
-        # the subvector table feeds the seed-sample window job AND
-        # every refine round's assign — separate ACTIONS, so exchange
-        # reuse never applies and each re-ran the scan+explode
-        # (the r16 ivfpq lineage lesson, guide §5). Same bytes as the
-        # input vectors — the accepted ivfpq checkpoint budget.
-        # ivfpq_build passes False: ITS input (the residual table) is
-        # already a checkpoint, and stacking a second vector-scale
-        # materialization on top measured 1.19x slower (r17 A/B).
-        sub = sub.localCheckpoint(eager=False)
+        # the seed-sample window job and every refine round's assign
+        # read the subvectors in separate actions; uncut, each re-ran the
+        # scan+explode (r16). ivfpq_build passes False: its residual
+        # input is already cut, and a second vector-scale cut on top
+        # measured 1.19x slower (r17 A/B).
+        sub = materialize(sub, "pq_train: subvectors")
 
     # Seed with ACTUAL data points (hash-ranked sample per subspace),
     # not hash-group means: k-means on a mixture seeds best from
@@ -578,7 +576,7 @@ def pq_train(
         gate = F.pmod(F.abs(F.xxhash64("_id")), F.lit(sample_mod))
         rank = F.abs(F.xxhash64(F.col("_id"), F.lit(1)))
     w_seed = Window.partitionBy("sub").orderBy(rank, F.col("_id"))
-    centroids = (
+    centroids = materialize(
         sub.filter(gate == 0)
         .withColumn("_rn", F.row_number().over(w_seed))
         .filter(F.col("_rn") <= k)
@@ -586,14 +584,14 @@ def pq_train(
             "sub",
             (F.col("_rn") - 1).alias("cell"),
             F.transform("subvec", lambda x: x.cast("double")).alias("centroid"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "pq_train: centroids seed",
     )
-    for _ in range(refine_iterations):
+    for i in range(refine_iterations):
         assigned = _pq_assign(sub, centroids, d_sub)
-        centroids = _mean_centroids(
+        centroids = materialize(_mean_centroids(
             assigned, ["sub", "cell"], "subvec", d_sub, portable
-        ).localCheckpoint(eager=False)
+        ), f"pq_train: centroids iter {i + 1}")
     return centroids
 def _pq_assign_cells(sub: DataFrame, centroids: DataFrame, d_sub: int) -> DataFrame:
     """Nearest centroid per (id, sub) by L2 -> (_id, sub, cell).
@@ -769,15 +767,11 @@ def ivfpq_build(
     (coarse cell + 8-byte residual code) gets a bit-for-bit DuckDB
     twin (queries.py: ann_ivfpq_portable)."""
     refine = 0 if portable else 1
-    # assignments and residuals feed MANY separate actions below —
-    # pq_train alone runs up to four (dim probe, count, seed
-    # checkpoint, refine round), then pq_encode and the final index
-    # join read them again. Exchange reuse never crosses actions, so
-    # without the cuts the coarse E-step (broadcast-scored corpus pass)
-    # re-executed per action (r16; the bloom-precheck lesson). Both
-    # tables are the index's own build-time layout — at warehouse scale
-    # this boundary is the partitionBy("cell") write the docstring
-    # names. (assignments arrive checkpointed from ivf_build itself)
+    # assignments (cut in ivf_build) and residuals feed MANY separate
+    # actions — pq_train alone runs up to four (dim probe, count, seed
+    # cut, refine round), then pq_encode and the index join; uncut, the
+    # coarse E-step re-ran per action (r16). At warehouse scale this is
+    # the partitionBy("cell") write the docstring names.
     assignments, coarse = ivf_build(
         vectors,
         n_cells,
@@ -786,13 +780,13 @@ def ivfpq_build(
         refine_iterations=refine,
         portable=portable,
     )
-    residuals = assignments.join(F.broadcast(coarse), "cell").select(
+    residuals = materialize(assignments.join(F.broadcast(coarse), "cell").select(
         F.col(id_col),
         "cell",
         F.zip_with(
             F.col(vec_col), "centroid", lambda a, b: (a.cast("double") - b)
         ).alias(vec_col),
-    ).localCheckpoint(eager=False)
+    ), "ivfpq_build: residuals")
     pq_cent = pq_train(
         residuals,
         m=m,
@@ -1140,8 +1134,8 @@ def kmeans_fit(
     so the M-step posexplodes the carried array — no join back, ONE
     id exchange per round), and one (cid, dim) mean aggregation whose
     map-side partials are k*dim rows per task. Lineage
-    hygiene: the centroid table (k*dim rows) is localCheckpoint-ed
-    every round (the pagerank pattern), so round N's plan reads the
+    hygiene: the centroid table (k*dim rows) is cut with
+    ``materialize`` every round, so round N's plan reads the
     parquet scan + one tiny checkpoint instead of N nested E/M graphs.
     Empty clusters keep their previous centroid with n = 0 (left join
     + coalesce — portable, no reseeding randomness).
@@ -1179,10 +1173,10 @@ def kmeans_fit(
             )
         )
 
-    centroids = _means(
+    centroids = materialize(_means(
         ex.withColumn("cid", F.pmod(hash_order(F.col("_id")), F.lit(k)))
-    ).localCheckpoint(eager=False)
-    for _ in range(iters):
+    ), "kmeans_fit: centroids seed")
+    for i in range(iters):
         # E-step carries the vector THROUGH the argmin aggregate
         # (keep_vec/carry_vec), so the M-step posexplodes the carried
         # array instead of joining the n*dim exploded table back on
@@ -1195,15 +1189,14 @@ def kmeans_fit(
         )
         means = _means(assign.select("cid", F.posexplode("_v").alias("dim", "_val")))
         prior = centroids.select("cid", "dim", F.col("centroid").alias("_prev"))
-        centroids = (
-            prior.join(means, ["cid", "dim"], "left")
-            .select(
+        centroids = materialize(
+            prior.join(means, ["cid", "dim"], "left").select(
                 "cid",
                 "dim",
                 F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n"),
                 F.coalesce(F.col("centroid"), F.col("_prev")).alias("centroid"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            f"kmeans_fit: centroids iter {i + 1}",
         )
     return centroids
 
@@ -1325,7 +1318,7 @@ def ivf_build_from_kmeans(
     scale notes)."""
     cents = centroids_to_cells(kmeans_fit(vectors, k=k, iters=iters,
                                           id_col=id_col, vec_col=vec_col))
-    cents = cents.localCheckpoint(eager=False)
+    cents = materialize(cents, "ivf_build_from_kmeans: centroids")
     assignments = _assign_cells(vectors, cents, id_col, vec_col)
     return assignments, cents
 
@@ -1902,7 +1895,7 @@ def pca_power_project(
     covariance_matrix_embeddings' scale notes — d <= ~64 here; wide
     embeddings take pca_components' Arrow partial-GEMM). The power
     iteration itself runs on METADATA-sized tables (d^2 matrix rows x
-    ``steps`` tiny joins, localCheckpoint-ed per round like kmeans),
+    ``steps`` tiny joins, cut with ``materialize`` every round),
     and the projection is one broadcast of the d-row component onto
     the exploded scan + a per-id partial aggregate — vectors never
     shuffle."""
@@ -1929,22 +1922,22 @@ def pca_power_project(
     cov = covariance_matrix_embeddings(
         vectors, id_col, vec_col, sum_scale, out_scale
     )
-    cfull = (
+    cfull = materialize(
         cov.union(
             cov.filter(F.col("dim_a") < F.col("dim_b")).select(
                 F.col("dim_b").alias("dim_a"),
                 F.col("dim_a").alias("dim_b"),
                 "cov",
             )
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "pca_power_project: covariance",
     )
     v = (
         cfull.select(F.col("dim_a").alias("dim"))
         .distinct()
         .select("dim", F.lit(1.0).alias("_vv"))
     )
-    for _ in range(steps):
+    for i in range(steps):
         u = (
             cfull.join(v, cfull["dim_b"] == v["dim"])
             .groupBy("dim_a")
@@ -1960,15 +1953,14 @@ def pca_power_project(
                 / F.lit(mic)
             ).alias("_nn")
         )
-        v = (
-            u.crossJoin(F.broadcast(nrm))
-            .select(
+        v = materialize(
+            u.crossJoin(F.broadcast(nrm)).select(
                 "dim",
                 F.when(F.col("_nn") != 0.0, F.col("_uu") / F.col("_nn")).alias(
                     "_vv"
                 ),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            f"pca_power_project: vector iter {i + 1}",
         )
     sgn = v.filter(F.col("dim") == 0).select(
         F.when(F.col("_vv") < 0, F.lit(-1.0)).otherwise(F.lit(1.0)).alias("_sg")

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.session import materialize
+
 
 def _q_labels(probs: tuple[float, ...]) -> dict[float, int]:
     """Per-mille column labels for quantile probs: ``q<label>``.
@@ -490,12 +492,9 @@ def bloom_probe_broadcast(
     the literal leg (one metadata-sized agg over the sketch table)."""
     n_words = m_bits // _BLOOM_WORD_BITS + 1
     # The sketch table is metadata-sized (≤ m_bits/63 + 1 word rows)
-    # but its LINEAGE is a corpus-scale scan + k md5s per gram: without
-    # a cut, the m_bits precheck below executes that build once and the
-    # broadcast probe joins re-execute it again (guide §5). Materialize
-    # the words once; the precheck action realizes the checkpoint and
-    # the k joins then broadcast the checkpointed rows.
-    bloom = bloom.localCheckpoint(eager=False)
+    # but its LINEAGE is a corpus-scale scan + k md5s per gram, read by
+    # the m_bits precheck below and again by the broadcast probe joins.
+    bloom = materialize(bloom, "bloom_probe_broadcast: sketch words")
     rng = bloom.agg(
         F.min("word_idx").alias("lo"), F.max("word_idx").alias("hi")
     ).first()
@@ -657,15 +656,15 @@ def kmv_distinct_by_key(
         .cast("bigint")
         .alias("h")
     )
-    hashed = (
+    # the union row's re-distinct over a DIFFERENT key ((h) vs
+    # (key, h)) cannot share the exchange with the per-key side, so
+    # without a cut the scan+md5+distinct executes again for it —
+    # materialize once (guide §5; measured 0.88x same-JVM)
+    hashed = materialize(
         df.filter(F.col(value_col).isNotNull())
         .select(F.col(key_col).cast("string").alias("key"), h)
-        .distinct()
-        # the union row's re-distinct over a DIFFERENT key ((h) vs
-        # (key, h)) cannot share the exchange with the per-key side,
-        # so without a cut the scan+md5+distinct executes again for
-        # it — materialize once (guide §5; measured 0.88x same-JVM)
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "kmv_distinct_by_key: hashes",
     )
     merged = hashed.select(F.lit(union_key).alias("key"), "h").distinct()
     allh = hashed.unionByName(merged)

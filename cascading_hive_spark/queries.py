@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cascading_hive_spark.operators import relational as R
-from cascading_hive_spark.session import tune_for_queries
+from cascading_hive_spark.session import materialize, tune_for_queries
 from cascading_hive_spark.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -9827,7 +9827,11 @@ def q_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("_qng").cast("double")
         + F.lit(float(_QC_BIAS_V1))
     )
-    flags = (
+    # cut the flag table ONCE: uncut, its three consumers (modal-language
+    # aggregate, cap stage, final report) each replay the md5
+    # lang/classifier folds (measured ~4x the sum-of-stages wall at
+    # sf0.1). At cluster scale the flags would land in the warehouse.
+    flags = materialize(
         b2.select(
             "doc_id",
             "source",
@@ -9839,16 +9843,8 @@ def q_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _LID_MODELS_V1,
             ).alias("pred_lang"),
             (qc_margin > 0).alias("c"),
-        )
-        # materialize the flag table ONCE: three consumers (the modal-
-        # language aggregate, the cap stage, the final report) would
-        # otherwise each replay the md5 lang/classifier folds — the
-        # expensive scans — through lineage recompute (measured ~4x
-        # the sum-of-stages wall at sf0.1). At cluster scale this is
-        # the natural "stage-2 flags land in the warehouse" boundary.
-        # Lazy: the modal-language aggregate's broadcast build is the
-        # materializing job — no separate blocking round trip.
-        .localCheckpoint(eager=False)
+        ),
+        "pipeline_curation_funnel: flags",
     )
     # stage 2, keep-top-language: modal prediction among Gopher
     # survivors (a <=5-row aggregate), broadcast back — min_by over
@@ -10327,21 +10323,17 @@ def q_docs_hash_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cascading_hive_spark.operators.similarity import cosine_topk, dot
     from cascading_hive_spark.operators.text import hash_embed
 
-    # the embedding table is materialized ONCE (r16): hash_embed is a
-    # 2-md5-per-gram fold, and without the cut Catalyst substitutes the
-    # whole fold into every consumer expression — twice inside the
-    # pushed-down non-zero filter's self-dot and again in the
-    # projection (the executed plan carried THREE copies of the fold
-    # per corpus row; measured 46.6s -> the md5 work once). Same
-    # boundary the funnel's flag table uses; the pinned blocks are
-    # (id, dim-16 array) rows, strictly smaller than the text scanned.
-    vecs = (
-        _t(spark, sf_dir, "documents")
-        .select(
+    # cut the embeddings ONCE (r16): uncut, Catalyst inlines the
+    # 2-md5-per-gram hash_embed fold into every consumer expression,
+    # three copies per row (the non-zero filter's self-dot twice, the
+    # projection once; measured 46.6 s). The (id, dim-16 array) rows
+    # are smaller than the text scanned.
+    vecs = materialize(
+        _t(spark, sf_dir, "documents").select(
             F.col("doc_id").alias("vec_id"),
             hash_embed(F.col("text"), dim=_HE_DIM).alias("embedding"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "docs_hash_embed_knn: embeddings",
     )
     nz = vecs.filter(dot(F.col("embedding"), F.col("embedding")) > 0)
     query = nz.filter(F.col("vec_id") == 0)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_session(
@@ -72,3 +72,33 @@ def tune_for_queries(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+def materialize(df: DataFrame, label: str, *, eager: bool = False) -> DataFrame:
+    """The package's one lineage cut: a local checkpoint of ``df`` with
+    every job started inside the call described as ``label``
+    (``"<operator>: <table> iter <n>"``). The caller's description,
+    ``None`` included, is restored; the job group is left alone, so a
+    profiler that attributes jobs by group keeps them in the caller's span.
+
+    - A cut pays when ``df`` is read by separate actions, by a loop, or by
+      consumers whose exchanges differ. Identical exchanges in one plan
+      are already shared (ReusedExchange), so a cut there only adds jobs.
+    - With AQE on, the plan is cut at this call, lazy or not: cutting
+      plans the final physical plan of ``df``, which runs every upstream
+      shuffle stage here. A lazy cut defers only the last stage.
+    - The first action that reads a lazy cut finalizes only the nearest
+      marked RDD (``spark.checkpoint.checkpointAllMarkedAncestors`` is
+      off), so an upstream lazy cut in the same chain stays cached but
+      untruncated: evicting its blocks recomputes the chain above it.
+    - ``eager``: lazy unless ``df`` must outlive its source (a streaming
+      micro-batch) or a same-JVM A/B of the site measured eager faster;
+      the site says which.
+    """
+    sc, key = df.sparkSession.sparkContext, "spark.job.description"
+    prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        sc.setLocalProperty(key, prior)  # None unsets it

@@ -246,16 +246,20 @@ def upsert_sink_available_now(
     needed.)
     """
     from cascading_hive_spark.io import upsert
+    from cascading_hive_spark.session import materialize
 
     spark = stream_df.sparkSession
     state = {"df": None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(key_cols).localCheckpoint()
+        # eager: the target outlives the micro-batch it was read from
+        label = f"upsert_sink: batch {batch_id}"
+        batch = materialize(batch_df.dropDuplicates(key_cols), label, eager=True)
         if state["df"] is None:
             state["df"] = batch
         else:
-            state["df"] = upsert(state["df"], batch, key_cols).localCheckpoint()
+            merged = upsert(state["df"], batch, key_cols)
+            state["df"] = materialize(merged, label, eager=True)
 
     q = (
         stream_df.writeStream.foreachBatch(merge)

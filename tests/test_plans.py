@@ -65,50 +65,61 @@ def test_topk_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in physical_plan(df)
 
 
-def test_minhash_never_shuffles_shingles(spark, sf_dir):
-    """The LSH bucket shuffle must carry only (id, band, bhash) — the
-    gram arrays stay scan-side (see operators/dedup.py scale notes).
+def test_minhash_never_shuffles_shingles(spark, sf_dir, monkeypatch):
+    """The LSH bucket shuffle must carry only (id, band, bhash), and the
+    round-robin ``spread`` exchange of the portable (md5) path must
+    carry the text, not the gram arrays, which are built once after it
+    (see operators/dedup.py scale notes).
 
-    The returned DataFrame's plan starts at the candidate
-    localCheckpoint, so the plan checked is the bucket aggregate before
-    that cut, over ``_minhash_band_rows`` of both hash families, with
-    every band-row column besides (band, bhash) collected, as bucket
-    members are. A formatted plan lists each Exchange's columns under
-    ``Input [..]``; a partial aggregate ships its buffer under another
-    name, so the aggregate reading the exchange is checked as well.
-    (The round-robin ``spread`` exchange is input spreading, not a
-    hash-keyed shuffle.)"""
+    The gram tables checked are the ``base`` tables the real operators
+    hand to ``_minhash_band_rows``: ``minhash_lsh_pairs`` for both hash
+    families and ``minhash_incremental_pairs``. Lineage cuts are
+    replaced by the identity, so building the operators runs no job.
+    The bucket aggregate is built over each base's band rows with every
+    column besides (band, bhash) collected, as bucket members are. A
+    formatted plan lists each Exchange's columns under ``Input [..]``;
+    a partial aggregate ships its buffer under another name, so the
+    aggregate reading the exchange is checked as well."""
     import re
 
-    from cascading_hive_spark.operators.dedup import (
-        _id_long,
-        _minhash_band_rows,
-        char_ngrams,
-        shingles_from_tokens,
-        spread,
-        tokenized,
-    )
+    from cascading_hive_spark.operators import dedup
     from cascading_hive_spark.plans.explain import formatted_plan
     from cascading_hive_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    # the two ``base`` gram tables of minhash_lsh_pairs
-    bases = {
-        True: spread(
-            docs.filter(F.col("text").isNotNull()).select(
-                _id_long(docs, "doc_id").alias("_id"),
-                char_ngrams(F.col("text"), 2).alias("_g"),
-            )
-        ),
-        False: tokenized(docs, "doc_id", "text").select(
-            "_id", shingles_from_tokens(F.col("_toks"), 2).alias("_g")
-        ),
-    }
+    monkeypatch.setattr(type(docs), "localCheckpoint", lambda df, *a, **k: df)
+    band_rows = dedup._minhash_band_rows
+    bases = []
+
+    def spy(base, keys, num_perm, bands, portable):
+        bases.append((base, keys, num_perm, bands, portable))
+        return band_rows(base, keys, num_perm, bands, portable)
+
+    monkeypatch.setattr(dedup, "_minhash_band_rows", spy)
+    dedup.minhash_lsh_pairs(docs, "doc_id", "text", portable=False)
+    dedup.minhash_lsh_pairs(docs, "doc_id", "text", portable=True)
+    new = docs.filter(F.col("doc_id") % 5 == 0)
+    dedup.minhash_incremental_pairs(new, docs.subtract(new), "doc_id", "text")
+    assert [b[-1] for b in bases] == [False, True, True], bases
+
     grams = re.compile(r"\b(_g|_gram|_hp|_hs)#")
-    for portable, base in bases.items():
-        band_rows = _minhash_band_rows(base, ["_id"], 64, 16, portable)
-        members = [c for c in band_rows.columns if c not in ("band", "bhash")]
-        buckets = band_rows.groupBy("band", "bhash").agg(
+    for base, keys, num_perm, bands, portable in bases:
+        nodes = formatted_plan(base).split("\n\n")
+        spreads = [
+            i for i, n in enumerate(nodes)
+            if re.match(r"\(\d+\) Exchange", n) and "RoundRobinPartitioning(" in n
+        ]
+        if portable:
+            assert len(spreads) == 1, f"expected one spread exchange:\n{nodes}"
+            carried = re.search(r"^Input \[\d+\]: \[(.*)\]$", nodes[spreads[0]], re.M)[1]
+            assert "_text#" in carried and not grams.search(carried), nodes[spreads[0]]
+            ngrams = [i for i, n in enumerate(nodes) if "array_distinct(transform(" in n]
+            assert len(ngrams) == 1 and ngrams[0] > spreads[0], (
+                f"char_ngrams must run once, after the spread exchange:\n{nodes}"
+            )
+        rows = band_rows(base, keys, num_perm, bands, portable)
+        members = [c for c in rows.columns if c not in ("band", "bhash")]
+        buckets = rows.groupBy("band", "bhash").agg(
             F.collect_list(F.struct(*members)).alias("_ids")
         )
         nodes = formatted_plan(buckets).split("\n\n")
@@ -356,6 +367,20 @@ def test_corr_matrix_matches_numpy_and_single_scan(spark):
     n_scans = final.count("Scan ExistingRDD") + final.count("LocalTableScan")
     assert n_scans == 1, final
     assert final.count("HashAggregate") <= 2, final
+
+
+def test_corr_matrix_spread_preserves_moments(spark, sf_dir):
+    """corr_matrix's spread() repartition cannot move the decimal
+    moments: compare against a COALESCE(1) run of the same input."""
+    from cascading_hive_spark.operators.relational import corr_matrix
+    from cascading_hive_spark.tables import load_table
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax"
+    )
+    wide = corr_matrix(li, li.columns).collect()
+    narrow = corr_matrix(li.coalesce(1), li.columns).collect()
+    assert sorted(map(tuple, wide)) == sorted(map(tuple, narrow))
 
 
 def test_standardize_embeddings_zero_mean_unit_std(spark, sf_dir):

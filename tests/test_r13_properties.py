@@ -95,6 +95,32 @@ def test_auc_corpus_never_sorts_globally(spark, sf_dir):
     assert out.first().auc is not None
 
 
+def test_binary_auc_checkpoint_single_upstream_execution(spark):
+    """binary_auc's thin projection is a lineage cut: the (expensive)
+    upstream scorer must evaluate once per row, not once per
+    consumer. Counted with an accumulator through a Python UDF."""
+    from pyspark.sql.types import DoubleType
+
+    from cascading_hive_spark.operators.relational import binary_auc
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def scored(x: float) -> float:
+        acc.add(1)
+        return x
+
+    udf = F.udf(scored, DoubleType())
+    df = spark.range(100).select(
+        udf((F.col("id") % 7).cast("double")).alias("score"),
+        (F.col("id") % 2).alias("y"),
+    )
+    out = binary_auc(df, "score", "y").collect()
+    assert len(out) == 1
+    # one evaluation per row (the pre-r17 shape ran the scorer once
+    # per consumer: >= 200)
+    assert acc.value == 100
+
+
 def test_mp4_timing_roundtrip_hypothesis():
     """Pure-Python property: random run-length stts tables, wrapped in
     randomly-noised ISO-BMFF containers (junk sibling boxes, optional

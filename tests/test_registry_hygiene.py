@@ -273,3 +273,29 @@ def test_rows_only_twin_coverage():
     )
     for ro, tw in q._ROWS_ONLY_TWINS.items():
         assert tw in oracles, f"twin {tw} of {ro} has no oracle"
+
+
+def test_lineage_cuts_only_in_materialize():
+    """Every lineage cut in the package goes through
+    ``session.materialize``, which labels its jobs and states the cut's
+    semantics once: no other ``localCheckpoint(`` call may appear."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import cascading_hive_spark
+    from cascading_hive_spark import session
+
+    root = Path(cascading_hive_spark.__file__).parent
+    calls = [
+        (path.relative_to(root).as_posix(), node.lineno)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "localCheckpoint"
+    ]
+    src, start = inspect.getsourcelines(session.materialize)
+    inside = range(start, start + len(src))
+    stray = [c for c in calls if not (c[0] == "session.py" and c[1] in inside)]
+    assert not stray, f"localCheckpoint outside session.materialize: {stray}"
+    assert len(calls) == 1, calls

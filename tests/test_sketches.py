@@ -415,3 +415,33 @@ def test_bloom_pandas_probe_matches_literal(spark):
         bloom_flag_grams_pandas(words, m, k, portable=False)
     with pytest.raises(ValueError, match="m_bits"):
         bloom_flag_grams_pandas(words, m * 2, k)
+
+
+def test_bloom_gram5_index_explode_matches_array_form(spark, sf_dir):
+    """The index-sequence gram rows equal the old inline-split array
+    form (including the explode_outer NULL row per under-5-token
+    doc)."""
+    from cascading_hive_spark.queries import (
+        _bloom_gram5_of,
+        _bloom_gram5_seq,
+        _bloom_gram5_tokens,
+    )
+    from cascading_hive_spark.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    # old formulation, verbatim from the r16 query body
+    toks = F.split(F.col("text"), " ")
+    grams = F.when(
+        F.size(toks) >= 5,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - 4),
+            lambda p: F.array_join(F.slice(toks, p, 5), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    old = d.select("doc_id", F.explode_outer(grams).alias("g"))
+    dt = _bloom_gram5_tokens(d)
+    new = dt.select(
+        "doc_id", "_toks", F.explode_outer(_bloom_gram5_seq()).alias("_p")
+    ).select("doc_id", _bloom_gram5_of(F.col("_p")).alias("g"))
+    assert old.exceptAll(new).count() == 0
+    assert new.exceptAll(old).count() == 0

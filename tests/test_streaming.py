@@ -606,3 +606,26 @@ def test_streaming_bloom_gate_equals_batch(spark, sf_dir):
         for r in _REGISTRY["docs_bloom_decontaminate"][0](spark, sf_dir).collect()
     }
     assert streamed == batch and len(streamed) == 500
+
+
+def test_scaled_state_partitions_formula(spark, sf_dir, monkeypatch):
+    """State-store count derives from the replay source's row count,
+    clamped to [1, defaultParallelism], with an env override."""
+    from cascading_hive_spark.streaming.jobs import scaled_state_partitions
+
+    # sf0.001 events: 1000 rows -> ceil(1000/250k) = 1
+    assert scaled_state_partitions(spark, sf_dir) == 1
+    # small rows_per_part pushes toward the core clamp
+    dp = spark.sparkContext.defaultParallelism
+    assert scaled_state_partitions(spark, sf_dir, rows_per_part=1) == dp
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "5")
+    assert scaled_state_partitions(spark, sf_dir) == 5
+
+
+def test_state_partitions_context_restores(spark):
+    from cascading_hive_spark.streaming.jobs import state_partitions
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with state_partitions(spark, 3):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
