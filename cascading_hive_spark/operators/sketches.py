@@ -348,12 +348,14 @@ def bloom_build(
     rows; items never shuffle, only (word_idx, bits) partials.
 
     No false negatives ever; false-positive rate ~ (1 - e^{-kn/m})^k
-    — size m_bits to the benchmark (n items), not the corpus."""
+    — size m_bits to the benchmark (n items), not the corpus. A NULL item
+    is not a member: it has no positions, so it sets no bit."""
     pos = F.explode(
         F.array(*_bloom_positions(F.col(item_col), k, m_bits, seed, portable))
     ).alias("_p")
     return (
-        df.select(pos)
+        df.filter(F.col(item_col).isNotNull())
+        .select(pos)
         .select(
             (F.col("_p") / _BLOOM_WORD_BITS).cast("int").alias("word_idx"),
             _bloom_bit(F.col("_p")).alias("_b"),
@@ -684,8 +686,10 @@ def kmv_distinct_by_key(
     ).otherwise(
         F.lit(float(k - 1) * 2.0**52) / F.col("_hk").cast("double")
     )
+    # null-safe: NULL-keyed rows are one key group, as in GROUP BY
+    stats = stats.withColumnRenamed("key", "_sk")
     return (
-        agg.join(stats, "key")
+        agg.join(stats, F.col("key").eqNullSafe(F.col("_sk")))
         .select(
             "key",
             "n_sketch",

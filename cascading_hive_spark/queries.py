@@ -10755,14 +10755,14 @@ def q_events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT key, CAST(count(*) AS BIGINT) AS exact_distinct
       FROM allh GROUP BY 1),
     est AS (
-      SELECT key, n_sketch, exact_distinct,
+      SELECT ag.key, n_sketch, exact_distinct,
              CASE WHEN n_sketch < 64 THEN CAST(exact_distinct AS DOUBLE)
                   -- 63 * 2^52 (6 significant bits): exactly the
                   -- double Spark carries as F.lit(63 * 2.0**52)
                   ELSE CAST(283726776524341248 AS DOUBLE)
                        / CAST(hk AS DOUBLE)
              END AS e
-      FROM ag JOIN ex USING (key))
+      FROM ag JOIN ex ON ag.key IS NOT DISTINCT FROM ex.key)
     SELECT key, n_sketch, exact_distinct,
            round(e, 4) + 0.0 AS est_distinct,
            round(e / CAST(exact_distinct AS DOUBLE) - 1.0, 4) + 0.0 AS rel_err

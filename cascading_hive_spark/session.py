@@ -11,6 +11,9 @@ local[N] now and a 1000-executor cluster later:
 - shuffle.partitions sized to the machine, not the 200 default.
 - Arrow enabled for the Pandas-UDF slow path.
 - UTC session timezone so timestamp semantics are stable across hosts.
+- whole-stage codegen cache sized to the working set of a session's
+  queries, so a repeated query compiles nothing (ARCHITECTURE.md,
+  "Session-level reuse").
 """
 
 from __future__ import annotations
@@ -46,6 +49,12 @@ def get_session(
         # accordingly (only applies at JVM creation)
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # static, so only here: Spark's 100-entry generated-class cache is
+        # smaller than one pass's working set (~190 classes for the
+        # perfbench hive_read ops, ~390 for iterative_ops, 136 for
+        # corpus_scan), so every pass recompiled and ran un-JITted code.
+        # An entry is ~5 KB of source plus ~2 KB of bytecode.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

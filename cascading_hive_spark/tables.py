@@ -10,8 +10,12 @@ pushdown applies at the parquet scan.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -42,7 +46,10 @@ def events_ts_stored_as_nanos(path: str) -> bool:
     needed; micro/milli timestamps read natively."""
     import pyarrow.parquet as pq
 
-    t = pq.read_schema(path).field("ts").type
+    return _ts_needs_nanos_as_long(pq.read_schema(path).field("ts").type)
+
+
+def _ts_needs_nanos_as_long(t) -> bool:
     return str(t) == "int64" or getattr(t, "unit", None) == "ns"
 
 
@@ -115,21 +122,101 @@ def _footer_probe_path(path: str) -> str:
     return path
 
 
+# --- Inferred-schema cache -------------------------------------------
+#
+# ``spark.read.parquet(path)`` runs one Spark job to infer the schema from
+# the footers; ``spark.read.schema(s).parquet(path)`` runs none. A session
+# loads the same tables again and again (every query function calls
+# load_table), so the inferred StructType is kept per path, together with
+# the events footer facts, and reused while the files are unchanged:
+#
+# - the entry is dropped when the ``(name, size, mtime_ns)`` of the file,
+#   or of any ``.parquet`` member of a directory table, differs;
+# - schemas are kept per value of the confs that change what parquet
+#   inference yields, so flipping one of them re-infers;
+# - paths os.path cannot stat (remote filesystems) are not cached.
+
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_CACHE_PATHS = 64
+
+
+@dataclass
+class _Entry:
+    stamp: tuple | None
+    nanos: bool = False  # events: ts needs spark.sql.legacy.parquet.nanosAsLong
+    divisor: int = 1_000  # events: raw int64 ts -> micros
+    schemas: dict[tuple, StructType] = field(default_factory=dict)
+
+
+_cache: OrderedDict[str, _Entry] = OrderedDict()
+_lock = threading.Lock()
+
+
+def _stamp(path: str) -> tuple | None:
+    """``(name, size, mtime_ns)`` of the file, or of every ``.parquet``
+    member of a directory table; None when there is nothing to stat."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                member = os.path.join(d, f)
+                st = os.stat(member)
+                out.append((os.path.relpath(member, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _events_footer(path: str) -> tuple[bool, int]:
+    """(nanos flag, int64 divisor) of an events table, from its footer."""
+    import pyarrow.parquet as pq
+
+    probe = _footer_probe_path(path)
+    t = pq.read_schema(probe).field("ts").type
+    divisor = int64_ts_micros_divisor(probe) if str(t) == "int64" else 1_000
+    return _ts_needs_nanos_as_long(t), divisor
+
+
+def _entry(path: str, events: bool) -> _Entry:
+    key, stamp = os.path.abspath(path), _stamp(path)
+    with _lock:
+        e = _cache.get(key)
+        if e is not None and stamp is not None and e.stamp == stamp:
+            _cache.move_to_end(key)
+            return e
+    e = _Entry(stamp, *_events_footer(path)) if events else _Entry(stamp)
+    if stamp is not None:
+        with _lock:
+            _cache[key] = e
+            _cache.move_to_end(key)
+            while len(_cache) > _CACHE_PATHS:
+                _cache.popitem(last=False)
+    return e
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        divisor = 1_000
-        probe = _footer_probe_path(path)
-        if events_ts_stored_as_nanos(probe):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            import pyarrow.parquet as pq
-
-            if str(pq.read_schema(probe).field("ts").type) == "int64":
-                divisor = int64_ts_micros_divisor(probe)
-        return normalize_events_ts(spark.read.parquet(path), divisor)
-    return spark.read.parquet(path)
+    entry = _entry(path, name == "events")
+    if entry.nanos:  # every load: a new session needs the flag too
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    schema = entry.schemas.get(confs)
+    if schema is None:
+        df = spark.read.parquet(path)
+        entry.schemas[confs] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    return normalize_events_ts(df, entry.divisor) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -796,3 +796,92 @@ def test_remove_duplicate_charspans_two_islands(spark):
         for r in remove_duplicate_charspans(df, "doc_id", "text").collect()
     }
     assert out[1].clean_text == "s--mid--e"
+
+
+def test_span_scrub_matches_python_replay(spark):
+    """remove_duplicate_spans == a pure-Python replay (gram digests ->
+    cross-doc dup grams -> merged islands -> positional scrub) on
+    random tiny corpora with planted sharing; kept + dup always tiles
+    each doc."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.dedup import (
+        duplicate_span_stats,
+        remove_duplicate_spans,
+    )
+
+    N = 3  # small n so random corpora actually share n-grams
+    token = st.sampled_from(["a", "b", "c", "d"])
+
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(st.lists(token, min_size=1, max_size=14), min_size=2, max_size=5))
+    def check(corpora):
+        rows = [(i, " ".join(toks)) for i, toks in enumerate(corpora)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r.doc_id: (r.n_tokens, r.kept_tokens, r.clean_text)
+            for r in remove_duplicate_spans(df, "doc_id", "text", n=N).collect()
+        }
+        # python replay
+        gram_docs: dict[tuple, set] = {}
+        toks = {i: t.split(" ") for i, t in rows}
+        for i, ts in toks.items():
+            for p in range(len(ts) - N + 1):
+                gram_docs.setdefault(tuple(ts[p : p + N]), set()).add(i)
+        dup = {g for g, ds in gram_docs.items() if len(ds) >= 2}
+        for i, ts in toks.items():
+            covered = set()
+            for p in range(len(ts) - N + 1):
+                if tuple(ts[p : p + N]) in dup:
+                    covered.update(range(p, p + N))
+            kept = [t for j, t in enumerate(ts) if j not in covered]
+            assert got[i] == (len(ts), len(kept), " ".join(kept)), (rows, i)
+        stats = {
+            r.doc_id: r.dup_tokens
+            for r in duplicate_span_stats(df, "doc_id", "text", n=N).collect()
+        }
+        for i in toks:
+            assert got[i][1] + stats[i] == got[i][0]
+
+    check()
+
+
+def test_source_overlap_matches_python_bruteforce(spark):
+    """source_overlap == brute-force pair counting over distinct
+    (fingerprint, source) pairs on random doc/source assignments."""
+    from itertools import combinations
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.dedup import source_overlap
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=6),  # fingerprint id
+                st.sampled_from(["s1", "s2", "s3"]),
+            ),
+            min_size=1,
+            max_size=30,
+        )
+    )
+    def check(pairs):
+        rows = [(i, f"fp{fp}", src) for i, (fp, src) in enumerate(pairs)]
+        df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+        got = {
+            (r.source_a, r.source_b): r.shared_fps
+            for r in source_overlap(df, "source", F.col("text")).collect()
+        }
+        by_fp: dict[str, set] = {}
+        for _, fp, src in rows:
+            by_fp.setdefault(fp, set()).add(src)
+        want: dict[tuple, int] = {}
+        for srcs in by_fp.values():
+            for a, b in combinations(sorted(srcs), 2):
+                want[(a, b)] = want.get((a, b), 0) + 1
+        assert got == want, (pairs, got, want)
+
+    check()

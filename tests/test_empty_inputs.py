@@ -545,3 +545,92 @@ def test_curation_funnel_empty_corpus(spark, tmp_path):
     row = _REGISTRY["pipeline_curation_funnel"][0](spark, out).first()
     assert (row.n_all, row.n_gopher, row.n_lang, row.n_classifier,
             row.n_domain_cap) == (0, 0, 0, 0, 0)
+
+
+# --- empty graphs, a one-cell index, all-NULL sketch keys --------------------
+
+
+def test_label_propagation_empty_graph(spark):
+    from cascading_hive_spark.operators.graph import label_propagation
+
+    e = spark.createDataFrame([], "src long, dst long")
+    out = label_propagation(e, iterations=2)
+    assert out.count() == 0
+    assert out.columns == ["node", "community"]
+
+
+def test_k_core_empty_graph(spark):
+    from cascading_hive_spark.operators.graph import k_core
+
+    out = k_core(spark.createDataFrame([], "src long, dst long"), k=2)
+    assert out.count() == 0
+    assert out.columns == ["node", "degree"]
+
+
+def test_ivf_single_cell_probe_is_exact(spark):
+    """n_cells=1: every vector lands in cell 0, so probing that one cell
+    is the brute-force search."""
+    import math
+
+    from cascading_hive_spark.operators import similarity as S
+
+    rows = [(i, [float(i % 3), float(i % 5) + 1.0, 1.0]) for i in range(12)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qv = rows[7][1]
+
+    def cos(v):
+        return sum(a * b for a, b in zip(v, qv)) / math.sqrt(
+            sum(a * a for a in v) * sum(b * b for b in qv)
+        )
+
+    want = [i for i, v in sorted(rows, key=lambda r: (-round(cos(r[1]), 6), r[0]))][:4]
+    q = vecs.filter("vec_id = 7").select("embedding")
+    for portable in (False, True):
+        assign, cents = S.ivf_build(vecs, n_cells=1, portable=portable)
+        assert {r.cell for r in assign.collect()} == {0}, portable
+        assert cents.count() == 1, portable
+        got = [r.vec_id for r in S.ivf_search(assign, cents, q, k=4, nprobe=1).collect()]
+        assert got == want, portable
+
+
+def _null_keys(spark):
+    return spark.createDataFrame([(None, i) for i in range(10)], "k string, v long")
+
+
+def test_heavy_hitters_all_null_keys(spark):
+    """NULL is one key: ten NULL-keyed rows are one hitter of count 10."""
+    from cascading_hive_spark.operators.sketches import heavy_hitters
+
+    rows = heavy_hitters(_null_keys(spark), ["k"], phi=0.5).collect()
+    assert [(r.k, r.cnt) for r in rows] == [(None, 10)]
+
+
+def test_kmv_all_null_keys(spark):
+    """NULL-keyed rows form one key group, as in GROUP BY, beside the
+    union row."""
+    from cascading_hive_spark.operators.sketches import kmv_distinct_by_key
+
+    rows = {r.key: r for r in kmv_distinct_by_key(_null_keys(spark), "k", "v", k=4).collect()}
+    assert set(rows) == {None, "__ALL__"}
+    assert rows[None].exact_distinct == rows["__ALL__"].exact_distinct == 10
+
+
+def test_bloom_all_null_items(spark):
+    """A NULL item is not a member: a filter built only from NULLs is
+    empty, and probing it flags nothing."""
+    from cascading_hive_spark.operators.sketches import bloom_build, bloom_probe
+
+    df = _null_keys(spark)
+    bloom = bloom_build(df, "k", m_bits=1024)
+    assert bloom.count() == 0
+    probe = spark.createDataFrame([("a",), (None,)], "k string")
+    assert bloom_probe(probe, "k", bloom, m_bits=1024).filter("bloom_hit").count() == 0
+
+
+def test_histogram_quantile_all_null_partial_keys(spark):
+    """NULL partial keys are dropped up front (documented), so an
+    all-NULL key column leaves one row of NULL estimates."""
+    from cascading_hive_spark.operators.sketches import histogram_quantile_merge
+
+    rows = histogram_quantile_merge(_null_keys(spark), "v", "k", bins=4, probs=(0.5,)).collect()
+    assert len(rows) == 1 and rows[0].q500 is None

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cascading_hive_spark.operators import similarity as S
+from cascading_hive_spark.plans import physical_plan
 from cascading_hive_spark.tables import load_table
 
 
@@ -167,6 +168,19 @@ def test_ivfpq_build_portable_deterministic(spark, emb):
     assert len(out) == 10
     # full probe + wide shortlist: self must surface with ~zero distance
     assert out[0].vec_id == 0 and out[0].dist < 1e-9
+
+
+def test_ivfpq_index_lineage_is_checkpointed(spark, sf_dir):
+    """ivfpq_build's assignments/residuals feed 6+ separate actions
+    (pq_train's probes, pq_encode, the index join); the checkpoint
+    boundary must appear in the index plan so the coarse E-step runs
+    once, not per action (ann_ivfpq_topk 10.3 -> 6.9s)."""
+    from cascading_hive_spark.operators.similarity import ivfpq_build
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    index, coarse, pqc = ivfpq_build(emb, n_cells=4, m=4, k=4, portable=True)
+    plan = physical_plan(index)
+    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan
 
 
 def test_ivf_knn_join_recall_at_partial_probe(spark, emb):

@@ -7,6 +7,8 @@ partitioned (the candidate superset varies, the answer must not);
 never evicting a key frequent enough to matter.
 """
 
+import math
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -445,3 +447,66 @@ def test_bloom_gram5_index_explode_matches_array_form(spark, sf_dir):
     ).select("doc_id", _bloom_gram5_of(F.col("_p")).alias("g"))
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
+
+
+def test_histogram_quantile_matches_python_replay(spark):
+    """histogram_quantile_merge == an exact pure-Python replay of the
+    fixed-grid pipeline (bounds -> bin -> merge -> cumulative ->
+    interpolate) on random float lists — the whole point of the
+    deterministic sketch is that this equality is EXACT, not
+    approximate."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.sketches import histogram_quantile_merge
+
+    BINS = 16
+
+    @settings(max_examples=12, deadline=None)
+    @given(
+        st.lists(
+            st.floats(
+                min_value=-1e6,
+                max_value=1e6,
+                allow_nan=False,
+                allow_infinity=False,
+                width=32,
+            ),
+            min_size=3,
+            max_size=60,
+        ).filter(lambda xs: max(xs) > min(xs))
+    )
+    def check(vals):
+        df = spark.createDataFrame(
+            [(float(v), i % 3) for i, v in enumerate(vals)], "v double, pk int"
+        )
+        row = histogram_quantile_merge(
+            df, "v", "pk", bins=BINS, probs=(0.5, 0.9)
+        ).collect()[0]
+        lo, hi = min(vals), max(vals)
+        width = (hi - lo) / float(BINS)
+        counts: dict[int, int] = {}
+        for v in vals:
+            b = min(BINS - 1, int(math.floor((v - lo) / width)))
+            counts[b] = counts.get(b, 0) + 1
+        n = len(vals)
+        for p, got in ((0.5, row.q500), (0.9, row.q900)):
+            target = p * n
+            cum = 0
+            for b in sorted(counts):
+                prev = cum
+                cum += counts[b]
+                if cum >= target and prev < target:
+                    est = lo + width * (b + (target - prev) / counts[b])
+                    break
+            # Spark/DuckDB round() is HALF_UP on the exact double;
+            # Python round() is banker's — replay HALF_UP explicitly
+            from decimal import ROUND_HALF_UP, Decimal
+
+            want = float(
+                Decimal(repr(est)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+            ) + 0.0
+            assert got == want, (vals, p, got, want)
+        assert row.n == n
+
+    check()

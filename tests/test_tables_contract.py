@@ -8,6 +8,7 @@ the actual bytes on disk when the generator switched nanos → micros.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -88,3 +89,91 @@ def test_every_table_loads_at_every_sf(spark):
         for name in TABLES:
             df = load_table(spark, d, name)
             assert df.limit(1).count() == 1, (sf, name)
+
+
+# --- inferred-schema cache --------------------------------------------
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"tables-contract-{next(_groups)}"
+    sc.setJobGroup(group, "load_table")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def nanos_as_long(spark):
+    """Restores ``spark.sql.legacy.parquet.nanosAsLong`` after the test."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key, None)
+    yield key
+    if prior is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prior)
+
+
+def test_second_load_runs_no_job(spark, tmp_path):
+    pq.write_table(pa.table({"o_orderkey": [1, 2, 3]}), str(tmp_path / "orders.parquet"))
+    d = str(tmp_path)
+    assert _jobs(spark, lambda: load_table(spark, d, "orders")) >= 1  # inference
+    assert _jobs(spark, lambda: load_table(spark, d, "orders")) == 0
+    assert load_table(spark, d, "orders").count() == 3
+
+
+def test_warm_events_load_reads_no_footer(spark, tmp_path, nanos_as_long, monkeypatch):
+    """The nanos flag and the int64 divisor are cached with the schema, and
+    every load still sets the flag a new session would need."""
+    d = _write_events(tmp_path, pa.array([u * 1000 for u in _US], type=pa.int64()))
+    want = [r.ts for r in load_table(spark, d, "events").orderBy("event_id").collect()]
+
+    def no_footer(*a, **k):
+        raise AssertionError("footer read on a warm load")
+
+    monkeypatch.setattr(pq, "read_schema", no_footer)
+    monkeypatch.setattr(pq, "ParquetFile", no_footer)
+    spark.conf.unset(nanos_as_long)
+    df = load_table(spark, d, "events")
+    assert spark.conf.get(nanos_as_long) == "true"
+    assert [r.ts for r in df.orderBy("event_id").collect()] == want
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    f = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), f)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_comment": ["x", "y"]}), f)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey", "o_comment"]
+
+
+def test_nanos_as_long_flip_misses_cache(spark, tmp_path, nanos_as_long):
+    pq.write_table(
+        pa.table({"o_orderkey": [1], "ts": pa.array([_US[0] * 1000], type=pa.timestamp("ns"))}),
+        str(tmp_path / "orders.parquet"),
+    )
+    spark.conf.set(nanos_as_long, "true")
+    assert load_table(spark, str(tmp_path), "orders").schema["ts"].dataType.typeName() == "long"
+    spark.conf.set(nanos_as_long, "false")
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        load_table(spark, str(tmp_path), "orders")
+
+
+def test_member_added_to_directory_table_misses_cache(spark, tmp_path):
+    table = tmp_path / "orders.parquet"
+    table.mkdir()
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), str(table / "part-0.parquet"))
+    d = str(tmp_path)
+    load_table(spark, d, "orders")
+    assert _jobs(spark, lambda: load_table(spark, d, "orders")) == 0
+    pq.write_table(pa.table({"o_orderkey": [3]}), str(table / "part-1.parquet"))
+    assert _jobs(spark, lambda: load_table(spark, d, "orders")) >= 1
+    assert load_table(spark, d, "orders").count() == 3
