@@ -113,7 +113,7 @@ def asof_join(
         # [currentRow, unboundedFollowing) frame: Spark's unbounded-
         # following frame re-evaluates the aggregate from the current
         # row to the partition end for EVERY row — O(n^2) per key
-        # partition. A 2M-row hot key turned the 10Mx1M scale smoke
+        # partition. A 2M-row hot key turned a 10Mx1M as-of join
         # from seconds into hours; the growing-frame formulation is
         # O(n) and produces the same match (tie choice among right
         # rows sharing (key, ts) is engine-dependent either way, as

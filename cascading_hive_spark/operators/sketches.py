@@ -547,8 +547,8 @@ def bloom_flag_grams_pandas(words: list[int], m_bits: int, k: int = 3,
     filter is ~2 MB), no join, no shuffle, no state store. The probe
     itself is Arrow-batched Python: per gram, k hashlib.md5 position
     hashes with early-exit on the first missing bit (only the filter
-    closure is numpy) — the cost model measured in scale_smoke, not a
-    vectorized bit test.
+    closure is numpy) — the cost model BASELINE.md's bloom figures
+    measured, not a vectorized bit test.
 
     The position hash replicates _bloom_positions' portable
     convention bit-for-bit (md5(seed + j + '|' + item) first-8-hex as

@@ -1212,81 +1212,6 @@ def dedupe_lines_docs(
     )
 
 
-def hash_embed_docs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    dim: int = 16,
-    n: int = 3,
-    seed: str = "he13|",
-    portable: bool = True,
-) -> DataFrame:
-    """``hash_embed`` as a two-stage scale path: gram hashing stays a
-    JVM column expression (bit-identical buckets/signs to the column
-    version), but the per-document accumulation runs as one numpy
-    ``bincount`` per Arrow row instead of the array-accumulator fold
-    — the fold allocates a fresh dim-array per gram and measured
-    ~45s/1M docs at dim=16; this path is the same integers at a
-    fraction of the cost. Returns (id, embedding array<bigint>),
-    asserted equal to the column version in tests."""
-    import numpy as np  # noqa: F401 — imported in the worker below
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    buckets = char_ngram_buckets(F.col(text_col), n, dim, seed, portable)
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.length(t) - F.lit(n - 1), F.lit(1))
-    )
-    if portable:
-        sgn = F.transform(
-            starts,
-            lambda i: F.when(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(seed + "s|"), t.substr(i, F.lit(n)))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 2
-                == 0,
-                F.lit(1),
-            ).otherwise(F.lit(-1)),
-        )
-    else:
-        sgn = F.transform(
-            starts,
-            lambda i: F.when(
-                F.pmod(
-                    F.xxhash64(F.concat(F.lit(seed + "s|"), t.substr(i, F.lit(n)))),
-                    F.lit(2),
-                )
-                == 0,
-                F.lit(1),
-            ).otherwise(F.lit(-1)),
-        )
-    pre = df.select(
-        F.col(id_col), buckets.alias("_b"), sgn.alias("_s")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            vecs = []
-            for b, s in zip(pdf["_b"], pdf["_s"]):
-                acc = np.bincount(
-                    np.asarray(b, dtype=np.int64),
-                    weights=np.asarray(s, dtype=np.float64),
-                    minlength=dim,
-                )
-                vecs.append(acc.astype(np.int64).tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], "embedding": vecs})
-
-    return pre.mapInPandas(batches, f"{id_col} long, embedding array<bigint>")
-
-
 # Deterministic synthetic multilingual corpus for fitting/refitting
 # the frozen lang-id models (the sf tables carry no language signal —
 # their text is one shared vocabulary under rotating lang labels, so

@@ -7592,7 +7592,8 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # excluded UP FRONT (before n_orders/marginals, identically in both
 # engines) — one pathological 10k-item basket would otherwise
 # generate 50M pairs inside the single join task owning that order
-# key (quadratic in basket size; priced in scale_smoke.py basket).
+# key (quadratic in basket size; pinned by tests/test_scale_patterns.py::
+# test_orders_basket_lift_mega_order_cut_before_pair_join).
 # Degenerate mega-baskets carry no association signal anyway — every
 # pair in them co-occurs once. No TPC-H basket exceeds 7 items, so
 # the guard is invisible to the driver tables.

@@ -38,7 +38,7 @@ def get_session(
         shuffle_partitions = cpus
 
     # 8g default: enough for local-mode shuffles up to ~1M-doc corpora
-    # (the scale smoke in BASELINE.md), while staying small enough that
+    # (BASELINE.md's scale figures), while staying small enough that
     # G1 young collections stay cheap — a 48g heap measured ~1.8x
     # slower across the whole bench. Override with SPARK_GRAFT_DRIVER_MEM.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")

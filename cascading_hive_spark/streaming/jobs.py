@@ -23,33 +23,25 @@ SESSION_GAP_US = 1_800_000_000  # 30 minutes, matching events_sessionize
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet. File-stream sources need an
-    explicit schema, so probe the static file's footer instead of
-    hardcoding one — the driver has shipped ``ts`` both as
-    TIMESTAMP(NANOS) and timestamp[us] across rounds. The probe and the
-    ts normalization are shared with the batch loader (tables.py) so a
-    future data-shape change has exactly one place to go stale."""
+    explicit schema; it comes, with the int64 ``ts`` divisor, from the
+    batch loader's cache (tables.py), so the stream and ``load_table``
+    read the same ``ts`` and a warm call runs no Spark job."""
     import os
 
-    from ..tables import (
-        _footer_probe_path,
-        events_ts_stored_as_nanos,
-        normalize_events_ts,
-    )
+    from ..tables import normalize_events_ts, table_schema
 
     path = os.path.join(sf_dir, "events.parquet")
-    if events_ts_stored_as_nanos(_footer_probe_path(path)):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static_schema = spark.read.parquet(path).schema
+    schema, divisor = table_schema(spark, path, events=True)
     if os.path.isdir(path):
         # Spark-written table: stream the directory's members directly
-        raw = spark.readStream.schema(static_schema).parquet(path)
+        raw = spark.readStream.schema(schema).parquet(path)
     else:
         raw = (
-            spark.readStream.schema(static_schema)
+            spark.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    return normalize_events_ts(raw)
+    return normalize_events_ts(raw, divisor)
 
 
 def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -512,14 +504,10 @@ def scaled_state_partitions(
     replay dropped 7.1s -> 2.9s at sf0.1 going 32 -> 8 partitions,
     rows identical; watermark eviction and emitted rows are
     partitioning-independent). At warehouse scale the same formula
-    saturates ``defaultParallelism``. Override with
-    $SPARK_GRAFT_STATE_PARTITIONS."""
+    saturates ``defaultParallelism``."""
     import math
     import os
 
-    override = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if override:
-        return max(1, int(override))
     from ..tables import _footer_probe_path
 
     try:

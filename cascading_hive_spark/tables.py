@@ -38,21 +38,6 @@ BROADCAST_SAFE = frozenset({"region", "nation"})
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def events_ts_stored_as_nanos(path: str) -> bool:
-    """True when the parquet footer stores ``ts`` as TIMESTAMP(NANOS)
-    (or a raw int64 of nanoseconds) — the shape Spark's reader rejects
-    unless ``spark.sql.legacy.parquet.nanosAsLong`` is set. Probed from
-    the footer (pyarrow) so the flag is only flipped when actually
-    needed; micro/milli timestamps read natively."""
-    import pyarrow.parquet as pq
-
-    return _ts_needs_nanos_as_long(pq.read_schema(path).field("ts").type)
-
-
-def _ts_needs_nanos_as_long(t) -> bool:
-    return str(t) == "int64" or getattr(t, "unit", None) == "ns"
-
-
 def int64_ts_micros_divisor(path: str) -> int:
     """Divisor that converts a raw-int64 ``ts`` column to epoch-MICROS,
     inferred from the column's parquet row-group min statistic rather
@@ -176,13 +161,18 @@ def _stamp(path: str) -> tuple | None:
 
 
 def _events_footer(path: str) -> tuple[bool, int]:
-    """(nanos flag, int64 divisor) of an events table, from its footer."""
+    """(nanos flag, int64 divisor) of an events table, from its footer.
+    The flag is true when ``ts`` is stored as TIMESTAMP(NANOS) or as a
+    raw int64, the shapes Spark's reader rejects unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is set; micro and milli
+    timestamps read natively, so the flag stays off for them."""
     import pyarrow.parquet as pq
 
     probe = _footer_probe_path(path)
     t = pq.read_schema(probe).field("ts").type
-    divisor = int64_ts_micros_divisor(probe) if str(t) == "int64" else 1_000
-    return _ts_needs_nanos_as_long(t), divisor
+    int64 = str(t) == "int64"
+    divisor = int64_ts_micros_divisor(probe) if int64 else 1_000
+    return int64 or getattr(t, "unit", None) == "ns", divisor
 
 
 def _entry(path: str, events: bool) -> _Entry:
@@ -202,21 +192,28 @@ def _entry(path: str, events: bool) -> _Entry:
     return e
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    entry = _entry(path, name == "events")
-    if entry.nanos:  # every load: a new session needs the flag too
+def table_schema(spark: SparkSession, path: str, events: bool) -> tuple[StructType, int]:
+    """The inferred schema of the parquet table at ``path`` and, for an
+    events table, the divisor of a raw int64 ``ts`` (1,000 otherwise),
+    from the cache above. Sets the nanosAsLong flag when the footer needs
+    it, on every call: a new session needs the flag too."""
+    entry = _entry(path, events)
+    if entry.nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
     schema = entry.schemas.get(confs)
     if schema is None:
-        df = spark.read.parquet(path)
-        entry.schemas[confs] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    return normalize_events_ts(df, entry.divisor) if name == "events" else df
+        schema = entry.schemas[confs] = spark.read.parquet(path).schema
+    return schema, entry.divisor
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name not in TABLES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, divisor = table_schema(spark, path, name == "events")
+    df = spark.read.schema(schema).parquet(path)
+    return normalize_events_ts(df, divisor) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -722,25 +722,6 @@ def test_dedupe_lines_docs_equals_column_version(spark):
     assert col_v == arrow_v
 
 
-def test_hash_embed_docs_equals_column_version(spark):
-    """The Arrow bincount scale path produces the exact integer
-    vectors of the column fold, both hash families."""
-    from cascading_hive_spark.operators.text import hash_embed, hash_embed_docs
-
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, None), (3, ""), (4, "zz")],
-        "doc_id long, text string",
-    )
-    for portable in (True, False):
-        col_v = {r.doc_id: r.v for r in df.select(
-            "doc_id",
-            hash_embed(F.col("text"), dim=8, portable=portable).alias("v"),
-        ).collect()}
-        arrow_v = {r.doc_id: r.embedding for r in hash_embed_docs(
-            df, "doc_id", "text", dim=8, portable=portable).collect()}
-        assert col_v == arrow_v, portable
-
-
 def test_suppress_small_groups_semantics(spark):
     """Under-k groups fold into ONE label bucket with re-summed
     measures; at-or-over-k groups publish unchanged; every published
@@ -827,3 +808,92 @@ def test_dsir_weights_flag_and_union_identical(spark, sf_dir):
     union = dsir_weights(d, d.filter(F.col("lang") == "en"), "text")
     assert flag == union
     assert len(flag) == 128
+
+
+def test_dedupe_lines_properties_hypothesis(spark):
+    """Properties: output lines are exactly the input's distinct lines
+    in first-occurrence order (pure-Python model), and the operator is
+    idempotent."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from pyspark.sql import functions as F
+
+    from cascading_hive_spark.operators.text import dedupe_lines
+
+    line_s = st.text(
+        alphabet=st.sampled_from("ab x"), min_size=0, max_size=4
+    )
+    docs_s = st.lists(
+        st.lists(line_s, min_size=1, max_size=8), min_size=1, max_size=6
+    )
+
+    @settings(max_examples=12, deadline=None)
+    @given(docs=docs_s)
+    def prop(docs):
+        rows = [(i, "\n".join(ls)) for i, ls in enumerate(docs)]
+        df = spark.createDataFrame(rows, "id long, t string")
+        out = {
+            r.id: (r.d, r.dd)
+            for r in df.select(
+                "id",
+                dedupe_lines(F.col("t")).alias("d"),
+                dedupe_lines(dedupe_lines(F.col("t"))).alias("dd"),
+            ).collect()
+        }
+        for i, ls in enumerate(docs):
+            model = list(dict.fromkeys(ls))
+            assert out[i][0] == "\n".join(model), (ls, out[i][0])
+            assert out[i][1] == out[i][0]
+
+    prop()
+
+
+def test_hash_embed_matches_python_model_hypothesis(spark):
+    """hash_embed (portable md5 leg) equals a pure-Python hashlib
+    replay of bucket/sign/accumulate on arbitrary short texts —
+    the cross-engine contract, modeled outside Spark entirely."""
+    import hashlib
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from pyspark.sql import functions as F
+
+    from cascading_hive_spark.operators.text import hash_embed
+
+    def model(text, dim=8, n=3, seed="he13|"):
+        t = text or ""
+        n_grams = max(len(t) - (n - 1), 1)
+        vec = [0] * dim
+        for i in range(n_grams):
+            g = t[i : i + n]
+            b = int(hashlib.md5((seed + g).encode()).hexdigest()[:8], 16) % dim
+            s = int(
+                hashlib.md5((seed + "s|" + g).encode()).hexdigest()[:8], 16
+            ) % 2
+            vec[b] += 1 if s == 0 else -1
+        return vec
+
+    texts_s = st.lists(
+        st.text(alphabet=st.sampled_from("abc x.z"), min_size=0, max_size=12),
+        min_size=1,
+        max_size=8,
+    )
+
+    @settings(max_examples=10, deadline=None)
+    @given(texts=texts_s)
+    def prop(texts):
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "id long, t string"
+        )
+        got = {
+            r.id: r.v
+            for r in df.select(
+                "id", hash_embed(F.col("t"), dim=8).alias("v")
+            ).collect()
+        }
+        for i, t in enumerate(texts):
+            assert got[i] == model(t), (t, got[i], model(t))
+
+    prop()

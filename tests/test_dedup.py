@@ -885,3 +885,27 @@ def test_source_overlap_matches_python_bruteforce(spark):
         assert got == want, (pairs, got, want)
 
     check()
+
+
+def test_embedding_lsh_auto_bits_keep_candidates_linear(spark, status, shuffled_plans):
+    """Shape guard: with the default (auto-sized) band bits, random
+    pairs collide on a band with p ~ 2^-B and B grows by log2(n), so
+    candidate pairs and every shuffle grow linearly. Fixed band bits let
+    the buckets flood: candidates grow with n^2. Record counters at n
+    and 4n (B = 10 and 12): shuffle records grow about 4x (15 % slack),
+    not 16x."""
+    from cascading_hive_spark.sources.synthetic import synthetic_embeddings
+
+    def pairs(n):
+        emb = synthetic_embeddings(
+            spark, n=n, dim=64, n_clusters=n, dup_rate=0.02
+        ).localCheckpoint(eager=True)
+        counted = status.run(
+            lambda: D.embedding_lsh_pairs(emb, "vec_id", "embedding", threshold=0.9).count()
+        )
+        assert counted.value >= 0.9 * n * 0.02  # the planted near-duplicates
+        return counted
+
+    small, big = pairs(10_000), pairs(40_000)
+    assert big.shuffle_records <= 4.6 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)

@@ -87,3 +87,80 @@ def test_triangle_count_known_graph_and_orientation_materialized_once(spark):
     assert (row.n_wedges, row.n_triangles) == (7, 4)
     plan = triangle_count(df)._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan
+
+
+# --- shape guards: record counters at n and 4n ---------------------------
+#
+# Linear work reads 4x the shuffle records at 4n. The 15 % slack covers
+# boundary effects of the synthetic graphs; the shapes these guard
+# against read about 16x.
+
+
+def test_triangle_count_hub_work_grows_linearly(spark, status, shuffled_plans):
+    """A ring, one random chord per node, and a hub wired to every third
+    node: hub degree d = n/3. An id-ordered orientation points every hub
+    edge out of the hub (node 0) and pairs its d out-neighbours, d^2/2
+    wedge rows; the degree-ordered one makes the hub a head, so no tail
+    pairs more than a few neighbours."""
+    from pyspark.sql import functions as F
+
+    from cascading_hive_spark.operators.graph import triangle_count
+
+    def count(n):
+        base = spark.range(1, n)
+        ring = base.select(
+            F.col("id").alias("src"), F.pmod(F.col("id") + 1, F.lit(n)).alias("dst")
+        )
+        hub = base.filter(F.col("id") % 3 == 0).select(
+            F.col("id").alias("src"), F.lit(0).alias("dst")
+        )
+        chord = base.select(
+            F.col("id").alias("src"),
+            F.pmod(
+                F.col("id") + 2 + F.pmod(F.abs(F.xxhash64("id")), F.lit(97)), F.lit(n)
+            ).alias("dst"),
+        )
+        edges = ring.union(hub).union(chord).localCheckpoint(eager=True)
+        return status.run(lambda: triangle_count(edges).first())
+
+    small, big = count(3_000), count(12_000)
+    assert small.value.n_triangles > 0
+    assert big.shuffle_records <= 4.6 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)
+
+
+def test_k_core_planted_clique_work_grows_linearly(spark, status, shuffled_plans):
+    """n random edges over n/3 nodes (mean degree ~6, so the 8-core of
+    that part is empty) plus a planted 30-clique, which must be the whole
+    8-core. Peeling shrinks the edge set every round, so the rounds and
+    their shuffle records track the edge count, and the peel depth (the
+    job count) does not grow with n."""
+    from pyspark.sql import functions as F
+
+    from cascading_hive_spark.operators.graph import k_core
+
+    def core(n):
+        n_nodes = n // 3
+        rnd = spark.range(n).select(
+            F.pmod(F.abs(F.xxhash64("id")), F.lit(n_nodes)).alias("src"),
+            F.pmod(F.abs(F.xxhash64(F.col("id") + 7)), F.lit(n_nodes)).alias("dst"),
+        )
+        clique = [n_nodes + i for i in range(30)]
+        planted = spark.createDataFrame(
+            [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]],
+            "src long, dst long",
+        )
+        edges = rnd.union(planted).localCheckpoint(eager=True)
+        counted = status.run(lambda: k_core(edges, 8).collect())
+        assert {(r.node, r.degree) for r in counted.value} == {(c, 29) for c in clique}
+        return counted
+
+    small, big = core(30_000), core(120_000)
+    assert len(big.jobs) <= len(small.jobs) + 4, (len(small.jobs), len(big.jobs))
+    assert big.shuffle_records <= 4.6 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)
+    # all rounds together move a bounded multiple of the edge count (17
+    # records per edge here); rounds that replay earlier rounds, or
+    # re-read the whole edge set, move 26 and 44
+    for n, counted in ((30_000, small), (120_000, big)):
+        assert counted.shuffle_records <= 20 * n, (n, counted.shuffle_records)

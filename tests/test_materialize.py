@@ -13,22 +13,6 @@ _DESC = "spark.job.description"
 _GROUP = "spark.jobGroup.id"
 
 
-def _jobs(spark) -> dict[int, tuple[str | None, str | None]]:
-    """job id -> (description, group) for every job the status store has
-    seen, after the listener bus has delivered all pending events."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    seq = jsc.statusStore().jobsList(None)
-    out = {}
-    for j in (seq.apply(i) for i in range(seq.size())):
-        d, g = j.description(), j.jobGroup()
-        out[j.jobId()] = (
-            d.get() if d.isDefined() else None,
-            g.get() if g.isDefined() else None,
-        )
-    return out
-
-
 @pytest.fixture
 def caller(spark):
     """Run the test under its own job group and description, and clear
@@ -40,13 +24,13 @@ def caller(spark):
     sc.setLocalProperty(_DESC, None)
 
 
-def test_pagerank_cut_jobs_carry_label_and_caller_group(spark, caller, monkeypatch):
+def test_pagerank_cut_jobs_carry_label_and_caller_group(spark, caller, status, monkeypatch):
     started: list[tuple[str, dict]] = []
 
     def recording(df, label, **kw):
-        before = _jobs(spark)
+        before = status.jobs()
         out = session.materialize(df, label, **kw)
-        after = _jobs(spark)
+        after = status.jobs()
         started.append((label, {k: v for k, v in after.items() if k not in before}))
         return out
 
@@ -85,13 +69,13 @@ def test_prior_description_restored(spark, caller):
     assert caller.getLocalProperty(_DESC) == "caller"
 
 
-def test_eager_runs_its_job_inside_the_call(spark, caller):
+def test_eager_runs_its_job_inside_the_call(spark, caller, status):
     # a plan without an exchange: a lazy cut starts no job, an eager one does
-    before = _jobs(spark)
+    before = status.jobs()
     session.materialize(spark.range(10), "test: lazy")
-    lazy = _jobs(spark)
+    lazy = status.jobs()
     session.materialize(spark.range(10), "test: eager", eager=True)
-    eager = _jobs(spark)
+    eager = status.jobs()
     assert lazy.keys() == before.keys()
     new = [eager[k] for k in eager.keys() - lazy.keys()]
     assert new and all(v == ("test: eager", "test-materialize") for v in new), new

@@ -964,3 +964,112 @@ def test_dhash_dispatch_gif_collides_with_png(spark):
     )
     got = {r.id: r.dhash for r in dhash_encoded_images(df).collect()}
     assert got[1] == got[2]
+
+
+def test_mp4_timing_roundtrip_hypothesis():
+    """Pure-Python property: random run-length stts tables, wrapped in
+    randomly-noised ISO-BMFF containers (junk sibling boxes, optional
+    largesize moov), round-trip through parse_mp4_frame_runs exactly.
+    No Spark needed — this is the byte-walk contract."""
+    import struct
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.multimodal import parse_mp4_frame_runs
+
+    def box(tag: bytes, body: bytes, largesize=False) -> bytes:
+        if largesize:
+            return struct.pack(">I", 1) + tag + struct.pack(">Q", 16 + len(body)) + body
+        return struct.pack(">I", 8 + len(body)) + tag + body
+
+    runs_s = st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=2**31 - 1),
+            st.integers(min_value=0, max_value=2**31 - 1),
+        ),
+        min_size=0,
+        max_size=8,
+    )
+
+    @settings(max_examples=60, deadline=None)
+    @given(
+        runs=runs_s,
+        timescale=st.integers(min_value=1, max_value=2**31 - 1),
+        junk=st.binary(min_size=0, max_size=12),
+        largesize=st.booleans(),
+        mdhd_version=st.sampled_from([0, 1]),
+    )
+    def check(runs, timescale, junk, largesize, mdhd_version):
+        stts_body = bytes([0, 0, 0, 0]) + struct.pack(">I", len(runs))
+        for c, d in runs:
+            stts_body += struct.pack(">II", c, d)
+        if mdhd_version == 1:
+            mdhd = box(
+                b"mdhd",
+                bytes([1, 0, 0, 0])
+                + struct.pack(">QQIQ", 0, 0, timescale, 0)
+                + b"\x00" * 4,
+            )
+        else:
+            mdhd = box(
+                b"mdhd",
+                bytes([0, 0, 0, 0])
+                + struct.pack(">IIII", 0, 0, timescale, 0)
+                + b"\x00" * 4,
+            )
+        noise = box(b"free", junk)
+        mdia = box(b"mdia", noise + mdhd + box(b"minf", box(b"stbl", noise + box(b"stts", stts_body))))
+        moov = box(b"moov", noise + box(b"trak", mdia), largesize=largesize)
+        blob = box(b"ftyp", b"isom\x00\x00\x00\x00") + noise + moov
+        got_ts, got_runs = parse_mp4_frame_runs(blob)
+        assert got_ts == timescale
+        assert got_runs == list(runs)
+        # and a truncated tail never raises (totality under corruption)
+        for cut in (len(blob) - 1, len(blob) // 2, 7, 0):
+            parse_mp4_frame_runs(blob[:cut])
+
+    check()
+
+
+def test_wav_pcm_roundtrip_hypothesis():
+    """Pure-Python property: arbitrary int16 sample lists, wrapped in
+    RIFF containers with random junk chunks and optional odd-byte
+    tails, decode back exactly through wav_pcm_samples."""
+    import struct
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from cascading_hive_spark.operators.multimodal import wav_pcm_samples
+
+    samples_s = st.lists(
+        st.integers(min_value=-32768, max_value=32767), min_size=0, max_size=64
+    )
+
+    @settings(max_examples=80, deadline=None)
+    @given(
+        samples=samples_s,
+        junk=st.binary(min_size=0, max_size=9),
+        junk_first=st.booleans(),
+        dangle=st.booleans(),
+    )
+    def prop(samples, junk, junk_first, dangle):
+        body = b"".join(struct.pack("<h", s) for s in samples)
+        fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
+        fmt_chunk = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        junk_chunk = b"JUNK" + struct.pack("<I", len(junk)) + junk
+        if len(junk) % 2:
+            junk_chunk += b"\x00"  # RIFF word alignment
+        data_chunk = b"data" + struct.pack("<I", len(body)) + body
+        chunks = (
+            junk_chunk + fmt_chunk + data_chunk
+            if junk_first
+            else fmt_chunk + junk_chunk + data_chunk
+        )
+        b = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+        if dangle:
+            b += b"\x07"  # trailing half-sample noise after all chunks
+        assert wav_pcm_samples(b) == samples
+
+    prop()

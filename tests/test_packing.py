@@ -153,3 +153,31 @@ def test_shard_by_budget_validation(spark, docs):
         shard_by_token_budget(docs, "doc_id", budget=0, text_col="text")
     with pytest.raises(ValueError, match="exactly one"):
         shard_by_token_budget(docs, "doc_id", budget=10)
+
+
+def test_pack_sequences_skewed_group_stays_balanced(spark, status, shuffled_plans):
+    """Shape guard: group = floor(512 u^2) puts about 4.4 % of the
+    documents in group 0, 22x the uniform share. Grouped next-fit still
+    spreads the 512 groups over every reduce task, so the task holding
+    group 0 reads about 1.2x the median task; a walk over one global
+    group reads everything in one task. Record counters at n and 4n:
+    shuffle records grow about 4x (15 % slack) and no task reads more
+    than twice the median task's records."""
+    from cascading_hive_spark.sources.synthetic import synthetic_documents
+
+    u = F.pmod(F.xxhash64("doc_id"), F.lit(1_000_000)) / 1_000_000.0
+    skewed = F.floor(F.lit(512) * u * u)
+
+    def packed(n):
+        docs = synthetic_documents(spark, n=n, n_vocab=5000).localCheckpoint(eager=True)
+        counted = status.run(lambda: pack_sequences(
+            docs, "doc_id", text_col="text", capacity=CAP, group_expr=skewed
+        ).count())
+        assert counted.value == n
+        return counted
+
+    small, big = packed(20_000), packed(80_000)
+    assert big.shuffle_records <= 4.6 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)
+    for counted in (small, big):
+        assert counted.read_skew <= 2.0, counted.stages

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cascading_hive_spark import queries as Q
+from cascading_hive_spark.operators.relational import binary_auc
 from cascading_hive_spark.plans import (
     assert_broadcast_join,
     assert_no_cartesian,
@@ -156,7 +157,7 @@ def test_asof_no_unbounded_following_frame(spark, sf_dir):
     [currentRow, unboundedFollowing) window frame: Spark re-evaluates
     that frame's aggregate from the current row to the partition end
     for EVERY row — O(n^2) per key partition (a 2M-row hot key turned
-    the 10Mx1M scale smoke from seconds into hours). The forward match
+    a 10Mx1M as-of join from seconds into hours). The forward match
     is a running last() over the reversed sort instead."""
     from cascading_hive_spark.plans import physical_plan
 
@@ -1067,3 +1068,116 @@ def test_percentile_calls_are_array_form(spark, sf_dir):
         # each percentile(...) call carries its own buffer; the array
         # form leaves at most one exact + one approx per aggregate
         assert plan.count("percentile(") <= 2, (name, plan)
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(rows, "score double, y int")
+
+
+def test_auc_perfect_reversed_and_tied(spark):
+    # perfect separation -> 1.0; reversed -> 0.0; constant score -> 0.5
+    perfect = _df(spark, [(float(i), int(i >= 5)) for i in range(10)])
+    assert binary_auc(perfect, "score", "y").first().auc == 1.0
+    reverse = _df(spark, [(float(-i), int(i >= 5)) for i in range(10)])
+    assert binary_auc(reverse, "score", "y").first().auc == 0.0
+    tied = _df(spark, [(1.0, i % 2) for i in range(10)])
+    assert binary_auc(tied, "score", "y").first().auc == 0.5
+
+
+def test_auc_matches_pure_python_midrank(spark):
+    """Differential against a plain-Python midrank Mann-Whitney on a
+    deterministic mixed-tie dataset."""
+    rows = [
+        (round(((i * 37) % 11) / 7.0, 3), int(((i * 53) % 13) < 6))
+        for i in range(200)
+    ]
+    got = binary_auc(_df(spark, rows), "score", "y").first()
+
+    # pure-python midrank AUC (micro-image, like the operator)
+    micro = [(round(s * 1_000_000), y) for s, y in rows]
+    from collections import Counter
+
+    by_s: dict = {}
+    for s, y in micro:
+        np_b, nn_b = by_s.get(s, (0, 0))
+        by_s[s] = (np_b + y, nn_b + (1 - y))
+    cum = 0
+    rank_sum2 = 0
+    n_pos = n_neg = 0
+    for s in sorted(by_s):
+        np_b, nn_b = by_s[s]
+        rank_sum2 += np_b * (2 * cum + np_b + nn_b + 1)
+        cum += np_b + nn_b
+        n_pos += np_b
+        n_neg += nn_b
+    want = (rank_sum2 - n_pos * (n_pos + 1)) / (2.0 * n_pos * n_neg)
+    assert got.auc == round(want, 6) + 0.0
+    assert (got.n_pos, got.n_neg, got.n_null) == (n_pos, n_neg, 0)
+    assert Counter(y for _, y in rows)[1] == n_pos
+
+
+def test_auc_excludes_nulls_and_counts_them(spark):
+    rows = [(1.0, 1), (0.0, 0), (None, 1), (2.0, None)]
+    df = spark.createDataFrame(rows, "score double, y int")
+    got = binary_auc(df, "score", "y").first()
+    assert got.n_null == 2
+    assert (got.n_pos, got.n_neg) == (1, 1)
+    assert got.auc == 1.0
+
+
+def test_auc_degenerate_inputs_yield_null_not_crash(spark):
+    """AUC is undefined without both classes: single-class and empty
+    inputs must return NULL auc with audit counts — not an ANSI
+    DIVIDE_BY_ZERO (the bug this test pinned)."""
+    one_class = _df(spark, [(1.0, 1), (2.0, 1)])
+    row = binary_auc(one_class, "score", "y").first()
+    assert row.auc is None and (row.n_pos, row.n_neg) == (2, 0)
+    empty = spark.createDataFrame([], "score double, y int")
+    row = binary_auc(empty, "score", "y").first()
+    assert row.auc is None and (row.n_pos, row.n_neg, row.n_null) == (0, 0, 0)
+
+
+def test_auc_corpus_never_sorts_globally(spark, sf_dir):
+    """The corpus pass is a map-side-combined groupBy; the cumulative
+    midrank uses the two-phase prefix (window PARTITIONED by the
+    order-preserving score bucket + a global offset window over the
+    tiny per-bucket totals) — no corpus- or counts-sized single-
+    partition sort in the plan."""
+    from cascading_hive_spark.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents").select(
+        (F.col("n_chars") / 100.0).alias("score"),
+        (F.col("doc_id") % 2).cast("int").alias("y"),
+    )
+    out = binary_auc(d, "score", "y")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the counts-table cumulative window is hash-partitioned by _bk
+    assert "hashpartitioning(_bk" in plan, plan
+    assert "HashAggregate" in plan
+    assert out.first().auc is not None
+
+
+def test_binary_auc_checkpoint_single_upstream_execution(spark):
+    """binary_auc's thin projection is a lineage cut: the (expensive)
+    upstream scorer must evaluate once per row, not once per
+    consumer. Counted with an accumulator through a Python UDF."""
+    from pyspark.sql.types import DoubleType
+
+    from cascading_hive_spark.operators.relational import binary_auc
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def scored(x: float) -> float:
+        acc.add(1)
+        return x
+
+    udf = F.udf(scored, DoubleType())
+    df = spark.range(100).select(
+        udf((F.col("id") % 7).cast("double")).alias("score"),
+        (F.col("id") % 2).alias("y"),
+    )
+    out = binary_auc(df, "score", "y").collect()
+    assert len(out) == 1
+    # one evaluation per row (the pre-r17 shape ran the scorer once
+    # per consumer: >= 200)
+    assert acc.value == 100

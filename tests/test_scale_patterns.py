@@ -308,3 +308,37 @@ def test_skyline_incremental_multibatch_matches_bruteforce(spark, seed):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     want = _brute_skyline([(a, b, c) for _, a, b, c in rows], 2, 1)
     assert got == want and len(got) > 0
+
+
+def test_orders_basket_lift_mega_order_cut_before_pair_join(spark, status, shuffled_plans, tmp_path):
+    """Shape guard for ``orders_basket_lift``: n orders of 5 lines plus
+    ONE planted mega-order of n/2 distinct parts, written as the only
+    table of a temporary sf_dir. In-basket pair work is quadratic in
+    basket size, so the mega-order alone would put (n/2)^2/2 rows through
+    the pair join and its aggregate; the ``_bs <= 1000`` guard drops it
+    before the join. Record counters at n and 4n: shuffle records grow
+    about 4x (15 % slack), not 16x."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cascading_hive_spark.queries import q_orders_basket_lift
+
+    def lift(n):
+        rng = random.Random(n)
+        keys = [i % n for i in range(5 * n)] + [n + 1] * (n // 2)
+        parts = [rng.randrange(200) for _ in range(5 * n)] + [1000 + i for i in range(n // 2)]
+        d = tmp_path / f"n{n}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({"l_orderkey": pa.array(keys, pa.int64()),
+                      "l_partkey": pa.array(parts, pa.int64())}),
+            str(d / "lineitem.parquet"),
+        )
+        return status.run(lambda: q_orders_basket_lift(spark, str(d)).count())
+
+    small, big = lift(2_400), lift(9_600)
+    assert small.value > 0
+    assert big.shuffle_records <= 4.6 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)

@@ -510,3 +510,29 @@ def test_histogram_quantile_matches_python_replay(spark):
         assert row.n == n
 
     check()
+
+
+def test_heavy_hitters_zipf_shuffle_flat_in_n(spark, status, shuffled_plans):
+    """Shape guard: log-uniform (Zipf s=1) keys over [1, 10^12), so most
+    keys occur once and their number grows with n. Pass 1 keeps at most
+    k = 1/phi + 1 candidates per input partition and pass 2 recounts only
+    candidate keys, so the shuffle carries O(k x partitions) records
+    whatever n is; an exact groupBy shuffles every distinct key. Record
+    counters at n and 4n over the same 8 partitions: shuffle records
+    stay within 25 % of each other."""
+    u = (F.pmod(F.xxhash64("id"), F.lit(1 << 30)) + 1) / float(1 << 30)
+
+    def hitters(n):
+        df = spark.range(0, n, 1, 8).select(
+            F.floor(F.pow(F.lit(1e12), u)).cast("long").alias("key")
+        ).localCheckpoint(eager=True)
+        counted = status.run(lambda: heavy_hitters(df, ["key"], phi=0.01).collect())
+        exact = df.groupBy("key").count().filter(F.col("count") > 0.01 * n)
+        assert {(r.key, r.cnt) for r in counted.value} == {
+            (r.key, r["count"]) for r in exact.collect()
+        }
+        return counted
+
+    small, big = hitters(50_000), hitters(200_000)
+    assert big.shuffle_records <= 1.25 * small.shuffle_records, (
+        small.shuffle_records, big.shuffle_records)

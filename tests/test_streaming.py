@@ -608,9 +608,9 @@ def test_streaming_bloom_gate_equals_batch(spark, sf_dir):
     assert streamed == batch and len(streamed) == 500
 
 
-def test_scaled_state_partitions_formula(spark, sf_dir, monkeypatch):
+def test_scaled_state_partitions_formula(spark, sf_dir):
     """State-store count derives from the replay source's row count,
-    clamped to [1, defaultParallelism], with an env override."""
+    clamped to [1, defaultParallelism]."""
     from cascading_hive_spark.streaming.jobs import scaled_state_partitions
 
     # sf0.001 events: 1000 rows -> ceil(1000/250k) = 1
@@ -618,8 +618,6 @@ def test_scaled_state_partitions_formula(spark, sf_dir, monkeypatch):
     # small rows_per_part pushes toward the core clamp
     dp = spark.sparkContext.defaultParallelism
     assert scaled_state_partitions(spark, sf_dir, rows_per_part=1) == dp
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "5")
-    assert scaled_state_partitions(spark, sf_dir) == 5
 
 
 def test_state_partitions_context_restores(spark):

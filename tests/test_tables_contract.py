@@ -8,13 +8,12 @@ the actual bytes on disk when the generator switched nanos → micros.
 from __future__ import annotations
 
 import datetime as dt
-import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from cascading_hive_spark.tables import events_ts_stored_as_nanos, load_table
+from cascading_hive_spark.tables import _events_footer, load_table
 
 _US = [
     1_700_000_000_000_000,
@@ -48,13 +47,17 @@ def shapes(tmp_path_factory):
     )
     d = tmp_path_factory.mktemp("ev_i64")
     out["int64"] = _write_events(d, pa.array([u * 1000 for u in _US], type=pa.int64()))
+    d = tmp_path_factory.mktemp("ev_i64_us")
+    out["int64_micros"] = _write_events(d, pa.array(_US, type=pa.int64()))
     return out
 
 
 def test_footer_probe(shapes):
-    assert not events_ts_stored_as_nanos(shapes["micros"] + "/events.parquet")
-    assert events_ts_stored_as_nanos(shapes["nanos"] + "/events.parquet")
-    assert events_ts_stored_as_nanos(shapes["int64"] + "/events.parquet")
+    """(nanosAsLong flag, int64 divisor to micros) read from the footer."""
+    assert _events_footer(shapes["micros"] + "/events.parquet") == (False, 1_000)
+    assert _events_footer(shapes["nanos"] + "/events.parquet") == (True, 1_000)
+    assert _events_footer(shapes["int64"] + "/events.parquet") == (True, 1_000)
+    assert _events_footer(shapes["int64_micros"] + "/events.parquet") == (True, 1)
 
 
 def test_all_shapes_load_identically(spark, shapes):
@@ -91,23 +94,21 @@ def test_every_table_loads_at_every_sf(spark):
             assert df.limit(1).count() == 1, (sf, name)
 
 
+def test_stream_reads_the_loader_ts_and_warm_stream_runs_no_job(spark, shapes, status):
+    """``stream_events`` takes its schema and int64 divisor from the
+    loader's cache: for every shape the streamed ``ts`` equals
+    ``load_table``'s (an int64 of epoch-micros included), and a second
+    call for the same files runs no Spark job."""
+    from cascading_hive_spark.streaming.jobs import run_available_now, stream_events
+
+    for shape, d in shapes.items():
+        want = [r.ts for r in load_table(spark, d, "events").orderBy("event_id").collect()]
+        got = run_available_now(stream_events(spark, d), f"tables_contract_{shape}")
+        assert [r.ts for r in got.orderBy("event_id").collect()] == want, shape
+        assert status.run(lambda: stream_events(spark, d)).jobs == [], shape
+
+
 # --- inferred-schema cache --------------------------------------------
-
-_groups = itertools.count()
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs that ``fn()`` runs, counted under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"tables-contract-{next(_groups)}"
-    sc.setJobGroup(group, "load_table")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture
@@ -122,11 +123,11 @@ def nanos_as_long(spark):
         spark.conf.set(key, prior)
 
 
-def test_second_load_runs_no_job(spark, tmp_path):
+def test_second_load_runs_no_job(spark, tmp_path, status):
     pq.write_table(pa.table({"o_orderkey": [1, 2, 3]}), str(tmp_path / "orders.parquet"))
     d = str(tmp_path)
-    assert _jobs(spark, lambda: load_table(spark, d, "orders")) >= 1  # inference
-    assert _jobs(spark, lambda: load_table(spark, d, "orders")) == 0
+    assert status.run(lambda: load_table(spark, d, "orders")).jobs  # inference
+    assert status.run(lambda: load_table(spark, d, "orders")).jobs == []
     assert load_table(spark, d, "orders").count() == 3
 
 
@@ -167,13 +168,13 @@ def test_nanos_as_long_flip_misses_cache(spark, tmp_path, nanos_as_long):
         load_table(spark, str(tmp_path), "orders")
 
 
-def test_member_added_to_directory_table_misses_cache(spark, tmp_path):
+def test_member_added_to_directory_table_misses_cache(spark, tmp_path, status):
     table = tmp_path / "orders.parquet"
     table.mkdir()
     pq.write_table(pa.table({"o_orderkey": [1, 2]}), str(table / "part-0.parquet"))
     d = str(tmp_path)
     load_table(spark, d, "orders")
-    assert _jobs(spark, lambda: load_table(spark, d, "orders")) == 0
+    assert status.run(lambda: load_table(spark, d, "orders")).jobs == []
     pq.write_table(pa.table({"o_orderkey": [3]}), str(table / "part-1.parquet"))
-    assert _jobs(spark, lambda: load_table(spark, d, "orders")) >= 1
+    assert status.run(lambda: load_table(spark, d, "orders")).jobs
     assert load_table(spark, d, "orders").count() == 3
