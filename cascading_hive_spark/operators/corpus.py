@@ -28,6 +28,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.operators.exact import exact_sum, image, scaled
 from cascading_hive_spark.operators.sampling import hash_order
 from cascading_hive_spark.session import materialize
 
@@ -279,13 +280,13 @@ def lm_perplexity_buckets(
         sb.join(F.broadcast(c2), ["w1", "w2"], "left")
         .join(F.broadcast(c1), "w1", "left")
         .crossJoin(F.broadcast(vocab))
+        .select(id_col, logp.alias("_lp"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            (
-                -F.sum(F.round(logp, 9).cast("decimal(30,9)")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("_nll"),
+            F.expr(
+                f"-CAST({exact_sum('_lp', 9, 30)} AS DOUBLE) / CAST(count(1) AS DOUBLE) AS _nll"
+            ),
         )
         .withColumn("_micro", F.round(F.col("_nll") * 1e6, 0).cast("bigint")),
         "lm_perplexity_buckets: per-doc nll",
@@ -519,6 +520,15 @@ def bpe_segment_doc(
     return df.withColumn(out_col, F.flatten(F.transform(words, seg_word)))
 
 
+def _bm25_w(tf: str, df: str, k1: float, b: float) -> str:
+    """SQL text of one BM25 term contribution over the bigint ``tf`` and
+    ``df``, the doc length ``dl`` and the corpus stats ``n_docs`` and
+    ``total_len`` (Robertson/Lucene idf)."""
+    idf = f"ln(1.0D + (n_docs - {df} + 0.5D) / ({df} + 0.5D))"
+    norm = f"1.0D - {b!r}D + {b!r}D * dl / (CAST(total_len AS DOUBLE) / n_docs)"
+    return f"{idf} * ({tf} * ({k1!r}D + 1.0D)) / ({tf} + {k1!r}D * ({norm}))"
+
+
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
@@ -598,39 +608,13 @@ def bm25_topk(
                 for i in range(nq)
             ],
         )
-        avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-
-        def _w(i: int):
-            # identical formula/operand types as the explode path: tf
-            # and df are bigint, dl int — same double promotions, same
-            # IEEE ops, so each 7-decimal contribution is bit-equal
-            tf_i = F.col(f"t{i}").cast("bigint")
-            df_i = F.col(f"df{i}")
-            idf_i = F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - df_i + F.lit(0.5)) / (df_i + F.lit(0.5))
-            )
-            return (
-                idf_i
-                * (tf_i * (F.lit(k1) + 1.0))
-                / (
-                    tf_i
-                    + F.lit(k1)
-                    * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / avgdl)
-                )
-            )
-
-        # decimal(30,7) addends so the k-term chain add never lands on
-        # the (38,s)+(38,s) scale-reducing special case (session.py
-        # decimal discipline); absent terms add an exact 0.0000000
-        zero_dec = F.lit("0").cast("decimal(30,7)")
-        total = F.when(F.col("t0") > 0, F.round(_w(0), 7).cast("decimal(30,7)")).otherwise(
-            zero_dec
+        # identical formula/operand types as the explode path: tf and
+        # df are bigint, dl int — same double promotions, same IEEE ops,
+        # so each 7-decimal image is bit-equal; absent terms add 0
+        total = " + ".join(
+            f"IF(t{i} > 0, {image(_bm25_w(f'CAST(t{i} AS BIGINT)', f'df{i}', k1, b), 7)}, 0L)"
+            for i in range(nq)
         )
-        for i in range(1, nq):
-            total = total + F.when(
-                F.col(f"t{i}") > 0, F.round(_w(i), 7).cast("decimal(30,7)")
-            ).otherwise(zero_dec)
         n_matched = reduce(
             lambda a, c: a + c,
             [(F.col(f"t{i}") > 0).cast("int") for i in range(nq)],
@@ -644,7 +628,7 @@ def bm25_topk(
             .select(
                 id_col,
                 n_matched.cast("bigint").alias("n_terms_matched"),
-                total.cast("decimal(38,7)").alias("_s"),
+                F.expr(f"{scaled(total, 7)} AS _s"),
             )
         )
     else:
@@ -657,26 +641,13 @@ def bm25_topk(
         ).filter(F.col("term").isin(query_terms))
         tf = toks.groupBy(id_col, "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
         df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        )
-        w_td = (
-            idf
-            * (F.col("tf") * (F.lit(k1) + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / avgdl)
-            )
-        )
         scored = (
             tf.join(F.broadcast(df_t), "term")
             .crossJoin(F.broadcast(stats))
             .groupBy(id_col)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_terms_matched"),
-                F.sum(F.round(w_td, 7).cast("decimal(38,7)")).alias("_s"),
+                F.expr(f"{exact_sum(_bm25_w('tf', 'df', k1, b), 7, 38)} AS _s"),
             )
         )
     return (
@@ -789,11 +760,7 @@ def rrf_fuse(
     parts = [
         r.select(
             F.col(id_col),
-            F.round(
-                F.lit(1.0) / (F.lit(rrf_k) + F.col(rank_col).cast("double")), 9
-            )
-            .cast("decimal(38,9)")
-            .alias("_s"),
+            (F.lit(1.0) / (F.lit(rrf_k) + F.col(rank_col).cast("double"))).alias("_s"),
         )
         for r in rankings
     ]
@@ -802,7 +769,7 @@ def rrf_fuse(
         u = u.unionByName(p)
     fused = (
         u.groupBy(id_col)
-        .agg(F.sum("_s").alias("_sum"))
+        .agg(F.expr(f"{exact_sum('_s', 9, 38)} AS _sum"))
         .select(id_col, F.col("_sum").cast("double").alias("rrf_score"))
         .orderBy(F.col("_sum").desc(), F.col(id_col))
     )
@@ -1108,12 +1075,12 @@ def corpus_js_divergence(
         q > 0, q * F.log(q / m)
     ).otherwise(F.lit(0.0))
     return j.select(
-        F.round(term, 9).cast("decimal(38,9)").alias("_t"),
+        term.alias("_t"),
         F.coalesce(F.col("cnt_a"), F.lit(0)).alias("_ca"),
         F.coalesce(F.col("cnt_b"), F.lit(0)).alias("_cb"),
     ).agg(
-        (F.round(F.sum("_t").cast("double") / F.lit(2.0), 6) + F.lit(0.0)).alias(
-            "js_divergence"
+        F.expr(
+            f"round(CAST({exact_sum('_t', 9, 38)} AS DOUBLE) / 2.0D, 6) + 0.0D AS js_divergence"
         ),
         F.sum("_ca").cast("bigint").alias("n_grams_a"),
         F.sum("_cb").cast("bigint").alias("n_grams_b"),

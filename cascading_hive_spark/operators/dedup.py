@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cascading_hive_spark.operators.exact import exact_sum
 from cascading_hive_spark.session import materialize
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -1581,12 +1582,10 @@ def tfidf_cosine_pairs(
         ).alias("_w"),
     )
 
-    def dec_sum(col):
-        return F.sum(F.round(col, 9).cast("decimal(38,9)")).cast("double")
+    def dec_sum(x: str):
+        return f"CAST({exact_sum(x, 9, 38)} AS DOUBLE)"
 
-    norms = w.groupBy("_id").agg(
-        F.sqrt(dec_sum(F.col("_w") * F.col("_w"))).alias("_norm")
-    )
+    norms = w.groupBy("_id").agg(F.expr(f"sqrt({dec_sum('_w * _w')}) AS _norm"))
     arr = F.split(F.lower(F.col(text_col)), r"\s+")
     tarr = df.select(
         F.col(id_col).alias("_id"), arr.alias("_arr"), F.size(arr).alias("_n")
@@ -1634,7 +1633,7 @@ def tfidf_cosine_pairs(
         cand.join(wa, "id_a")
         .join(wb, ["id_b", "_t"])
         .groupBy("id_a", "id_b")
-        .agg(dec_sum(F.col("_wa") * F.col("_wb")).alias("_dot"))
+        .agg(F.expr(f"{dec_sum('_wa * _wb')} AS _dot"))
     )
     na = norms.select(F.col("_id").alias("id_a"), F.col("_norm").alias("_na"))
     nb = norms.select(F.col("_id").alias("id_b"), F.col("_norm").alias("_nb"))

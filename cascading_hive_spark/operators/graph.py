@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.operators.exact import exact_sum
 from cascading_hive_spark.session import materialize
 
 # target rows per partition for the iterative operators' pinned key
@@ -149,8 +150,8 @@ def pagerank(
     against a dense numpy power iteration, tests/test_graph_pagerank.py).
     ``portable=True`` sends the two order-dependent float
     accumulations — the per-node contribution sum and the
-    dangling-mass sum — through EXACT decimal(38,12) images of
-    12-decimal-rounded terms, so each iteration's rank vector is a
+    dangling-mass sum — through exact decimal(38,12) image sums
+    (``operators.exact``), so each iteration's rank vector is a
     bit-identical double under any partitioning or engine and a DuckDB
     oracle can unroll the iterations as chained CTEs (queries.py:
     graph_pagerank_hubs). The 1e-12 quantization per term is far below
@@ -170,9 +171,9 @@ def pagerank(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
 
-    def acc_sum(col):
+    def acc_sum(col: str):
         if portable:
-            return F.sum(F.round(col, 12).cast("decimal(38,12)")).cast("double")
+            return F.expr(f"CAST({exact_sum(col, 12, 38)} AS DOUBLE)")
         return F.sum(col)
 
     # three setup actions read the edge list (node set, degree-pinned
@@ -229,13 +230,13 @@ def pagerank(
     )
     for i in range(iterations):
         dangling = ranks.join(dangling_nodes, "node", "left_semi").agg(
-            F.coalesce(acc_sum(F.col("rank")), F.lit(0.0)).alias("_dm")
+            F.coalesce(acc_sum("rank"), F.lit(0.0)).alias("_dm")
         )
         contribs = (
             e_deg.join(ranks, e_deg.u == ranks.node)
             .select(F.col("v").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
             .groupBy("node")
-            .agg(acc_sum(F.col("_c")).alias("_sum"))
+            .agg(acc_sum("_c").alias("_sum"))
         )
         ranks = materialize(
             nodes.join(contribs, "node", "left")

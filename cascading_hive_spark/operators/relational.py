@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.operators.exact import exact_sum
 from cascading_hive_spark.session import materialize
 
 
@@ -307,8 +308,8 @@ def partial_agg(
     scale: int = 6,
 ) -> DataFrame:
     """One partition's MERGEABLE aggregate state: per key, the row
-    count and a decimal-image value sum (exact, order-independent —
-    the same .xx5 armor as q1). The output is a tiny keyed table that
+    count and an exact decimal image value sum (``operators.exact``).
+    The output is a tiny keyed table that
     ``merge_partial_aggs`` can re-aggregate losslessly, which is the
     incremental-pipeline contract at 100 TB: aggregate each arriving
     partition ONCE, merge states, never rescan history. (AVG is
@@ -317,7 +318,7 @@ def partial_agg(
     hll_mergeable_sketches.)"""
     return df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col(value_col).cast(f"decimal(18,{scale})")).alias("sum_img"),
+        F.expr(f"{exact_sum(f'`{value_col}`', scale, 18)} AS sum_img"),
     )
 
 
@@ -577,21 +578,17 @@ def corr_matrix(
     # (guide §2; measured 8.0s -> 1.4s at sf0.1). Decimal sums are
     # exact and order-independent — moments identical.
     df = spread(df)
-    dec = f"decimal(38,{sum_scale})"
 
-    def img(e):
-        return F.round(e, sum_scale).cast(dec)
+    def moment(x: str, alias: str):
+        return F.expr(f"CAST({exact_sum(x, sum_scale, 38)} AS DOUBLE) AS `{alias}`")
 
+    dbl = {c: f"CAST(`{c}` AS DOUBLE)" for c in cols}
     aggs = [F.count(F.lit(1)).cast("double").alias("_n")]
     for c in cols:
-        aggs.append(F.sum(img(F.col(c).cast("double"))).cast("double").alias(f"_s_{c}"))
+        aggs.append(moment(dbl[c], f"_s_{c}"))
     for i, a in enumerate(cols):
         for b in cols[i:]:
-            aggs.append(
-                F.sum(
-                    img(F.col(a).cast("double") * F.col(b).cast("double"))
-                ).cast("double").alias(f"_p_{a}_{b}")
-            )
+            aggs.append(moment(f"{dbl[a]} * {dbl[b]}", f"_p_{a}_{b}"))
     row = df.agg(*aggs)
     # All pairs are projected out of the SAME 1-row aggregate via one
     # explode — single scan-side aggregate pass by construction (a
@@ -753,11 +750,8 @@ def mutual_information(
     mb = df.groupBy(F.col(col_b).alias("_b")).agg(F.count(F.lit(1)).alias("_nb"))
     tot = df.agg(F.count(F.lit(1)).alias("_n"))
     term = (
-        F.col("_nab").cast("double") / F.col("_n")
-    ) * F.log(
-        F.col("_n").cast("double")
-        * F.col("_nab")
-        / (F.col("_na").cast("double") * F.col("_nb"))
+        "CAST(_nab AS DOUBLE) / _n"
+        " * ln(CAST(_n AS DOUBLE) * _nab / (CAST(_na AS DOUBLE) * _nb))"
     )
     # eqNullSafe (<=>) keeps NULL-keyed cells in the joint↔marginal
     # joins — a plain equi-join would silently drop them and compute
@@ -773,12 +767,9 @@ def mutual_information(
     return cells.agg(
         F.max("_n").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.round(
-            F.sum(
-                F.round(term, term_scale).cast(f"decimal(38,{term_scale})")
-            ).cast("double"),
-            out_scale,
-        ).alias("mi"),
+        F.expr(
+            f"round(CAST({exact_sum(term, term_scale, 38)} AS DOUBLE), {out_scale}) AS mi"
+        ),
     ).select(
         F.lit(col_a).alias("col_a"),
         F.lit(col_b).alias("col_b"),
@@ -908,14 +899,9 @@ def target_encode(
     join against the data rows; category-key skew is irrelevant
     because partials combine before the shuffle.
     """
-    dec = f"decimal(38,{sum_scale})"
-    t = F.round(F.col(target_col).cast("double"), sum_scale).cast(dec)
-    g = df.agg(
-        F.count(F.lit(1)).alias("_gn"), F.sum(t).alias("_gs")
-    )
-    per = df.groupBy(*cat_cols).agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum(t).alias("_s")
-    )
+    t = exact_sum(f"CAST(`{target_col}` AS DOUBLE)", sum_scale, 38)
+    g = df.agg(F.count(F.lit(1)).alias("_gn"), F.expr(f"{t} AS _gs"))
+    per = df.groupBy(*cat_cols).agg(F.count(F.lit(1)).alias("cnt"), F.expr(f"{t} AS _s"))
     enc = (
         F.col("_s").cast("double")
         + F.lit(m) * (F.col("_gs").cast("double") / F.col("_gn"))
@@ -1020,8 +1006,6 @@ def ab_test_zscore(
     """
     from cascading_hive_spark.operators.sampling import hash_order
 
-    dec_s = f"decimal(38,{val_scale})"
-    dec_q = f"decimal(38,{2 * val_scale})"
     keys = list(by or [])
     arm = F.pmod(hash_order(F.col(unit_col)), F.lit(2))
     vr = F.round(F.col(value_col).cast("double"), val_scale)
@@ -1031,10 +1015,15 @@ def ab_test_zscore(
     ).groupBy(*keys).agg(
         F.sum(F.when(F.col("_arm") == 0, 1).otherwise(0)).alias("n_a"),
         F.sum(F.when(F.col("_arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("_arm") == 0, F.col("_v").cast(dec_s))).alias("_sa"),
-        F.sum(F.when(F.col("_arm") == 1, F.col("_v").cast(dec_s))).alias("_sb"),
-        F.sum(F.when(F.col("_arm") == 0, F.col("_q").cast(dec_q))).alias("_qa"),
-        F.sum(F.when(F.col("_arm") == 1, F.col("_q").cast(dec_q))).alias("_qb"),
+        *[
+            F.expr(f"{exact_sum(f'IF(_arm = {arm}, {col}, NULL)', s, 38)} AS {name}")
+            for name, arm, col, s in (
+                ("_sa", 0, "_v", val_scale),
+                ("_sb", 1, "_v", val_scale),
+                ("_qa", 0, "_q", 2 * val_scale),
+                ("_qb", 1, "_q", 2 * val_scale),
+            )
+        ],
     )
     ma = F.col("_sa").cast("double") / F.col("n_a")
     mb = F.col("_sb").cast("double") / F.col("n_b")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cascading_hive_spark.operators.exact import exact_sum, image, scaled
 from cascading_hive_spark.session import materialize
 
 
@@ -154,22 +155,17 @@ def _mean_centroids(
     assigned: DataFrame, keys: list[str], vec_col: str, dim: int, portable: bool
 ) -> DataFrame:
     """(*keys, centroid): per-group coordinate means. ``portable``
-    means are EXACT decimal(18,6) sums of 6-decimal-rounded
-    coordinates divided by the group count — order-independent
-    (decimal addition is exact), so the resulting doubles are
-    identical regardless of partitioning or engine, where a
-    float/double ``avg`` is partition-order-dependent."""
+    means are exact decimal(18,6) image sums (``operators.exact``)
+    divided by the group count, so the resulting doubles are identical
+    regardless of partitioning or engine, where a float/double ``avg``
+    is partition-order-dependent."""
+    x = lambda i: f"CAST(get(`{vec_col}`, {i}) AS DOUBLE)"  # noqa: E731
     if portable:
-        mean = lambda x: (  # noqa: E731
-            F.sum(F.round(x, 6).cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        )
+        mean = lambda i: f"CAST({exact_sum(x(i), 6, 18)} AS DOUBLE) / count(1)"  # noqa: E731
     else:
-        mean = F.avg
+        mean = lambda i: f"avg({x(i)})"  # noqa: E731
     return assigned.groupBy(*keys).agg(
-        F.array(
-            *[mean(F.get(F.col(vec_col), i).cast("double")) for i in range(dim)]
-        ).alias("centroid")
+        F.expr(f"array({', '.join(mean(i) for i in range(dim))}) AS centroid")
     )
 
 
@@ -1044,11 +1040,7 @@ def label_centroids(
         ex.groupBy("label", "dim")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.round(F.col("_val").cast("double"), sum_scale).cast(
-                    f"decimal(38,{sum_scale})"
-                )
-            ).alias("_s"),
+            F.expr(f"{exact_sum('CAST(_val AS DOUBLE)', sum_scale, 38)} AS _s"),
         )
         .select(
             "label",
@@ -1143,7 +1135,6 @@ def kmeans_fit(
     from cascading_hive_spark.operators.dedup import spread
     from cascading_hive_spark.operators.sampling import hash_order
 
-    dec_sum = f"decimal(38,{sum_scale})"
     # spread(): a one-file embeddings scan otherwise runs every
     # E-step's n*k decimal distance folds as ONE task (guide §2) —
     # decimal sums and the argmin are partitioning-independent, so
@@ -1161,7 +1152,7 @@ def kmeans_fit(
             pts.groupBy("cid", "dim")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("_val"), sum_scale).cast(dec_sum)).alias("_s"),
+                F.expr(f"{exact_sum('_val', sum_scale, 38)} AS _s"),
             )
             .select(
                 "cid",
@@ -1226,43 +1217,27 @@ def cell_distances(
     dist_scale: int = 9,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Squared-L2 decimal image of every vector against every
-    centroid: input ``base`` carries ``_v`` (array<double>) plus any
-    pass-through columns; output replaces ``_v`` with one row per
-    centroid — (*pass-through, _ccid, _d2).
+    """Squared-L2 image of every vector against every centroid: input
+    ``base`` carries ``_v`` (array<double>) plus any pass-through
+    columns; output replaces ``_v`` with one row per centroid —
+    (*pass-through, _ccid, _d2), ``_d2`` the BIGINT unscaled value of
+    the exact decimal sum over dims of (val-c)^2 at ``dist_scale``
+    (``operators.exact``; order and equality are the decimal's).
 
     ONE ARRAY FOLD per (vector, centroid) pair over a broadcast
     (k-row) cell table — n*k rows total, versus the exploded
     join-on-dim formulation's n*dim*k rows through a hash aggregate
     (the E-step fan-out BASELINE.md's kmeans smoke isolated as the
-    trainer's budget). Bit-identical to the exploded image: each
-    (val-c)^2 rounds to ``dist_scale`` before the sum and decimal
-    addition is exact and order-independent, so fold == hash-agg on
-    every element. Centroid ids come from ``centroids_long``'s
+    trainer's budget). Bit-identical to the exploded image sum: each
+    element is the exact image and long addition is exact and
+    order-independent. Centroid ids come from ``centroids_long``'s
     cid/label column (``centroids_to_cells`` resolves which).
     """
-    # Precision discipline: Spark's decimal ADD widens precision by 1
-    # (max(p-s)+s+1); at (38,s)+(38,s) that overflows 38 and Spark
-    # silently REDUCES THE SCALE to absorb it — each fold step would
-    # round the running sum to s-1 decimals (caught by the inertia
-    # oracle: trailing digit loss). Keeping the accumulator at
-    # (37,s) and elements at (30,s) makes every add land exactly on
-    # (38,s) with no scale loss; the cast back to (37,s) is lossless
-    # for any |d2| < 1e28.
-    dec_el = f"decimal(30,{dist_scale})"
-    dec_acc = f"decimal(37,{dist_scale})"
     cells = centroids_to_cells(centroids_long).select(
         F.col("cell").alias("_ccid"), F.col("centroid").alias("_cv")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.col("_cv"),
-            lambda a, b: F.round((a - b) * (a - b), dist_scale).cast(dec_el),
-        ),
-        F.lit(0).cast(dec_acc),
-        lambda acc, x: (acc + x).cast(dec_acc),
-    )
+    sq = image("(a - b) * (a - b)", dist_scale)
+    d2 = F.expr(f"aggregate(zip_with(_v, _cv, (a, b) -> {sq}), 0L, (acc, e) -> acc + e)")
     keep = [c for c in base.columns if c != "_v"]
     if keep_vec:
         # let ``_v`` ride the scored rows so a downstream argmin can
@@ -1336,7 +1311,7 @@ def kmeans_inertia(
     ``centroids`` is long-form (cid, dim, centroid). Returns
     (cid, n, inertia); clusters that win no vectors are absent.
 
-    Same E-step machinery as the trainer (``cell_distances`` decimal
+    Same E-step machinery as the trainer (``cell_distances`` exact
     fold over the broadcast cell table, argmin ties to the lower cid —
     here as a min-struct aggregate carrying the distance), then one
     (cid) aggregation of the EXACT decimal distances, reported as the
@@ -1355,7 +1330,9 @@ def kmeans_inertia(
     )
     return nearest.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("_d2").cast("double").alias("inertia"),
+        F.expr(
+            f"CAST({scaled('sum(CAST(_d2 AS DECIMAL(20, 0)))', dist_scale)} AS DOUBLE) AS inertia"
+        ),
     )
 
 
@@ -1383,13 +1360,10 @@ def standardize_embeddings(
         F.col(id_col).alias("_id"),
         F.posexplode(F.col(vec_col)).alias("dim", "_val"),
     ).select("_id", "dim", F.col("_val").cast("double").alias("_val"))
-    dec = f"decimal(38,{sum_scale})"
     mom = ex.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(F.round(F.col("_val"), sum_scale).cast(dec)).cast("double").alias("_s"),
-        F.sum(
-            F.round(F.col("_val") * F.col("_val"), sum_scale).cast(dec)
-        ).cast("double").alias("_ss"),
+        F.expr(f"CAST({exact_sum('_val', sum_scale, 38)} AS DOUBLE) AS _s"),
+        F.expr(f"CAST({exact_sum('_val * _val', sum_scale, 38)} AS DOUBLE) AS _ss"),
     )
     mean = F.col("_s") / F.col("_n")
     var = F.col("_ss") / F.col("_n") - mean * mean
@@ -1439,10 +1413,9 @@ def covariance_matrix_embeddings(
         F.col(id_col).alias("_id"),
         F.posexplode(F.col(vec_col)).alias("dim", "_v"),
     ).select("_id", "dim", F.col("_v").cast("double").alias("_v"))
-    dec = f"decimal(38,{sum_scale})"
     m = ex.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(F.round(F.col("_v"), sum_scale).cast(dec)).cast("double").alias("_s"),
+        F.expr(f"CAST({exact_sum('_v', sum_scale, 38)} AS DOUBLE) AS _s"),
     )
     exv = vectors.select(
         F.col(vec_col).alias("_vv"),
@@ -1460,13 +1433,10 @@ def covariance_matrix_embeddings(
         pairs.select(
             "dim_a",
             "dim_b",
-            F.round(
-                F.col("_va") * F.get(F.col("_vv"), F.col("dim_b")).cast("double"),
-                sum_scale,
-            ).cast(dec).alias("_pr"),
+            (F.col("_va") * F.get(F.col("_vv"), F.col("dim_b")).cast("double")).alias("_pr"),
         )
         .groupBy("dim_a", "dim_b")
-        .agg(F.sum("_pr").cast("double").alias("_sp"))
+        .agg(F.expr(f"CAST({exact_sum('_pr', sum_scale, 38)} AS DOUBLE) AS _sp"))
     )
     ma = m.select(F.col("dim").alias("dim_a"), F.col("_n"), F.col("_s").alias("_sa"))
     mb = m.select(F.col("dim").alias("dim_b"), F.col("_s").alias("_sb"))
@@ -1903,8 +1873,9 @@ def pca_power_project(
         raise ValueError(f"steps must be >= 1, got {steps}")
     mic = float(10 ** sum_scale)
 
-    def img(col):  # exact micro-unit image of a double expression
-        return F.round(col * F.lit(mic), 0).cast("long")
+    def img(x: str):  # exact micro-unit image of a double expression
+        y = f"({x}) * {mic!r}D"
+        return image(y, 0, fallback=f"CAST(round({y}, 0) AS BIGINT)")
 
     ex = vectors.select(
         F.col(id_col).alias("_id"),
@@ -1912,7 +1883,7 @@ def pca_power_project(
     ).select("_id", "dim", F.col("_v").cast("double").alias("_v"))
     m = ex.groupBy("dim").agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(img(F.col("_v"))).alias("_s7"),
+        F.expr(f"sum({img('_v')}) AS _s7"),
     ).select(
         "dim",
         (
@@ -1941,17 +1912,14 @@ def pca_power_project(
         u = (
             cfull.join(v, cfull["dim_b"] == v["dim"])
             .groupBy("dim_a")
-            .agg(F.sum(img(F.col("cov") * F.col("_vv"))).alias("_u7"))
+            .agg(F.expr(f"sum({img('cov * _vv')}) AS _u7"))
             .select(
                 F.col("dim_a").alias("dim"),
                 (F.col("_u7").cast("double") / F.lit(mic)).alias("_uu"),
             )
         )
         nrm = u.agg(
-            F.sqrt(
-                F.sum(img(F.col("_uu") * F.col("_uu"))).cast("double")
-                / F.lit(mic)
-            ).alias("_nn")
+            F.expr(f"sqrt(CAST(sum({img('_uu * _uu')}) AS DOUBLE) / {mic!r}D) AS _nn")
         )
         v = materialize(
             u.crossJoin(F.broadcast(nrm)).select(
@@ -1977,7 +1945,7 @@ def pca_power_project(
         .join(F.broadcast(vf), "dim")
         .groupBy("_id")
         .agg(
-            F.sum(img((F.col("_v") - F.col("_mu")) * F.col("_vv"))).alias("_p7")
+            F.expr(f"sum({img('(_v - _mu) * _vv')}) AS _p7")
         )
         .select(
             F.col("_id").alias(id_col),

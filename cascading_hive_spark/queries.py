@@ -24,8 +24,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cascading_hive_spark.operators import relational as R
+from cascading_hive_spark.operators.exact import exact_sum
 from cascading_hive_spark.session import materialize, tune_for_queries
 from cascading_hive_spark.tables import load_table
+
+
+def _sum2(x: str, alias: str) -> Column:
+    """The exact decimal(18,6) image sum of the SQL expression ``x``,
+    rounded to 2 decimals, as a double named ``alias``."""
+    return F.expr(f"CAST(round({exact_sum(x, 6, 18)}, 2) AS DOUBLE) AS {alias}")
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -369,33 +376,30 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # All price-derived aggregates sum the decimal(18,6) image, not the
-    # raw double: TPC-H prices are 2-decimal, so a double sum's ulp
-    # wobble lands on .xx5 rounding boundaries often enough to flake
-    # cross-engine (the q10 trick, applied repo-wide in round 5).
+    # All price-derived aggregates sum the exact decimal(18,6) image
+    # (ARCHITECTURE.md "Cross-engine determinism"), not the raw double.
     # sum_qty/avg_qty stay double: quantities are integer-valued, so
     # their double sums are exact. Averages divide the exact decimal
     # sum as double by count (DuckDB's avg(DECIMAL) returns DOUBLE,
     # Spark's returns DECIMAL — dividing explicitly sidesteps the
     # type divergence).
     li = _t(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(18,6)")  # noqa: E731
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    n = F.count(F.lit(1))
+    price = exact_sum("l_extendedprice", 6, 18)
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(dec(F.col("l_extendedprice"))), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum(dec(disc_price)), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(dec(disc_price * (1 + F.col("l_tax")))), 2)
-            .cast("double")
-            .alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.sum(dec(F.col("l_extendedprice"))).cast("double") / n, 4).alias("avg_price"),
-            F.round(F.sum(dec(F.col("l_discount"))).cast("double") / n, 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            F.expr("round(sum(l_quantity), 2) AS sum_qty"),
+            F.expr(f"CAST(round({price}, 2) AS DOUBLE) AS sum_base_price"),
+            _sum2(disc_price, "sum_disc_price"),
+            _sum2(f"{disc_price} * (1 + l_tax)", "sum_charge"),
+            F.expr("round(avg(l_quantity), 4) AS avg_qty"),
+            F.expr(f"round(CAST({price} AS DOUBLE) / count(1), 4) AS avg_price"),
+            F.expr(
+                f"round(CAST({exact_sum('l_discount', 6, 18)} AS DOUBLE) / count(1), 4) AS avg_disc"
+            ),
+            F.expr("count(1) AS count_order"),
         )
     )
 
@@ -425,12 +429,7 @@ def q_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = R.join(R.join(c, o, c.c_custkey == o.o_custkey), li, F.col("o_orderkey") == li.l_orderkey)
     agg = joined.groupBy("o_orderkey").agg(
-        F.round(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-            2,
-        )
-        .cast("double")
-        .alias("revenue")
+        _sum2("l_extendedprice * (1 - l_discount)", "revenue")
     )
     # order by the ROUNDED value on both sides so the top-10 frontier
     # is identical cross-engine; o_orderkey breaks ties.
@@ -467,12 +466,7 @@ def q_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s, (li.l_suppkey == s.s_suppkey) & (s.s_nationkey == c.c_nationkey))
     )
     return joined.groupBy("n_name").agg(
-        F.round(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-            2,
-        )
-        .cast("double")
-        .alias("revenue")
+        _sum2("l_extendedprice * (1 - l_discount)", "revenue")
     )
 
 
@@ -498,11 +492,7 @@ def q_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(
-                F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")), 2
-            )
-            .cast("double")
-            .alias("revenue")
+            _sum2("l_extendedprice * l_discount", "revenue")
         )
     )
 
@@ -526,11 +516,10 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag").agg(
         F.round(F.min("l_extendedprice"), 2).alias("min_price"),
         F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-        F.round(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1)),
-            4,
-        ).alias("avg_price"),
+        F.expr(
+            f"round(CAST({exact_sum('l_extendedprice', 6, 18)} AS DOUBLE) / count(1), 4)"
+            " AS avg_price"
+        ),
         F.round(F.stddev_samp("l_extendedprice"), 4).alias("sd_price"),
         F.countDistinct("l_partkey").alias("n_parts"),
         F.sum("l_linenumber").cast("bigint").alias("sum_lines"),
@@ -780,20 +769,17 @@ def q_window_ntile_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
+    # the trailing 7-day sum of the exact decimal(18,6) image
+    # (ARCHITECTURE.md "Cross-engine determinism")
     w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.unix_micros(F.col("o_orderdate").cast("timestamp")))
-        .rangeBetween(-7 * 24 * 3600 * 1_000_000, Window.currentRow)
+        "PARTITION BY o_custkey ORDER BY unix_micros(CAST(o_orderdate AS TIMESTAMP)) "
+        f"RANGE BETWEEN {7 * 24 * 3600 * 1_000_000} PRECEDING AND CURRENT ROW"
     )
-    # sum the decimal(18,6) image, not the raw double: a double sum's
-    # ulp wobble can land on a .xx5 boundary and round differently per
-    # engine (the q10 trick; VERDICT r4 "What's wrong" #5).
+    trailing = exact_sum("o_totalprice", 6, 18, over=w)
     return o.select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).over(w), 2)
-        .cast("double")
-        .alias("trailing_7d_value"),
+        F.expr(f"CAST(round({trailing}, 2) AS DOUBLE) AS trailing_7d_value"),
     )
 
 
@@ -894,14 +880,13 @@ def q_set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # value is 2-decimal -> decimal-image sum (same .xx5 flake class
-    # as the TPC-H price sums; see q1)
+    # exact decimal image sum (ARCHITECTURE.md "Cross-engine determinism")
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+        _sum2("value", "sum_value"),
     )
 
 
@@ -2113,17 +2098,15 @@ def q_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ratio of decimal-image sums divided as doubles (q8 pattern)
     li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice", "l_discount")
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    zero = F.lit(0).cast("decimal(18,6)")
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo = exact_sum(f"IF(p_type = 'PROMO', {rev}, 0D)", 6, 18)
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(zero)).cast("double")
-                / F.sum(rev).cast("double"),
-                4,
-            ).alias("promo_revenue")
+            F.expr(
+                f"round(100.0D * CAST({promo} AS DOUBLE)"
+                f" / CAST({exact_sum(rev, 6, 18)} AS DOUBLE), 4) AS promo_revenue"
+            )
         )
     )
 
@@ -2173,12 +2156,7 @@ def q_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((p.p_brand == "Brand#3") & p.p_size.between(20, 50) & li.l_quantity.between(20, 40))
     )
     return j.filter(cond).agg(
-        F.round(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-            2,
-        )
-        .cast("double")
-        .alias("revenue")
+        _sum2("l_extendedprice * (1 - l_discount)", "revenue")
     )
 
 
@@ -2313,11 +2291,9 @@ def q_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        # decimal-image sum: see q10 / window_range_frame rationale
+        # exact decimal image sum (ARCHITECTURE.md "Cross-engine determinism")
         .agg(
-            F.round(F.sum(F.col("volume").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("revenue")
+            _sum2("volume", "revenue")
         )
     )
 
@@ -2379,20 +2355,17 @@ def q_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n2, F.col("s_nationkey") == F.col("n2_key"))
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    # numerator and denominator each summed as decimal(18,6) images,
-    # divided as doubles: bit-identical on both engines (q10 trick)
-    vdec = F.col("volume").cast("decimal(18,6)")
-    zdec = F.lit(0).cast("decimal(18,6)")
+    # numerator and denominator each an exact decimal(18,6) image sum,
+    # divided as doubles
+    nation3 = exact_sum("IF(supp_nation = 'NATION_3', volume, 0D)", 6, 18)
     return (
         j.select(F.year("o_orderdate").alias("o_year"), vol.alias("volume"), "supp_nation")
         .groupBy("o_year")
         .agg(
-            F.round(
-                F.sum(F.when(F.col("supp_nation") == "NATION_3", vdec).otherwise(zdec))
-                .cast("double")
-                / F.sum(vdec).cast("double"),
-                4,
-            ).alias("mkt_share")
+            F.expr(
+                f"round(CAST({nation3} AS DOUBLE)"
+                f" / CAST({exact_sum('volume', 6, 18)} AS DOUBLE), 4) AS mkt_share"
+            )
         )
     )
 
@@ -2430,17 +2403,10 @@ def q_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        # decimal-sum then round: a double sum's ulp wobble can land on
-        # a .xx5 boundary and round differently per engine (seen at
-        # sf0.01); the per-row product is IEEE-identical cross-engine,
-        # so summing its decimal(18,6) image is exact on both sides
+        # exact decimal image sum, then round (ARCHITECTURE.md
+        # "Cross-engine determinism")
         .agg(
-            F.round(
-                F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
+            _sum2("l_extendedprice * (1 - l_discount)", "revenue")
         )
         .select(
             "c_custkey", "c_name", "revenue", F.round("c_acctbal", 2).alias("acctbal"), "n_name"
@@ -2505,9 +2471,7 @@ def q_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-        ).alias("total_revenue")
+        F.expr(f"{exact_sum('l_extendedprice * (1 - l_discount)', 6, 18)} AS total_revenue")
     )
     top = F.broadcast(rev.agg(F.max("total_revenue").alias("_max")))
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -2551,9 +2515,10 @@ def q_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(avg_q, li.l_partkey == F.col("_pk"))
         .filter(F.col("l_quantity") < F.col("_thresh"))
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).cast("double") / 7.0, 2
-            ).alias("avg_yearly")
+            F.expr(
+                f"round(CAST({exact_sum('l_extendedprice', 6, 18)} AS DOUBLE) / 7.0D, 2)"
+                " AS avg_yearly"
+            )
         )
     )
 
@@ -3138,7 +3103,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") / 50.0).cast("bigint").alias("bucket")
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+        _sum2("value", "sum_value"),
     )
 
 
@@ -3615,9 +3580,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum2("value", "sum_value"),
         )
     )
 
@@ -3944,20 +3907,17 @@ def q_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correlated-min subquery expressed as a window min over the
     # region-filtered cost table (one shuffle on l_partkey instead of
     # a re-aggregating self-join; region/nation broadcast). unit_cost
-    # aggregates the decimal price image (repo rounding discipline).
+    # aggregates the exact decimal price image.
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
     reg = _t(spark, sf_dir, "region")
     cost = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))
-            / F.sum("l_quantity"),
-            4,
+        F.expr(
+            f"CAST(round({exact_sum('l_extendedprice', 6, 18)} / sum(l_quantity), 4) AS DOUBLE)"
+            " AS unit_cost"
         )
-        .cast("double")
-        .alias("unit_cost")
     )
     asia = (
         cost.join(sup, cost.l_suppkey == sup.s_suppkey)
@@ -4005,10 +3965,7 @@ def q_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
     orders = _t(spark, sf_dir, "orders")
-    amount = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("l_quantity") * F.col("p_retailprice") * 0.1
-    ).cast("decimal(18,6)")
+    amount = "l_extendedprice * (1 - l_discount) - l_quantity * p_retailprice * 0.1D"
     return (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .join(sup, F.col("s_suppkey") == F.col("l_suppkey"))
@@ -4018,7 +3975,7 @@ def q_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
-        .agg(F.round(F.sum(amount), 2).cast("double").alias("profit"))
+        .agg(_sum2(amount, "profit"))
     )
 
 
@@ -4045,12 +4002,11 @@ def q_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "CHINA")
-    v = (F.col("l_quantity") * F.col("l_extendedprice")).cast("decimal(18,6)")
     by_part = (
         li.join(sup, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nat), F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(v).alias("v"))
+        .agg(F.expr(f"{exact_sum('l_quantity * l_extendedprice', 6, 18)} AS v"))
     )
     total = by_part.agg((F.sum("v") * 0.001).alias("_threshold"))
     return (
@@ -4860,9 +4816,8 @@ def q_join_runtime_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = R.runtime_prefilter_join(
         li, orders, "l_orderkey", "o_orderkey", how="inner", m_bits=18
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return joined.groupBy("l_returnflag").agg(
-        F.round(F.sum(rev.cast("decimal(18,6)")), 2).cast("double").alias("revenue"),
+        _sum2("l_extendedprice * (1 - l_discount)", "revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -5731,12 +5686,7 @@ def q_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("value")
-    )
+    ).agg(F.expr(f"CAST({exact_sum('value', 6, 18)} AS DOUBLE) / count(1) AS value"))
     out = interpolate_daily(daily, ["event_type"], "day", "value")
     # floor-scaled fixed point, NOT round(…, 4): interpolation at
     # rational fractions (1/2, 1/4) of 2-decimal-ish averages lands
@@ -5975,21 +5925,18 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    clipped = (
-        F.when(x < F.col("p05"), F.col("p05"))
-        .when(x > F.col("p95"), F.col("p95"))
-        .otherwise(x)
+    clipped = exact_sum(
+        "CASE WHEN l_extendedprice < p05 THEN p05"
+        " WHEN l_extendedprice > p95 THEN p95 ELSE l_extendedprice END",
+        6,
+        18,
     )
     out_of_band = (x < F.col("p05")) | (x > F.col("p95"))
     return (
         li.join(F.broadcast(p), "l_returnflag")
         .groupBy("l_returnflag", "p25", "p75")
         .agg(
-            F.round(
-                F.sum(clipped.cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("winsorized_mean"),
+            F.expr(f"round(CAST({clipped} AS DOUBLE) / count(1), 4) AS winsorized_mean"),
             F.sum(out_of_band.cast("bigint")).cast("bigint").alias("n_clipped"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -6750,9 +6697,7 @@ def q_events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping("hour").cast("int").alias("is_daily"),
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum2("value", "sum_value"),
         )
         .select("day", "hour", "is_daily", "n", "sum_value")
     )
@@ -7322,9 +7267,7 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2).alias(
-            "_mdec"
-        ),
+        F.expr(f"round({exact_sum('o_totalprice', 6, 18)}, 2) AS _mdec"),
     ).select(
         "o_custkey",
         F.datediff("last_order", F.lit("1970-01-01").cast("date")).alias("rd"),
@@ -7520,9 +7463,7 @@ def q_events_session_windows_batch(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum2("value", "sum_value"),
         )
         .select(
             "user_id",
@@ -8514,11 +8455,11 @@ def q_events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
     w = winsorize(ev, "value", by=["event_type"], out_col="value_w")
-    img = lambda c: F.sum(F.round(F.col(c), 6).cast("decimal(38,6)"))
+    mean = lambda c: f"round(CAST({exact_sum(c, 6, 38)} AS DOUBLE) / count(1), 6)"  # noqa: E731
     return w.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(img("value").cast("double") / F.count(F.lit(1)), 6).alias("mean_raw"),
-        F.round(img("value_w").cast("double") / F.count(F.lit(1)), 6).alias("mean_w"),
+        F.expr(f"{mean('value')} AS mean_raw"),
+        F.expr(f"{mean('value_w')} AS mean_w"),
     )
 
 
@@ -10373,9 +10314,7 @@ def q_orders_kanon_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     base = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice"), 2).cast("decimal(18,2)")).alias(
-            "_st"
-        ),
+        F.expr(f"{exact_sum('o_totalprice', 2, 18)} AS _st"),
     )
     out = suppress_small_groups(base, ["custkey"], "n_orders", k=8)
     return out.select(

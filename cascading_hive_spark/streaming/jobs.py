@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cascading_hive_spark.operators.exact import exact_sum
+
 SESSION_GAP_US = 1_800_000_000  # 30 minutes, matching events_sessionize
 
 
@@ -54,12 +56,9 @@ def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            # decimal-image sum: value is 2-decimal, and a raw double
-            # sum's rounding can land on .xx5 differently per engine /
-            # accumulation order (see queries.q1)
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            # the exact decimal image sum (ARCHITECTURE.md "Cross-engine
+            # determinism")
+            F.expr(f"CAST(round({exact_sum('value', 6, 18)}, 2) AS DOUBLE) AS sum_value"),
         )
         .select(F.col("win.start").alias("hour"), "event_type", "cnt", "sum_value")
     )
@@ -139,9 +138,7 @@ def session_windows_stream(
         .groupBy("user_id", F.session_window("ts", gap).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            F.expr(f"CAST(round({exact_sum('value', 6, 18)}, 2) AS DOUBLE) AS sum_value"),
         )
         .select(
             "user_id",
@@ -275,16 +272,14 @@ def sliding_counts(
     slide smaller than the size, so each event lands in size/slide
     window instances (the streaming twin of the batch
     events_sliding_window_counts query). State is bounded by
-    watermark/slide open windows; the decimal-image value sum is the
-    same .xx5 rounding armor as events_hourly/q1."""
+    watermark/slide open windows; the value sum is an exact decimal
+    image sum (ARCHITECTURE.md "Cross-engine determinism")."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", size, slide).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            F.expr(f"CAST(round({exact_sum('value', 6, 18)}, 2) AS DOUBLE) AS sum_value"),
         )
         .select(F.col("win.start").alias("window_start"), "cnt", "sum_value")
     )

@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 def tiled(spark, tmp_path_factory):
     """Run the tiler at tiles=3 over sf0.001 into a temp dir —
     imported as a module (not a subprocess) so the session is shared
-    and SRC can be pointed at the small SF."""
+    and SRC can be pointed at the small SF. The tiler's ``get_session``
+    re-sets runtime confs (32 shuffle partitions) on that shared
+    session, so the fixture puts back every conf it found."""
     import importlib.util
     import pathlib
 
@@ -30,13 +32,24 @@ def tiled(spark, tmp_path_factory):
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     m.SRC = "/root/testdata/sf0.001"
-    argv = sys.argv
+    argv, confs = sys.argv, spark.conf.getAll
     try:
         sys.argv = ["make_sf1.py", out, "3"]
         assert m.main() == 0
     finally:
         sys.argv = argv
+        for k, v in spark.conf.getAll.items():
+            if k not in confs:
+                spark.conf.unset(k)
+            elif confs[k] != v:
+                spark.conf.set(k, confs[k])
     return out
+
+
+def test_tiler_leaves_the_session_confs_as_found(spark, tiled):
+    """Modules collected after this one run at conftest.py's 8 shuffle
+    partitions, not the tiler's 32."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 def test_row_counts_scale_by_tiles(spark, tiled):

@@ -299,3 +299,73 @@ def test_lineage_cuts_only_in_materialize():
     stray = [c for c in calls if not (c[0] == "session.py" and c[1] in inside)]
     assert not stray, f"localCheckpoint outside session.materialize: {stray}"
     assert len(calls) == 1, calls
+
+
+# Sums that keep a per-row decimal cast of a double, as (module, enclosing
+# function); CHANGES.md gives each one's reason.
+_DECIMAL_SUM_ALLOWLIST = {
+    # the image is multiplied by a BIGINT duration per row, a product
+    # that overflows a BIGINT image sum
+    ("queries.py", "q_events_twap"),
+}
+
+
+def test_decimal_images_only_through_exact():
+    """Every exact decimal image of a double is built by
+    ``operators/exact.py``: inside an ``F.sum(`` or ``aggregate(`` call
+    anywhere else in the package there is no ``.cast("decimal(p,s)")``
+    with s > 0, no ``round(...).cast(<decimal>)``, and no SQL text that
+    sums a ``CAST(... AS DECIMAL(p, s))`` with s > 0."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import cascading_hive_spark
+
+    root = Path(cascading_hive_spark.__file__).parent
+    dec = re.compile(r"decimal\(\s*\d+\s*,\s*(\d+|\{\})\s*\)", re.I)
+    sql_sum = re.compile(r"\b(sum|aggregate)\s*\(.*\bAS\s+DECIMAL\(\s*\d+\s*,\s*[1-9]", re.I | re.S)
+
+    def text(node) -> str | None:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(text(v) or "{}" for v in node.values)
+        return None
+
+    def decimal_scale(node) -> bool:
+        m = dec.search(text(node) or "")
+        return bool(m) and m.group(1) != "0"
+
+    def offends(call: ast.Call) -> bool:
+        for node in ast.walk(call):
+            if not isinstance(node, ast.Call) or getattr(node.func, "attr", None) != "cast":
+                continue
+            arg = node.args[0] if node.args else None
+            rounded = getattr(getattr(node.func.value, "func", None), "attr", None) == "round"
+            if decimal_scale(arg) or (rounded and (isinstance(arg, ast.Name) or dec.search(text(arg) or ""))):
+                return True
+        return False
+
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/exact.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        fns = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            bad = (name in ("sum", "aggregate") and offends(node)) or (
+                name in ("expr", "selectExpr")
+                and any(sql_sum.search(text(a) or "") for a in node.args)
+            )
+            if bad:
+                inner = [f for f in fns if f.lineno <= node.lineno <= f.end_lineno]
+                fn = max(inner, key=lambda f: f.lineno).name if inner else "<module>"
+                found.append((rel, fn, node.lineno))
+    stray = sorted({f for f in found if f[:2] not in _DECIMAL_SUM_ALLOWLIST})
+    assert not stray, f"decimal image sums outside operators/exact.py: {stray}"
+    assert {f[:2] for f in found} == _DECIMAL_SUM_ALLOWLIST, found

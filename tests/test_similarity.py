@@ -4,6 +4,7 @@ graded on recall against it."""
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -588,12 +589,11 @@ def test_ivf_build_from_kmeans_roundtrip(spark, emb, tmp_path):
 
 
 def test_cell_distances_fold_matches_exploded_image(spark, sf_dir):
-    """The E-step's array-fold d2 must equal the exploded
-    join-on-dim decimal image BIT FOR BIT — not merely produce the
-    same argmin. Pins the Spark decimal-add precision trap: at
-    (38,9)+(38,9) Spark silently reduces the scale to 8, which keeps
-    assignments stable but shifts raw distances (caught by the
-    inertia oracle in r10)."""
+    """The E-step's array-fold d2 (the BIGINT unscaled image at scale
+    9) must equal the exploded join-on-dim decimal image sum BIT FOR
+    BIT — not merely produce the same argmin (a fold that dropped a
+    digit of scale kept assignments stable but shifted raw distances,
+    caught by the inertia oracle in r10)."""
     from cascading_hive_spark.operators.similarity import (
         cell_distances,
         kmeans_fit,
@@ -622,7 +622,7 @@ def test_cell_distances_fold_matches_exploded_image(spark, sf_dir):
     }
     assert set(fold) == set(exploded)
     for k_ in fold:
-        assert fold[k_] == exploded[k_], (k_, fold[k_], exploded[k_])
+        assert Decimal(fold[k_]).scaleb(-9) == exploded[k_], (k_, fold[k_], exploded[k_])
 
 
 def test_covariance_and_pca_match_numpy(spark):
