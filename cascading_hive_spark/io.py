@@ -310,19 +310,21 @@ def compact_files(
     """Small-file compaction: rewrite a parquet location into
     ceil(total_bytes / target) files — the maintenance pass behind
     every long-lived ingest location (a 10k-tiny-file partition read
-    pays per-file open cost; see the catalog10k smoke). Writes to
-    ``out_path`` (never in place — compose with catalog.publish for
-    an atomic location swap) and returns the output file count.
-    Row-group-major rewrite: repartition is a round-robin shuffle of
-    the data ONCE; sort order inside files is not preserved (run
-    zorder_write instead when layout matters)."""
+    pays per-file open cost). Writes to ``out_path`` (never in place —
+    compose with catalog.publish for an atomic location swap) and
+    returns the output file count.
+
+    One read of ``path``: its file index, listed when the read resolved
+    the schema, gives the byte total with no scan (the index's own
+    ``sizeInBytes``, not the plan statistic, which Spark multiplies by
+    ``spark.sql.sources.fileCompressionFactor``), and the same DataFrame
+    is rewritten. Round-robin repartition shuffles the data ONCE; sort
+    order inside files is not preserved (run zorder_write instead when
+    layout matters)."""
     import math
 
-    stats = file_stats(spark, path).agg(
-        F.sum("file_bytes").alias("_b")
-    ).first()
-    total = int(stats["_b"] or 0)
-    n_out = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
+    total = df._jdf.queryExecution().optimizedPlan().relation().location().sizeInBytes()
+    n_out = max(1, math.ceil(total / target_file_bytes))
     df.repartition(n_out).write.mode("overwrite").parquet(out_path)
     return n_out

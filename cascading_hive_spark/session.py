@@ -14,6 +14,9 @@ local[N] now and a 1000-executor cluster later:
 - whole-stage codegen cache sized to the working set of a session's
   queries, so a repeated query compiles nothing (ARCHITECTURE.md,
   "Session-level reuse").
+- Python workers import this package from its parent directory
+  (``spark.executorEnv.PYTHONPATH``), so a driver that found it only
+  through ``sys.path`` still runs its UDFs.
 """
 
 from __future__ import annotations
@@ -21,6 +24,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+# the directory Python workers import ``cascading_hive_spark`` from
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_session(
@@ -67,7 +74,10 @@ def get_session(
     )
     if hive_support:
         builder = builder.enableHiveSupport()
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_PACKAGE_PARENT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

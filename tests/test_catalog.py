@@ -163,8 +163,8 @@ def test_publish_partition_rejects_quoted_values(spark, sf_dir, tmp_path):
 
 def test_publish_partition_special_chars_republish(spark, sf_dir, tmp_path):
     """Partition values Hive URL-escapes in partition paths (':')
-    must round-trip through the SHOW PARTITIONS membership check: the
-    second publish of the same spec must SET LOCATION, not fail in
+    must round-trip through the catalog's membership test: the second
+    publish of the same spec must repoint the partition, not fail in
     ADD PARTITION (ADVICE r2)."""
     C.drop_table(spark, "t_esc_pub")
     region = load_table(spark, sf_dir, "region").withColumn("side", F.lit("a:b"))
@@ -202,21 +202,21 @@ def test_overwrite_partitions_dynamic(spark, sf_dir):
 def test_partition_metadata_filter_pushdown(spark, sf_dir):
     """VERDICT r10 #4 (CascadingHCatUtil.java:75-95 parity): equality
     filters push INTO the catalog as a partial partition spec
-    (SHOW PARTITIONS ... PARTITION(...) == listPartitionNames-with-
-    spec), so non-matching specs are never materialized; residual
-    grammar filters the spec DataFrame before collect, so the Python
-    driver only ever receives matching specs."""
+    (``listPartitions(db, table, Some(spec))``), so non-matching specs
+    are never materialized; any other grammar goes to the catalog as a
+    predicate (``listPartitionsByFilter``), so the Python driver only
+    ever receives matching specs."""
     from cascading_hive_spark.catalog import _equality_partial_spec
 
-    # -- parser: what pushes and what falls back
+    # -- parser: what pushes as a spec and what goes as a predicate
     assert _equality_partial_spec("ds = '20120401'", {"ds"}) == {"ds": "20120401"}
-    # unquoted NUMERIC equality is NOT pushed (ADVICE r11): it falls
-    # back to the expression path so 'ds = 401' coerces numerically,
+    # unquoted NUMERIC equality is NOT pushed (ADVICE r11): it takes
+    # the predicate path so 'ds = 401' coerces numerically,
     # consistent with 'ds <= 401' — a string-spec push would miss a
     # '0401' partition the numeric semantics match
     assert _equality_partial_spec("ds=20120401", {"ds"}) is None
-    # unquoted non-numeric barewords still push (the expression
-    # fallback would parse 'us' as a column reference)
+    # unquoted non-numeric barewords still push (the predicate path
+    # would parse 'us' as a column reference)
     assert _equality_partial_spec("region = us", {"region"}) == {"region": "us"}
     assert _equality_partial_spec(
         'ds = \'2012\' and region = "us"', {"ds", "region"}
@@ -243,16 +243,16 @@ def test_partition_metadata_filter_pushdown(spark, sf_dir):
         assert len(years) >= 2
         got = C.partitions(spark, "t_meta_push", filter=f"o_year = '{years[0]}'")
         assert got == [{"o_year": years[0]}]
-        # the catalog-level command itself returns ONLY the matching spec
+        # the SQL form of the same partial-spec match agrees
         raw = spark.sql(
             f"SHOW PARTITIONS t_meta_push PARTITION (`o_year` = '{years[0]}')"
         ).collect()
         assert len(raw) == 1, raw
         # unquoted numeric style ("ds=20120401") resolves via the
-        # expression fallback (numeric coercion), same result here
+        # predicate path (numeric coercion), same result here
         got2 = C.partitions(spark, "t_meta_push", filter=f"o_year = {years[0]}")
         assert got2 == got
-        # residual grammar still honored (falls back to spec-DF pruning)
+        # range grammar goes to the catalog as a predicate
         got3 = C.partitions(spark, "t_meta_push", filter=f"o_year <= '{years[0]}'")
         assert {p["o_year"] for p in got3} == {years[0]}
     finally:
@@ -262,11 +262,11 @@ def test_partition_metadata_filter_pushdown(spark, sf_dir):
 def test_pushed_equality_agrees_with_expression_fallback(spark):
     """The coercion contract made executable (ADVICE r11): a QUOTED
     equality filter must return identical specs whether it takes the
-    metastore-pushed path (``SHOW PARTITIONS .. PARTITION``) or the
-    spec-DataFrame expression fallback — across URL-escaped chars,
-    spaces, '+' (the URLDecoder trap), '%', and numeric-looking
-    strings with leading zeros (where only exact STRING compare is
-    correct). The fallback is forced by appending a no-op OR clause,
+    pushed partial-spec path or the ``listPartitionsByFilter``
+    predicate path — across URL-escaped chars, spaces, '+' (the
+    URLDecoder trap), '%', and numeric-looking strings with leading
+    zeros (where only exact STRING compare is correct). The predicate
+    path is forced by appending a no-op OR clause,
     which knocks the filter out of the pushable grammar without
     changing its meaning."""
     vals = ["0401", "401", "us west", "a:b", "A+B", "100%", "x=y"]
@@ -300,3 +300,88 @@ def test_pushed_equality_agrees_with_expression_fallback(spark):
         assert got == {"401", "0401"}, got
     finally:
         C.drop_table(spark, "t_push_num")
+
+
+# --- metadata without Spark jobs ---------------------------------------
+#
+# Listing partitions reads catalog metadata only. PySpark's
+# ``spark.catalog.listColumns`` and a collected spec DataFrame each run
+# Spark jobs for the same answer, so these tests count the jobs Spark
+# ran under the call's job group.
+
+_RAW = ["0401", "401", "us west", "a:b", "A+B", "100%", "x=y"]
+
+
+@pytest.fixture(scope="module")
+def raw_table(spark):
+    C.drop_table(spark, "t_raw_specs")
+    df = spark.createDataFrame(
+        [(i, v, i % 2) for i, v in enumerate(_RAW)], "id INT, p STRING, q INT"
+    )
+    C.create_table(spark, "t_raw_specs", df, partition_by=["p", "q"])
+    yield "t_raw_specs"
+    C.drop_table(spark, "t_raw_specs")
+
+
+_EVERY = {(v, i % 2) for i, v in enumerate(_RAW)}
+
+
+@pytest.mark.parametrize(
+    "filter_, want",
+    [
+        (None, _EVERY),
+        ("", _EVERY),
+        ("p = 'A+B'", {("A+B", 0)}),  # pushed as a partial spec
+        ("q >= 1", {(v, q) for v, q in _EVERY if q >= 1}),  # range
+        ("p like 'A+%' or p = 'x=y'", {("A+B", 0), ("x=y", 0)}),  # LIKE / OR
+        ("p = '401' and q >= 1", {("401", 1)}),  # equality + range, two columns
+    ],
+)
+def test_partition_listing_runs_no_job(spark, status, raw_table, filter_, want):
+    got = status.run(lambda: C.partitions(spark, raw_table, filter_))
+    assert {(x["p"], int(x["q"])) for x in got.value} == want
+    assert got.jobs == [], got.jobs
+
+
+@pytest.mark.parametrize(
+    "filter_, want",
+    [
+        ("p like 'A+%'", "A+B"),
+        ("p like '1%'", "100%"),
+        ("p like '% %'", "us west"),
+        ("p like '%:%'", "a:b"),
+        ("p like '%=%'", "x=y"),
+    ],
+)
+def test_predicate_path_returns_raw_values(spark, raw_table, filter_, want):
+    """Values with characters Hive escapes in partition paths come back
+    as stored from the predicate path too, not path-escaped."""
+    assert [x["p"] for x in C.partitions(spark, raw_table, filter_)] == [want]
+
+
+def test_data_column_filter_raises(spark, raw_table):
+    with pytest.raises(ValueError, match=r"\['id'\]"):
+        C.partitions(spark, raw_table, "id = 1 and q = 0")
+
+
+def test_publish_partition_runs_only_its_write_jobs(spark, status, tmp_path):
+    C.drop_table(spark, "t_pub_jobs")
+    df = spark.createDataFrame([(i, str(i % 2)) for i in range(6)], "id INT, side STRING")
+    C.create_table(spark, "t_pub_jobs", df, partition_by=["side"])
+    try:
+        repl = df.filter("side = '0'").drop("side")
+        write = status.run(
+            lambda: repl.write.format("parquet").mode("overwrite").save(str(tmp_path / "w"))
+        )
+        assert write.jobs
+        for side, path in (("0", "s0v2"), ("7", "s7v1"), ("7", "s7v2")):
+            pub = status.run(
+                lambda: C.publish_partition(
+                    spark, repl, "t_pub_jobs", {"side": side}, str(tmp_path / path)
+                )
+            )
+            assert len(pub.jobs) == len(write.jobs), (side, path, pub.jobs)
+            assert spark.table("t_pub_jobs").filter(F.col("side") == side).count() == 3
+        assert [p["side"] for p in C.partitions(spark, "t_pub_jobs")] == ["0", "1", "7"]
+    finally:
+        C.drop_table(spark, "t_pub_jobs")

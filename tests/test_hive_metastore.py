@@ -103,19 +103,19 @@ SCRIPT = textwrap.dedent(
     # full filter grammar against metastore partitions
     ps = C.partitions(spark, "hive_nat_part", filter="reg = '0' or reg like '7%'")
     assert {p["reg"] for p in ps} == {"0", "7"}, ps
-    # VERDICT r11 #4: with a Hive catalog, non-equality grammar is
-    # evaluated METASTORE-SIDE via listPartitionsByFilter — the
-    # internal path must return the filtered specs itself (not None),
-    # so C.partitions never enumerates non-matching specs into Python
-    ms = C._metastore_partitions_by_filter(
-        spark, "hive_nat_part", "reg like '7%'", ["reg"])
+    # with a Hive catalog, non-equality grammar is evaluated
+    # METASTORE-SIDE via listPartitionsByFilter, so C.partitions never
+    # enumerates non-matching specs into Python
+    ms = C.partitions(spark, "hive_nat_part", "reg like '7%'")
     assert ms == [{"reg": "7"}], ms
-    ms2 = C._metastore_partitions_by_filter(
-        spark, "hive_nat_part", "reg >= '1'", ["reg"])
-    assert ms2 is not None and {p["reg"] for p in ms2} == {"1", "7"}, ms2
+    ms2 = C.partitions(spark, "hive_nat_part", "reg >= '1'")
+    assert {p["reg"] for p in ms2} == {"1", "7"}, ms2
     # a filter touching a DATA column cannot be metastore-evaluated
-    assert C._metastore_partitions_by_filter(
-        spark, "hive_nat_part", "n_nationkey = 1", ["reg"]) is None
+    try:
+        C.partitions(spark, "hive_nat_part", "n_nationkey = 1")
+        raise AssertionError("data-column filter listed partitions")
+    except ValueError as e:
+        assert "n_nationkey" in str(e), e
 
     # MULTI-COLUMN partition specs through the same metastore-side
     # path: spec decode must follow partition-column order, and mixed
@@ -124,19 +124,17 @@ SCRIPT = textwrap.dedent(
     part2 = nation.withColumn("reg", (nation.n_regionkey % 2).cast("string")) \\
                   .withColumn("par", (nation.n_nationkey % 3).cast("string"))
     C.create_table(spark, "hive_nat_part2", part2, partition_by=["reg", "par"])
-    ms3 = C._metastore_partitions_by_filter(
-        spark, "hive_nat_part2", "reg = '1' and par >= '1'", ["reg", "par"])
-    assert ms3 is not None and sorted((p["reg"], p["par"]) for p in ms3) == \\
-        [("1", "1"), ("1", "2")], ms3
-    ms4 = C._metastore_partitions_by_filter(
-        spark, "hive_nat_part2", "par like '2%' or reg = '0'", ["reg", "par"])
-    assert ms4 is not None and {(p["reg"], p["par"]) for p in ms4} == \\
+    ms3 = C.partitions(spark, "hive_nat_part2", "reg = '1' and par >= '1'")
+    assert sorted((p["reg"], p["par"]) for p in ms3) == [("1", "1"), ("1", "2")], ms3
+    ms4 = C.partitions(spark, "hive_nat_part2", "par like '2%' or reg = '0'")
+    assert {(p["reg"], p["par"]) for p in ms4} == \\
         {("0", "0"), ("0", "1"), ("0", "2"), ("1", "2")}, ms4
-    # the public API takes the same path on a Hive session and agrees
-    # with the fully-enumerated answer
-    ps2 = C.partitions(spark, "hive_nat_part2", filter="par like '2%' or reg = '0'")
-    assert sorted((p["reg"], p["par"]) for p in ps2) == \\
-        sorted((p["reg"], p["par"]) for p in ms4), ps2
+    # and agrees with the full listing filtered here
+    allp2 = C.partitions(spark, "hive_nat_part2")
+    assert ms4 == [p for p in allp2 if p["par"].startswith("2") or p["reg"] == "0"], allp2
+    # the pushed partial spec goes to the metastore too
+    ms5 = C.partitions(spark, "hive_nat_part2", "par = '2'")
+    assert [(p["reg"], p["par"]) for p in ms5] == [("0", "2"), ("1", "2")], ms5
     print("HIVE_METASTORE_OK")
     """
 )

@@ -301,6 +301,40 @@ def test_lineage_cuts_only_in_materialize():
     assert len(calls) == 1, calls
 
 
+def test_no_per_partition_metadata_jobs():
+    """Metadata comes from the catalog and the file index, never from a
+    Spark job. PySpark's ``spark.catalog.list…(`` calls collect a local
+    Dataset through ``toLocalIterator()``, one job per partition of it,
+    so neither may appear in the package."""
+    import ast
+    from pathlib import Path
+
+    import cascading_hive_spark
+
+    root = Path(cascading_hive_spark.__file__).parent
+
+    def offends(call: ast.Call) -> bool:
+        f = call.func
+        if not isinstance(f, ast.Attribute):
+            return False
+        if f.attr == "toLocalIterator":
+            return True
+        owner = f.value
+        return (
+            f.attr.startswith("list")
+            and isinstance(owner, ast.Attribute)
+            and owner.attr == "catalog"
+        )
+
+    found = [
+        (path.relative_to(root).as_posix(), node.lineno, ast.unparse(node.func))
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call) and offends(node)
+    ]
+    assert not found, f"metadata calls that run one Spark job per partition: {found}"
+
+
 # Sums that keep a per-row decimal cast of a double, as (module, enclosing
 # function); CHANGES.md gives each one's reason.
 _DECIMAL_SUM_ALLOWLIST = {

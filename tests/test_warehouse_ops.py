@@ -370,9 +370,13 @@ def test_cdc_apply_ambiguous_ties_are_deterministic(spark):
     assert len(k1) == 1 and k1[0] in {"payload_a", "payload_b", "payload_c"}
 
 
-def test_compact_files_shrinks_file_count_preserving_rows(spark, tmp_path):
-    """50 tiny files -> a handful sized by target bytes; content
-    identical; file_stats sees the layout before and after."""
+def test_compact_files_shrinks_file_count_preserving_rows(spark, status, tmp_path):
+    """50 tiny files -> ceil(bytes / target) files; content identical;
+    file_stats sees the layout before and after. The byte total comes
+    from the read's file index, not a scan: at most three jobs (schema
+    inference, the shuffle map and the write)."""
+    import math
+
     from pyspark.sql import functions as F
 
     from cascading_hive_spark.io import compact_files, file_stats
@@ -384,7 +388,11 @@ def test_compact_files_shrinks_file_count_preserving_rows(spark, tmp_path):
     assert n_before == 50
     total_bytes = before.agg(F.sum("file_bytes")).first()[0]
     dst = str(tmp_path / "compacted")
-    n_out = compact_files(spark, src, dst, target_file_bytes=total_bytes // 4)
+    target = total_bytes // 4
+    run = status.run(lambda: compact_files(spark, src, dst, target_file_bytes=target))
+    n_out = run.value
+    assert n_out == math.ceil(total_bytes / target)
+    assert len(run.jobs) <= 3, run.jobs
     after = file_stats(spark, dst)
     assert after.count() == n_out <= 5
     a = spark.read.parquet(src).orderBy("id").collect()
